@@ -47,7 +47,7 @@ def entry(spark: SparkSession) -> DataFrame:
     broadcast-frontier below 1M vertices; above it, pure-JVM join-agg for
     short fixed-k0 runs and the csr scale mode for converged runs, whose
     one-time layout compile amortizes — rationale in
-    pagerank.resolve_auto_kernel, BENCH/sweep.csv, converged_ab_4M.json);
+    pagerank.resolve_auto_kernel, BENCH/sweep.csv, BENCH/converged_ab_4M.json);
     at this graph size that resolves to csr-blocks, with join-agg as the
     cross-check kernel (1e-12 differential, tests/test_pagerank_csr.py)."""
     vertices, edges = _graph(spark, SF0001)

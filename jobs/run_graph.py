@@ -67,7 +67,7 @@ def main(argv=None) -> int:
 
     cm = None
     if args.checkpoint and args.algo in ("cc", "lpa"):
-        cm = CheckpointManager(spark, args.checkpoint, args.run_id, id_col="entity")
+        cm = CheckpointManager(spark, args.checkpoint, args.run_id)
 
     if args.algo == "cc":
         from pagerank_optimization_spark.operators.components import connected_components

@@ -12,23 +12,22 @@ superstep lands durably:
                                             edges_processed, wall_ms,
                                             dangling_mass, n_partitions)
 
+Every caller saves a ``(key, value)`` frame — PageRank ``(id, pr)`` or
+``(vid, pr)``, CC/LPA ``(entity, label)`` — and the lineage ``min_id`` /
+``max_id`` are taken over its FIRST column, so the manager needs no key
+setting and works for every kernel's key space.
+
 Write ordering is the commit protocol: ranks first, lineage second, the
 metrics row LAST — a superstep is complete iff its metrics row exists, so
 a kill between writes can never yield a half-trusted superstep. ``resume``
 finds the max complete superstep and restarts after it; the resumed run is
 float64-bitwise identical to an uninterrupted one (parquet round-trips
-float64 exactly).
-
-Tables are Parquet behind a format knob: on a cluster with Iceberg jars the
-same layout becomes Iceberg tables by swapping ``table_format`` — the
-sandbox has no Iceberg runtime (SURVEY.md §7), so "iceberg" raises with
-instructions rather than silently degrading.
+float64 exactly). All three tables are Parquet.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import time
 from typing import Any
 
@@ -37,29 +36,10 @@ from pyspark.sql import functions as F
 
 
 class CheckpointManager:
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        run_id: str,
-        *,
-        id_col: str = "entity",
-        table_format: str = "parquet",
-        lineage: bool = True,
-    ) -> None:
-        if table_format == "iceberg":
-            raise NotImplementedError(
-                "Iceberg runtime jars are not on this classpath; add "
-                "iceberg-spark-runtime and set spark.sql.catalog.* configs, "
-                "then this layout maps 1:1 onto Iceberg tables."
-            )
-        if table_format != "parquet":
-            raise ValueError(f"unknown table_format {table_format!r}")
+    def __init__(self, spark: SparkSession, root: str, run_id: str) -> None:
         self.spark = spark
         self.root = root.rstrip("/")
         self.run_id = run_id
-        self.id_col = id_col
-        self.lineage = lineage
         self.base = f"{self.root}/{run_id}"
 
     # -- paths --------------------------------------------------------------
@@ -75,19 +55,20 @@ class CheckpointManager:
         return f"{self.base}/lineage"
 
     # -- write side ---------------------------------------------------------
-    def save(self, superstep: int, ranks: DataFrame, metrics_row: dict[str, Any]) -> None:
-        ranks.write.mode("overwrite").parquet(self._ranks_path(superstep))
-        if self.lineage:
-            lin = (
-                ranks.groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(
-                    F.count("*").alias("rows"),
-                    F.min(self.id_col).cast("string").alias("min_id"),
-                    F.max(self.id_col).cast("string").alias("max_id"),
-                )
-                .withColumn("superstep", F.lit(superstep))
+    def save(self, superstep: int, frame: DataFrame, metrics_row: dict[str, Any]) -> None:
+        """Commit the ``(key, value)`` state after ``superstep``."""
+        key = frame.columns[0]
+        frame.write.mode("overwrite").parquet(self._ranks_path(superstep))
+        lin = (
+            frame.groupBy(F.spark_partition_id().alias("partition_id"))
+            .agg(
+                F.count("*").alias("rows"),
+                F.min(key).cast("string").alias("min_id"),
+                F.max(key).cast("string").alias("max_id"),
             )
-            lin.write.mode("append").parquet(self._lineage_path)
+            .withColumn("superstep", F.lit(superstep))
+        )
+        lin.write.mode("append").parquet(self._lineage_path)
         row = dict(metrics_row)
         row.setdefault("superstep", superstep)
         row["run_id"] = self.run_id

@@ -8,19 +8,28 @@ implement the full algorithm: damping 0.85, dangling-mass redistribution,
 L1-delta convergence (≤1e-6), float64 throughout (the reference's float32
 is why its own differential bar is only 1e-4, verify_op.c:11).
 
-Two kernels, differential-tested against each other (mirroring the
-reference's REF/TST macro-dispatch harness, verify_op.c:196-239):
+ONE superstep loop (``_drive``) runs three kernels, differential-tested
+against each other (mirroring the reference's REF/TST macro-dispatch
+harness, verify_op.c:196-239):
 
-- ``join-agg``  — edges ⋈ ranks ON src, then groupBy(dst).sum. Pure
-  DataFrame ops: Catalyst/AQE pick the physical join, partial+final hash
-  aggregation subsumes the OpenMP array reduction
+- ``join-agg`` (``_JoinAgg``, here) — edges ⋈ ranks ON src, then
+  groupBy(dst).sum. Pure DataFrame ops: Catalyst picks the physical join,
+  partial+final hash aggregation subsumes the OpenMP array reduction
   (tuned_variant_openmp.c:75-77). Edges are pre-repartitioned by the join
   key and cached, so per-superstep only the |V|-sized rank frontier
   shuffles — the big relation stays put (exchange reuse).
+- csr broadcast-frontier and csr scale (``kernel="csr-blocks"``) —
+  per-bucket CSR blocks (the tuned_variant_csr.c:179-229 counting-sort
+  layout rebuilt as numpy inside Arrow). See operators.pagerank_csr.
 
-- ``csr-blocks`` — per-bucket CSR blocks (the tuned_variant_csr.c:179-229
-  counting-sort layout rebuilt as numpy inside Arrow) cogrouped with the
-  bucketed rank vector. See operators.pagerank_csr.
+A kernel owns only its physical superstep: ``init(ranks) -> state``,
+``step(state, dm) -> (state, l1_delta, next_dm)`` and
+``to_frame(state) -> (key, pr)``, over its own key space (the entity id
+for join-agg, the dense vid for csr). The loop owns everything else, once:
+resume and the bitwise restore of the loop-carried dangling mass, the
+x0/reset start vector (normalized by ``_normalized`` in the kernel's key
+space), the metrics row, the checkpoint save, the convergence test and
+releasing per-call state.
 
 Superstep lifecycle (lineage hygiene): each iterate is localCheckpoint'ed
 (or durably checkpointed via a CheckpointManager) — the DataFrame analog of
@@ -31,7 +40,6 @@ otherwise linearly-growing plan.
 from __future__ import annotations
 
 import time
-from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any, Literal
 
@@ -51,193 +59,118 @@ class PageRankResult:
     metrics: list[dict[str, Any]] = field(default_factory=list)
 
 
-def _iterate(
-    vertices: DataFrame,
-    id_col: str,
-    step_fn: Callable[[DataFrame], DataFrame],
-    dangling: DataFrame,
-    n: int,
-    nnz: int,
+def _normalized(kern, weights: DataFrame, col: str, what: str) -> DataFrame:
+    """(id_col, col ≥ 0) → (key, col) in the kernel's key space, restricted
+    to graph vertices (weight on unknown ids drops) and scaled to sum 1 —
+    the x0 and reset contract of every kernel."""
+    weights = kern.keyed(weights, col)
+    total = weights.agg(F.sum(col)).collect()[0][0]
+    if not total or total <= 0:
+        raise ValueError(f"pagerank: {what}")
+    return weights.withColumn(col, F.col(col) / F.lit(float(total)))
+
+
+def _teleport(kern, reset: DataFrame) -> DataFrame:
+    """Personalized teleport distribution (key, reset_w), summing to 1."""
+    return _normalized(
+        kern,
+        reset,
+        "weight",
+        "reset distribution has no positive weight on any graph vertex "
+        "(check ids and weights)",
+    ).withColumnRenamed("weight", "reset_w")
+
+
+def _start_vector(kern, x0: DataFrame | None) -> DataFrame | None:
+    """Fresh-run x0 in the kernel's key space, densified over EVERY vertex
+    (the dangling-mass carry assumes the rank vector covers the vertex
+    set): a warm ``x0`` renormalized over the current graph, else the
+    personalized teleport distribution, else None for uniform 1/n."""
+    if x0 is not None:
+        # warm start (incremental recompute after a graph delta): the fixed
+        # point of the new graph is near the old one, so seeding with the
+        # previous ranks cuts iterations-to-tol (tested: an exact
+        # fixed-point seed converges in 1 superstep)
+        start = _normalized(kern, x0, "pr", "x0 has no positive mass on any graph vertex")
+    elif kern.reset is not None:
+        start = kern.reset.withColumnRenamed("reset_w", "pr")
+    else:
+        return None
+    return kern.vertices.join(start, kern.key, "left").select(
+        kern.key, F.coalesce(F.col("pr"), F.lit(0.0)).alias("pr")
+    )
+
+
+def _drive(
+    kern,
     *,
-    damping: float,
     tol: float,
     max_iter: int,
     fixed_iters: int | None,
-    partitions: int,
     checkpointer=None,
-    reset: DataFrame | None = None,
     x0: DataFrame | None = None,
 ) -> PageRankResult:
-    """The shared superstep loop. ``step_fn(ranks) -> contribs`` computes the
-    gather-scatter SpMV (kernel-specific); everything else — dangling mass,
-    damping, delta, checkpoint — is kernel-independent and identical to the
-    numpy oracle's math.
+    """The superstep loop of every kernel. A ``checkpointer`` resume takes
+    precedence over ``x0`` (resume is bitwise; warm start is a fresh run
+    from a better x0). The dangling mass of the first superstep is |D|/n
+    for the uniform x0 (no job), the value the interrupted run recorded on
+    resume (recomputing the sum could differ in the last ulp — sum order),
+    else one scalar semi-join agg over the start vector. Every later
+    superstep's mass comes out of the kernel's step, alongside the delta."""
+    from pagerank_optimization_spark.session import iterative_conf
 
-    ``reset``: optional personalized teleport distribution
-    (id_col, reset_w) — MUST already be normalized to sum 1. Teleport and
-    dangling mass then land on reset_w instead of 1/n (topic-sensitive /
-    personalized PageRank); x0 = reset unless a warm ``x0`` is given.
-
-    ``x0``: optional warm-start vector (id_col, pr ≥ 0) — densified over
-    the CURRENT vertex set (new vertices start at 0, weights on departed
-    ids drop) and renormalized to sum 1. A checkpointer resume takes
-    precedence (resume is bitwise; warm start is a fresh run from a
-    better x0)."""
-    def canonical(df: DataFrame) -> DataFrame:
-        # canonical physical layout for the rank vector: hash-partitioned on
-        # the id, sorted within partitions. Makes the FP summation order of
-        # every downstream agg reproducible, so a resumed run is BITWISE
-        # equal to an uninterrupted one (not just allclose) — float64 sums
-        # are order-sensitive in the last ulp.
-        return df.repartition(partitions, id_col).sortWithinPartitions(id_col)
-
-    start_iter = 0
-    ranks = None
-    if checkpointer is not None:
-        resumed = checkpointer.resume()
-        if resumed is not None:
-            start_iter, ranks = resumed
-    fresh = ranks is None
-    if fresh:
-        if x0 is not None:
-            # warm start (incremental recompute after a graph delta): the
-            # fixed point of the new graph is near the old one, so seeding
-            # with the previous ranks cuts iterations-to-tol (tested:
-            # exact-fixed-point seed converges in 1 superstep)
-            raw = vertices.join(
-                x0.select(id_col, F.col("pr").alias("_x0")), id_col, "left"
-            ).select(id_col, F.coalesce(F.col("_x0"), F.lit(0.0)).alias("pr"))
-            total = raw.agg(F.sum("pr")).collect()[0][0]
-            if not total or total <= 0:
-                raise ValueError(
-                    "pagerank: x0 has no positive mass on any graph vertex"
-                )
-            ranks = raw.select(
-                id_col, (F.col("pr") / F.lit(float(total))).alias("pr")
-            )
-        elif reset is not None:
-            # personalized: x0 = the teleport distribution, expanded over the
-            # FULL vertex set (the loop's stats join assumes the rank vector
-            # covers every vertex — a subset x0 silently corrupts the
-            # dangling-mass carry)
-            ranks = vertices.join(reset, id_col, "left").select(
-                id_col, F.coalesce(F.col("reset_w"), F.lit(0.0)).alias("pr")
-            )
-        else:
-            # x0 = 1/m uniform (pagerank.c:238; helper.c:79-84)
-            ranks = vertices.withColumn("pr", F.lit(1.0 / n))
-    ranks = canonical(ranks).localCheckpoint(eager=True)
-
-    # dangling mass for the FIRST superstep: uniform x0 gives |D|/n exactly;
-    # on resume, one |D|-row scalar agg. Every later superstep folds the
-    # next dangling mass into the same single action as the delta — ONE
-    # driver-side scalar job per superstep, never a collect of the vector.
-    n_dangling = dangling.count()
-    if fresh and reset is None and x0 is None:
-        dangling_mass = n_dangling / n
-    elif fresh:
-        dangling_mass = (
-            ranks.join(dangling, id_col, "left_semi")
-            .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
-            .collect()[0][0]
-        )
-    else:
-        # prefer the bitwise-exact value recorded by the interrupted run
-        # (recomputing the sum here could differ in the last ulp — sum order)
-        saved = checkpointer.last_metrics() if checkpointer is not None else None
-        if saved is not None and saved.get("dangling_mass_next") is not None:
-            dangling_mass = float(saved["dangling_mass_next"])
-        else:
-            dangling_mass = (
-                ranks.join(dangling, id_col, "left_semi")
+    try:
+        start_iter, ranks, dm = 0, None, None
+        if checkpointer is not None:
+            resumed = checkpointer.resume()
+            if resumed is not None:
+                start_iter, ranks = resumed
+                dm = (checkpointer.last_metrics() or {}).get("dangling_mass_next")
+        if ranks is None:
+            ranks = _start_vector(kern, x0)
+            if ranks is None:
+                dm = kern.n_dangling / kern.n
+        if dm is None:
+            dm = (
+                ranks.join(kern.dangling, kern.key, "left_semi")
                 .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
                 .collect()[0][0]
             )
-    # vertex table with the dangling flag baked in (computed once): the
-    # per-superstep plan is then ONE co-partitioned join chain — no separate
-    # delta/dangling job ever touches the vector again
-    vertices_flagged = vertices.join(
-        dangling.withColumn("is_dangling", F.lit(True)), id_col, "left"
-    ).select(id_col, F.coalesce(F.col("is_dangling"), F.lit(False)).alias("is_dangling"))
-    if reset is not None:
-        vertices_flagged = vertices_flagged.join(reset, id_col, "left").select(
-            id_col, "is_dangling", F.coalesce(F.col("reset_w"), F.lit(0.0)).alias("reset_w")
-        )
-    vertices_flagged = vertices_flagged.repartition(partitions, id_col).persist()
-    vertices_flagged.count()
+        dm = float(dm)
+        state = kern.init(ranks)
 
-    k = fixed_iters if fixed_iters is not None else max_iter
-    deltas: list[float] = []
-    metrics: list[dict[str, Any]] = []
-    converged = False
-
-    from pagerank_optimization_spark.session import iterative_conf
-
-    # shuffle width aligned with the canonical layout (r6): the in-loop
-    # groupBy(dst) then lands directly on the rank vector's partitioning
-    with iterative_conf(vertices.sparkSession, shuffle_partitions=partitions):
-        for it in range(start_iter, k):
-            t0 = time.monotonic()
-            contribs = step_fn(ranks.select(id_col, "pr"))
-            if reset is not None:
-                # teleport + dangling mass land on the reset distribution
-                base_col = F.lit((1.0 - damping) + damping * dangling_mass) * F.col("reset_w")
-            else:
-                base_col = F.lit((1.0 - damping) / n + damping * dangling_mass / n)
-            # NOTE superstep plan-shape invariant: the state df (``ranks``) is
-            # referenced exactly ONCE in the update query (inside step_fn), and
-            # the delta query joins two DISTINCT checkpoints. A plan that joins
-            # the state df directly alongside an aggregate derived from it makes
-            # Spark's self-join deduplication re-expand the checkpointed lineage
-            # and per-superstep cost compounds ~2× per iteration (measured; see
-            # tests/test_iteration_scaling.py).
-            new_ranks = vertices_flagged.join(contribs, id_col, "left").select(
-                id_col,
-                (
-                    base_col
-                    + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("pr"),
-                "is_dangling",
-            )
-            # lazy checkpoint: materialized by the delta agg below — ONE Spark
-            # job per superstep instead of two
-            new_ranks = canonical(new_ranks).localCheckpoint(eager=False)
-
-            # delta + next dangling mass in one scalar job over the two most
-            # recent checkpoints (each referenced once)
-            delta, next_dm = (
-                new_ranks.join(ranks.select(id_col, F.col("pr").alias("pr_old")), id_col)
-                .agg(
-                    F.sum(F.abs(F.col("pr") - F.col("pr_old"))).alias("delta"),
-                    F.coalesce(
-                        F.sum(F.when(F.col("is_dangling"), F.col("pr")).otherwise(F.lit(0.0))),
-                        F.lit(0.0),
-                    ).alias("dm"),
-                )
-                .collect()[0]
-            )
-            deltas.append(float(delta))
-            row = {
-                "superstep": it,
-                "l1_delta": float(delta),
-                "edges_processed": int(nnz),
-                "wall_ms": (time.monotonic() - t0) * 1000.0,
-                "dangling_mass": float(dangling_mass),
-                "dangling_mass_next": float(next_dm),
-                "n_partitions": partitions,
-            }
-            metrics.append(row)
-            if checkpointer is not None:
-                checkpointer.save(it, new_ranks.select(id_col, "pr"), row)
-            ranks = new_ranks
-            dangling_mass = float(next_dm)
-            if fixed_iters is None and delta <= tol:
-                converged = True
-                break
-
-    vertices_flagged.unpersist()
+        k = fixed_iters if fixed_iters is not None else max_iter
+        deltas: list[float] = []
+        metrics: list[dict[str, Any]] = []
+        converged = False
+        # shuffle width aligned with the kernel's layout (r6): in-loop
+        # groupBys land directly on the rank vector's partitioning
+        with iterative_conf(kern.spark, shuffle_partitions=kern.partitions):
+            for it in range(start_iter, k):
+                t0 = time.monotonic()
+                state, delta, next_dm = kern.step(state, dm)
+                deltas.append(float(delta))
+                row = {
+                    "superstep": it,
+                    "l1_delta": float(delta),
+                    "edges_processed": int(kern.nnz),
+                    "wall_ms": (time.monotonic() - t0) * 1000.0,
+                    "dangling_mass": dm,
+                    "dangling_mass_next": float(next_dm),
+                    "n_partitions": kern.partitions,
+                }
+                metrics.append(row)
+                if checkpointer is not None:
+                    checkpointer.save(it, kern.to_frame(state), row)
+                dm = float(next_dm)
+                if fixed_iters is None and delta <= tol:
+                    converged = True
+                    break
+        ranks = kern.result(state)
+    finally:
+        kern.release()
     return PageRankResult(
-        ranks=ranks.select(id_col, "pr"),
+        ranks=ranks,
         iterations=len(deltas) + start_iter,
         converged=converged,
         deltas=deltas,
@@ -251,6 +184,155 @@ def _dangling_of(vertices: DataFrame, edges: DataFrame, id_col: str) -> DataFram
     return vertices.join(
         edges.select(F.col("src").alias(id_col)).distinct(), id_col, "left_anti"
     )
+
+
+class _JoinAgg:
+    """join-agg kernel in entity-id space. Setup is the one-time layout
+    decision — the Spark analog of DISTRIBUTE_DATA
+    (tuned_variant_baseline.c:247-324): co-partition edges on the join key
+    once; every superstep's join reuses this exchange and only the rank
+    frontier shuffles."""
+
+    def __init__(
+        self,
+        vertices: DataFrame,
+        edges: DataFrame,
+        *,
+        id_col: str,
+        partitions: int,
+        damping: float,
+        hub_split_degree: Literal["auto"] | None,
+        reset: DataFrame | None,
+    ) -> None:
+        from pagerank_optimization_spark.plans import partitioning
+
+        self.spark = vertices.sparkSession
+        self.key, self.damping = id_col, damping
+        self.hubs = None
+        if hub_split_degree == "auto":
+            # out-degree histogram probe: the join side is where a hub
+            # becomes one task's whole edge list (documented bound +
+            # measured evidence in plans.partitioning)
+            thr = partitioning.auto_hub_split_degree(edges)
+            if thr is not None:
+                edges, hubs = partitioning.with_src_degree_salt(edges, max_deg=thr)
+                self.hubs = hubs.persist()
+        keys = ("src", "ssalt") if self.hubs is not None else ("src",)
+        edges = edges.repartition(partitions, *keys).persist()
+        self.nnz = edges.count()
+        # scale-adaptive loop width (r6, guide §2.2): the caller's value is
+        # the cluster-sized CAP; the loop runs at what |E| needs. When the
+        # data is small, re-bucket the already-cached edge list once (a
+        # |E|-row reshuffle of cached rows) and every superstep stage drops
+        # from `partitions` tasks to the data-sized count.
+        p_eff = partitioning.effective_partitions(partitions, self.nnz)
+        if p_eff != partitions:
+            wide = edges
+            edges = wide.repartition(p_eff, *keys).persist()
+            edges.count()
+            wide.unpersist()
+            partitions = p_eff
+        self.edges, self.partitions = edges, partitions
+        # vertices co-partitioned with the canonical rank layout: the
+        # per-superstep left join (restore zero-contribution vertices, P2 of
+        # SURVEY §2.2) then never re-shuffles the vertex side
+        self.vertices = vertices.select(id_col).repartition(partitions, id_col).persist()
+        self.n = self.vertices.count()
+        if self.n == 0:
+            raise ValueError("pagerank: empty vertex set (no entities derivable from input)")
+        self.dangling = _dangling_of(self.vertices, edges, id_col).persist()
+        self.n_dangling = self.dangling.count()
+        self.reset = None
+        if reset is not None:
+            self.reset = _teleport(self, reset).repartition(partitions, id_col).persist()
+        if self.hubs is not None:
+            self._contribs = partitioning.src_salted_pagerank_step(edges, self.hubs, id_col)
+        else:
+            def contribs(ranks: DataFrame) -> DataFrame:
+                return (
+                    edges.join(ranks.withColumnRenamed(id_col, "src"), "src", "inner")
+                    .groupBy(F.col("dst").alias(id_col))
+                    .agg(F.sum(F.col("weight") * F.col("pr")).alias("contrib"))
+                )
+
+            self._contribs = contribs
+        # vertex table with the dangling flag (and teleport weight) baked in,
+        # computed once: the per-superstep plan is then ONE co-partitioned
+        # join chain — no separate delta/dangling job touches the vector
+        flagged = self.vertices.join(
+            self.dangling.withColumn("is_dangling", F.lit(True)), id_col, "left"
+        ).select(id_col, F.coalesce(F.col("is_dangling"), F.lit(False)).alias("is_dangling"))
+        if self.reset is not None:
+            flagged = flagged.join(self.reset, id_col, "left").select(
+                id_col, "is_dangling", F.coalesce(F.col("reset_w"), F.lit(0.0)).alias("reset_w")
+            )
+        self.flagged = flagged.repartition(partitions, id_col).persist()
+        self.flagged.count()
+
+    def keyed(self, frame: DataFrame, col: str) -> DataFrame:
+        return frame.select(self.key, col).join(self.vertices, self.key, "left_semi")
+
+    def _canonical(self, df: DataFrame) -> DataFrame:
+        # canonical physical layout for the rank vector: hash-partitioned on
+        # the id, sorted within partitions. Makes the FP summation order of
+        # every downstream agg reproducible, so a resumed run is BITWISE
+        # equal to an uninterrupted one (not just allclose) — float64 sums
+        # are order-sensitive in the last ulp.
+        return df.repartition(self.partitions, self.key).sortWithinPartitions(self.key)
+
+    def init(self, ranks: DataFrame | None) -> DataFrame:
+        if ranks is None:
+            # x0 = 1/m uniform (pagerank.c:238; helper.c:79-84)
+            ranks = self.vertices.withColumn("pr", F.lit(1.0 / self.n))
+        return self._canonical(ranks).localCheckpoint(eager=True)
+
+    def step(self, ranks: DataFrame, dm: float):
+        key, d, n = self.key, self.damping, self.n
+        contribs = self._contribs(ranks.select(key, "pr"))
+        if self.reset is not None:
+            # teleport + dangling mass land on the reset distribution
+            base_col = F.lit((1.0 - d) + d * dm) * F.col("reset_w")
+        else:
+            base_col = F.lit((1.0 - d) / n + d * dm / n)
+        # NOTE superstep plan-shape invariant: the state df (``ranks``) is
+        # referenced exactly ONCE in the update query (inside _contribs), and
+        # the delta query joins two DISTINCT checkpoints. A plan that joins
+        # the state df directly alongside an aggregate derived from it makes
+        # Spark's self-join deduplication re-expand the checkpointed lineage
+        # and per-superstep cost compounds ~2× per iteration (measured; see
+        # tests/test_iteration_scaling.py).
+        new_ranks = self.flagged.join(contribs, key, "left").select(
+            key,
+            (base_col + F.lit(d) * F.coalesce(F.col("contrib"), F.lit(0.0))).alias("pr"),
+            "is_dangling",
+        )
+        # lazy checkpoint: materialized by the delta agg below — ONE Spark
+        # job per superstep instead of two
+        new_ranks = self._canonical(new_ranks).localCheckpoint(eager=False)
+        # delta + next dangling mass in one scalar job over the two most
+        # recent checkpoints (each referenced once)
+        delta, next_dm = (
+            new_ranks.join(ranks.select(key, F.col("pr").alias("pr_old")), key)
+            .agg(
+                F.sum(F.abs(F.col("pr") - F.col("pr_old"))).alias("delta"),
+                F.coalesce(
+                    F.sum(F.when(F.col("is_dangling"), F.col("pr")).otherwise(F.lit(0.0))),
+                    F.lit(0.0),
+                ).alias("dm"),
+            )
+            .collect()[0]
+        )
+        return new_ranks, delta, next_dm
+
+    def to_frame(self, ranks: DataFrame) -> DataFrame:
+        return ranks.select(self.key, "pr")
+
+    result = to_frame
+
+    def release(self) -> None:
+        for df in (self.flagged, self.edges, self.dangling, self.vertices, self.hubs, self.reset):
+            if df is not None:
+                df.unpersist()
 
 
 def resolve_auto_kernel(n_vertices: int, fixed_iters: int | None = None) -> str:
@@ -271,14 +353,14 @@ def resolve_auto_kernel(n_vertices: int, fixed_iters: int | None = None) -> str:
       (0.83-0.94× at 1.1M/4M vertices, BENCH/scale_kernel_probe_*.json).
     - CONVERGED runs (``fixed_iters is None`` — iterate to tol, ~87
       supersteps at 4M): csr-blocks scale mode. Measured amortized A/B at
-      4M vertices / 14.4M edges (tools/converged_ab.py, interleaved
-      min-of-2, COLD compile cache each csr trial so the wall includes
-      the full one-time compile): csr 219.4s vs join-agg 241.9s total
-      wall (0.907×), 199.2s vs 235.6s compute (0.846×) — csr won BOTH
-      trials on both measures (BENCH/converged_ab_4M.json). The compile
-      is a fixed cost; the per-superstep win compounds with run length,
-      so the margin only grows at 10^12-turn scale where convergence
-      still takes ~80 supersteps but each superstep is minutes."""
+      4M vertices / 14.4M edges (interleaved min-of-2, COLD compile cache
+      each csr trial so the wall includes the full one-time compile): csr
+      219.4s vs join-agg 241.9s total wall (0.907×), 199.2s vs 235.6s
+      compute (0.846×) — csr won BOTH trials on both measures
+      (BENCH/converged_ab_4M.json). The compile is a fixed cost; the
+      per-superstep win compounds with run length, so the margin only
+      grows at 10^12-turn scale where convergence still takes ~80
+      supersteps but each superstep is minutes."""
     from pagerank_optimization_spark.operators.pagerank_csr import BROADCAST_ROW_LIMIT
 
     if n_vertices <= BROADCAST_ROW_LIMIT:
@@ -297,7 +379,7 @@ def pagerank(
     fixed_iters: int | None = None,
     partitions: int | None = None,
     kernel: str = "join-agg",
-    hub_split_degree: int | Literal["auto"] | None = None,
+    hub_split_degree: Literal["auto"] | None = None,
     reset: DataFrame | None = None,
     x0: DataFrame | None = None,
     checkpointer=None,
@@ -316,23 +398,21 @@ def pagerank(
     join-agg for short fixed-k0 runs, csr scale mode for converged runs —
     the one-time layout compile amortizes, BENCH/converged_ab_4M.json).
 
-    ``hub_split_degree``: degree-based edge splitting for power-law hubs
-    (join-agg kernel only). Pass "auto" to probe the OUT-degree histogram
-    once and split hub sources' edge lists over deterministic salts when
-    max outdeg exceeds both ratio·p99 and a floor — the join side is where
-    a hub becomes one task's whole partition every superstep (documented
-    bound + measurements in plans.partitioning; AQE skew-join is OFF
-    inside the loop, so this is the only in-loop skew defense). An integer
-    value selects the legacy dst-side two-phase agg split — only needed
-    for aggregations without map-side combine; the contribution sum has
-    partial+final HashAggregate and handles in-degree hubs natively.
-    The csr-blocks kernel needs no salting: a hub's edges are contiguous
-    CSR segments reduced vectorized inside evenly-sized buckets.
+    ``hub_split_degree``: "auto" or None (join-agg kernel only). "auto"
+    probes the OUT-degree histogram once and splits hub sources' edge
+    lists over deterministic salts when max outdeg exceeds both ratio·p99
+    and a floor — the join side is where a hub becomes one task's whole
+    partition every superstep (documented bound + measurements in
+    plans.partitioning; AQE skew-join is OFF inside the loop, so this is
+    the only in-loop skew defense). In-degree hubs need no split: the
+    contribution sum has partial+final HashAggregate. The csr-blocks
+    kernel needs no salting: a hub's edges are contiguous CSR segments
+    reduced vectorized inside evenly-sized buckets.
 
     ``reset``: personalized/topic-sensitive PageRank — a DataFrame
     (id_col, weight ≥ 0, any scale; normalized internally). Teleport and
     dangling mass land on this distribution instead of uniform; vertices
-    absent from it get teleport weight 0. Supported by BOTH kernels —
+    absent from it get teleport weight 0. Supported by EVERY kernel —
     the dispatch contract is feature-uniform, like the reference's macro
     dispatch (build_test_rig.sh:37-48).
 
@@ -341,17 +421,18 @@ def pagerank(
     shape ``result.ranks`` already has), densified over the current
     vertex set (new vertices 0) and renormalized. Near-fixed-point seeds
     cut iterations-to-tol by an order of magnitude on small deltas
-    (tested); supported by BOTH kernels (feature-uniform dispatch). A
-    ``checkpointer`` resume takes precedence — resume is the bitwise
-    mid-run form, warm start the cross-run form.
+    (tested); supported by every kernel. A ``checkpointer`` resume takes
+    precedence — resume is the bitwise mid-run form, warm start the
+    cross-run form.
 
     ``csr_broadcast_frontier`` (csr-blocks kernel only): None picks the
     frontier strategy by |V| (broadcast below BROADCAST_ROW_LIMIT, the
     merge-join scale mode above); True/False forces a mode — used to run
     the scale mode through the full correctness harness on small graphs.
     """
-    spark = vertices.sparkSession
-    partitions = partitions or spark.sparkContext.defaultParallelism
+    if hub_split_degree not in ("auto", None):
+        raise ValueError(f"hub_split_degree must be 'auto' or None, got {hub_split_degree!r}")
+    partitions = partitions or vertices.sparkSession.sparkContext.defaultParallelism
 
     if kernel == "auto":
         from pagerank_optimization_spark.operators.pagerank_csr import (
@@ -366,129 +447,34 @@ def pagerank(
         probe = vertices.limit(BROADCAST_ROW_LIMIT + 1).count()
         kernel = resolve_auto_kernel(probe, fixed_iters)
     if kernel == "csr-blocks":
-        from pagerank_optimization_spark.operators.pagerank_csr import pagerank_csr
+        from pagerank_optimization_spark.operators.pagerank_csr import csr_kernel
 
-        return pagerank_csr(
+        kern = csr_kernel(
             vertices,
             edges,
             id_col=id_col,
-            damping=damping,
-            tol=tol,
-            max_iter=max_iter,
-            fixed_iters=fixed_iters,
             partitions=partitions,
+            damping=damping,
             reset=reset,
-            x0=x0,
-            checkpointer=checkpointer,
             broadcast_frontier=csr_broadcast_frontier,
         )
-    if kernel != "join-agg":
-        raise ValueError(f"unknown kernel {kernel!r}")
-
-    # one-time layout decision — the Spark analog of DISTRIBUTE_DATA
-    # (tuned_variant_baseline.c:247-324): co-partition edges on the join key
-    # once; every superstep's join reuses this exchange and only the rank
-    # frontier shuffles
-    src_split_hubs = None
-    if hub_split_degree == "auto":
-        # out-degree histogram probe: the join side is where a hub
-        # becomes one task's whole edge list (documented bound + measured
-        # evidence in plans.partitioning)
-        from pagerank_optimization_spark.plans.partitioning import (
-            auto_hub_split_degree,
-            with_src_degree_salt,
-        )
-
-        hub_split_degree = None
-        thr = auto_hub_split_degree(edges)
-        if thr is not None:
-            edges, src_split_hubs = with_src_degree_salt(edges, max_deg=thr)
-            src_split_hubs = src_split_hubs.persist()
-    if hub_split_degree is not None:
-        # explicit dst-side two-phase agg split (for aggregation paths
-        # without map-side combine; the join-agg sum does not need it)
-        from pagerank_optimization_spark.plans.partitioning import with_degree_salt
-
-        edges = with_degree_salt(edges, max_deg=hub_split_degree)
-    if src_split_hubs is not None:
-        edges = edges.repartition(partitions, "src", "ssalt").persist()
-    else:
-        edges = edges.repartition(partitions, "src").persist()
-    nnz = edges.count()
-    # scale-adaptive loop width (r6, guide §2.2): the caller's value is the
-    # cluster-sized CAP; the loop runs at what |E| needs. When the cap wins
-    # (big graph) nothing changes; when the data is small, re-bucket the
-    # already-cached edge list once (a |E|-row reshuffle of cached rows)
-    # and every superstep stage drops from `partitions` tasks to the
-    # data-sized count.
-    from pagerank_optimization_spark.plans.partitioning import effective_partitions
-
-    p_eff = effective_partitions(partitions, nnz)
-    if p_eff != partitions:
-        wide = edges
-        keys = ("src", "ssalt") if src_split_hubs is not None else ("src",)
-        edges = wide.repartition(p_eff, *keys).persist()
-        edges.count()
-        wide.unpersist()
-        partitions = p_eff
-    # vertices co-partitioned with the canonical rank layout: the
-    # per-superstep left join (restore zero-contribution vertices, P2 of
-    # SURVEY §2.2) then never re-shuffles the vertex side
-    vertices = vertices.select(id_col).repartition(partitions, id_col).persist()
-    n = vertices.count()
-    if n == 0:
-        raise ValueError("pagerank: empty vertex set (no entities derivable from input)")
-    dangling = _dangling_of(vertices, edges, id_col).persist()
-
-    if reset is not None:
-        # restrict to known vertices, then normalize — teleport weight on
-        # unknown ids is dropped (renormalized over what remains)
-        reset = reset.join(vertices, id_col, "left_semi")
-        total = reset.agg(F.sum("weight")).collect()[0][0]
-        if not total or total <= 0:
-            raise ValueError(
-                "pagerank: reset distribution has no positive weight on any "
-                "graph vertex (check ids and weights)"
-            )
-        reset = reset.select(id_col, (F.col("weight") / F.lit(float(total))).alias("reset_w"))
-        reset = reset.repartition(partitions, id_col).persist()
-
-    if src_split_hubs is not None:
-        from pagerank_optimization_spark.plans.partitioning import src_salted_pagerank_step
-
-        step = src_salted_pagerank_step(edges, src_split_hubs, id_col)
-    elif hub_split_degree is not None:
-        from pagerank_optimization_spark.plans.partitioning import salted_pagerank_step
-
-        step = salted_pagerank_step(edges, id_col)
-    else:
-        def step(ranks: DataFrame) -> DataFrame:
-            return (
-                edges.join(ranks.withColumnRenamed(id_col, "src"), "src", "inner")
-                .groupBy(F.col("dst").alias(id_col))
-                .agg(F.sum(F.col("weight") * F.col("pr")).alias("contrib"))
-            )
-
-    try:
-        return _iterate(
+    elif kernel == "join-agg":
+        kern = _JoinAgg(
             vertices,
-            id_col,
-            step,
-            dangling,
-            n,
-            nnz,
-            damping=damping,
-            tol=tol,
-            max_iter=max_iter,
-            fixed_iters=fixed_iters,
+            edges,
+            id_col=id_col,
             partitions=partitions,
-            checkpointer=checkpointer,
+            damping=damping,
+            hub_split_degree=hub_split_degree,
             reset=reset,
-            x0=x0,
         )
-    finally:
-        edges.unpersist()
-        dangling.unpersist()
-        vertices.unpersist()
-        if src_split_hubs is not None:
-            src_split_hubs.unpersist()
+    else:
+        raise ValueError(f"unknown kernel {kernel!r}")
+    return _drive(
+        kern,
+        tol=tol,
+        max_iter=max_iter,
+        fixed_iters=fixed_iters,
+        checkpointer=checkpointer,
+        x0=x0,
+    )

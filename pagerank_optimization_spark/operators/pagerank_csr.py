@@ -8,7 +8,10 @@ segment (tuned_variant_csr.c:72-84), then vectorize the gather with AVX2
 segment with an 8-lane horizontal sum (tuned_variant_simd.c:244-269).
 
 The Spark-native rebuild of that layout — DESTINATION-bucketed and FUSED,
-so each superstep is ONE job with ONE routing shuffle:
+so each superstep is ONE job with at most ONE routing shuffle. This module
+holds two of the three kernels the one superstep loop
+(operators.pagerank._drive) runs: ``_BroadcastFrontier`` and ``_Scale``,
+both over the layout ``_compile`` builds once and caches:
 
 - vertex ids are dense 0..n-1, so bucket membership is pure arithmetic:
   bucket b owns vids {b, b+P, b+2P, ...} at local offset vid // P. No
@@ -73,9 +76,6 @@ Arrow batches give full-width vectorization regardless of run lengths
 
 from __future__ import annotations
 
-import time
-from typing import Any
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W
@@ -83,6 +83,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pagerank_optimization_spark.operators.graph_build import vertex_ids_counted
+from pagerank_optimization_spark.operators.pagerank import _teleport
 
 # Above this row count an id-map broadcast risks executor OOM at the
 # 10^9-vertex scale this engine targets — fall back to a shuffle join
@@ -132,11 +133,10 @@ def _bucket_size(n: int, b: int, P: int) -> int:
 
 
 def _make_arrow_kernel(n_: int, P: int, d_: float, dm: float):
-    """Per-superstep fused kernel as a cogrouped ``applyInArrow`` function
-    (shared by BOTH frontier modes since round 4): the routed frontier's
-    columns come off the exchange as Arrow buffers and the state goes back
-    as Arrow buffers — no pandas Block materialization on either side of
-    the JVM↔Python boundary (round-3 measurement: that materialization, not
+    """Scale-mode superstep as a cogrouped ``applyInArrow`` function: the
+    routed frontier's columns come off the exchange as Arrow buffers and
+    the state goes back as Arrow buffers — no pandas Block materialization
+    on either side of the JVM↔Python boundary (round-3 measurement: that materialization, not
     the shuffle, dominated the scale mode's per-superstep cost). Math is
     numpy, identical operations and reduction order as rounds ≤3 (the
     cross-kernel 1e-12 differential and bitwise-resume tests pin it)."""
@@ -403,163 +403,6 @@ def build_aux(
     )
 
 
-def _iterate_csr_fused(
-    blocks_aux: DataFrame,
-    routes: DataFrame,
-    n: int,
-    nnz: int,
-    dangling_mass0: float,
-    ranks0: DataFrame,
-    *,
-    start_iter: int,
-    damping: float,
-    tol: float,
-    max_iter: int,
-    fixed_iters: int | None,
-    partitions: int,
-    broadcast_frontier: bool,
-    checkpointer=None,
-):
-    """The fused superstep loop. Math is identical to pagerank._iterate
-    (same damping/dangling/delta formulas, verified by the cross-kernel
-    1e-12 differential) — only the physical fusion differs.
-
-    ``broadcast_frontier=True`` (n ≤ BROADCAST_ROW_LIMIT): the rank
-    vector crosses as one ``sc.broadcast`` numpy array and the superstep
-    is a single ``mapInArrow`` over the static blocks⊕aux cache — ZERO
-    shuffle exchanges, no join (see _make_arrow_map_kernel). ``False``
-    (scale mode): ranks merge-join the vid-partitioned routes and the
-    routed frontier exchanges into its dst buckets — the frontier-sized
-    shuffles a distributed PageRank fundamentally pays; never a
-    full-vector broadcast."""
-    from pagerank_optimization_spark.operators.pagerank import PageRankResult
-    from pagerank_optimization_spark.session import iterative_conf
-
-    P = partitions
-    spark = blocks_aux.sparkSession
-
-    if broadcast_frontier:
-        # the frontier fits on the driver BY MODE DEFINITION (that is what
-        # made broadcasting it safe) — hold it as a dense vid-indexed numpy
-        # array between supersteps (r6: was a pandas frame fed back through
-        # a per-superstep LocalRelation + broadcast join; now it crosses as
-        # one sc.broadcast per superstep — see _make_arrow_map_kernel). The
-        # loop-carried scalars still reduce in FIXED vid-sorted numpy order.
-        if not isinstance(ranks0, pd.DataFrame):
-            ranks0 = ranks0.toPandas()
-        pr_arr = np.zeros(int(n), dtype=np.float64)
-        pr_arr[ranks0["vid"].to_numpy(dtype=np.int64)] = ranks0["pr"].to_numpy(
-            dtype=np.float64
-        )
-        ranks = None
-    else:
-        if isinstance(ranks0, pd.DataFrame):
-            ranks0 = spark.createDataFrame(ranks0, "vid long, pr double")
-        ranks_pdf = None
-        ranks = ranks0.localCheckpoint(eager=True)
-    dangling_mass = dangling_mass0
-    k = fixed_iters if fixed_iters is not None else max_iter
-    deltas: list[float] = []
-    metrics: list[dict[str, Any]] = []
-    converged = False
-
-    with iterative_conf(spark, shuffle_partitions=P):
-        for it in range(start_iter, k):
-            t0 = time.monotonic()
-
-            if broadcast_frontier:
-                # frontier → one sc.broadcast; superstep = ONE mapInArrow
-                # job over the static cached blocks⊕aux table — no join, no
-                # cogroup, no exchange (plan: InMemoryScan → MapInArrow →
-                # ArrowCollect). Scalars reduce vid-sorted as before.
-                bc = spark.sparkContext.broadcast(pr_arr)
-                fused_map = _make_arrow_map_kernel(
-                    int(n), P, float(damping), float(dangling_mass), bc
-                )
-                state = blocks_aux.mapInArrow(fused_map, schema=STATE_SCHEMA)
-                pdf = state.toPandas().sort_values(
-                    "vid", kind="mergesort", ignore_index=True
-                )
-                delta = float(pdf["abs_delta"].to_numpy().sum())
-                next_dm = float(pdf["dang_pr"].to_numpy().sum())
-                pr_arr = pdf["pr"].to_numpy(dtype=np.float64).copy()
-                bc.destroy()
-            else:
-                fused_arrow = _make_arrow_kernel(
-                    int(n), P, float(damping), float(dangling_mass)
-                )
-                routed = routes.hint("merge").join(ranks, "vid")
-                state = (
-                    blocks_aux.groupBy("bucket")
-                    .cogroup(routed.select("bucket", "pos", "pr", "tag").groupBy("bucket"))
-                    .applyInArrow(fused_arrow, schema=STATE_SCHEMA)
-                )
-                state = state.localCheckpoint(eager=False)
-                # ONE scalar job materializes the checkpoint AND reads the
-                # loop-carried scalars (no join against the previous vector).
-                # Reduction is per-bucket first (each bucket's rows are one
-                # contiguous cogroup output chunk, so the partial agg
-                # accumulates them in the kernel's vid order), then the ≤P
-                # bucket scalars sum in FIXED bucket order on the driver —
-                # the loop-carried scalars are bitwise-deterministic, like
-                # the broadcast mode's vid-sorted numpy reduction (resume
-                # must be bit-identical to an uninterrupted run).
-                brows = (
-                    state.groupBy(F.pmod(F.col("vid"), F.lit(P)).cast("int").alias("b"))
-                    .agg(
-                        F.sum("abs_delta").alias("bd"),
-                        F.coalesce(F.sum("dang_pr"), F.lit(0.0)).alias("bm"),
-                    )
-                    .collect()
-                )
-                brows.sort(key=lambda r: r["b"])
-                delta = float(np.sum(np.array([r["bd"] for r in brows], dtype=np.float64)))
-                next_dm = float(np.sum(np.array([r["bm"] for r in brows], dtype=np.float64)))
-                ranks = state.select("vid", "pr")
-            deltas.append(float(delta))
-            row = {
-                "superstep": it,
-                "l1_delta": float(delta),
-                "edges_processed": int(nnz),
-                "wall_ms": (time.monotonic() - t0) * 1000.0,
-                "dangling_mass": float(dangling_mass),
-                "dangling_mass_next": float(next_dm),
-                "n_partitions": P,
-            }
-            metrics.append(row)
-            if checkpointer is not None:
-                if broadcast_frontier:
-                    checkpointer.save(
-                        it,
-                        spark.createDataFrame(
-                            pd.DataFrame(
-                                {"vid": np.arange(int(n), dtype=np.int64), "pr": pr_arr}
-                            ),
-                            "vid long, pr double",
-                        ),
-                        row,
-                    )
-                else:
-                    checkpointer.save(it, ranks, row)
-            dangling_mass = float(next_dm)
-            if fixed_iters is None and delta <= tol:
-                converged = True
-                break
-
-    if broadcast_frontier:
-        ranks = spark.createDataFrame(
-            pd.DataFrame({"vid": np.arange(int(n), dtype=np.int64), "pr": pr_arr}),
-            "vid long, pr double",
-        )
-    return PageRankResult(
-        ranks=ranks,
-        iterations=len(deltas) + start_iter,
-        converged=converged,
-        deltas=deltas,
-        metrics=metrics,
-    )
-
-
 # Compiled-layout cache — the reference's protocol distributes data ONCE
 # and times COMPUTE over repeated trials (timer_op.c:52-61 takes the min
 # AFTER the one-time DISTRIBUTE_DATA of tuned_variant_baseline.c:247-324).
@@ -692,7 +535,6 @@ def _compile(
         "nnz": nnz,
         "partitions": partitions,  # effective bucket count (≤ requested)
         "vids": vids,
-        "vid_edges": vid_edges,
         "dangling_vids": dangling_vids,
         "n_dangling": n_dangling,
         "broadcast_frontier": broadcast_frontier,
@@ -711,31 +553,165 @@ def _compile(
     return ent
 
 
-def pagerank_csr(
+
+
+class _Csr:
+    """Key space shared by both csr kernels: dense vids 0..n-1 from the
+    compiled layout; ranks map back to entities once, at the end. The
+    compiled layout stays cached across calls (released on cache
+    eviction / clear_compile_cache); only per-call extras are released
+    here. ``reset`` is mapped into vid space, normalized, and baked into
+    the per-bucket aux arrays — personalized runs rebuild only that aux
+    slice, the blocks and routes come from the compiled cache untouched."""
+
+    key = "vid"
+
+    def __init__(self, ent: dict, *, id_col: str, damping: float, reset: DataFrame | None):
+        self.id_col, self.damping = id_col, float(damping)
+        self.ids, self.n, self.nnz = ent["ids"], ent["n"], ent["nnz"]
+        self.spark = self.ids.sparkSession
+        self.partitions = ent["partitions"]  # effective bucket count (≤ requested)
+        self.vertices, self.dangling = ent["vids"], ent["dangling_vids"]
+        self.n_dangling, self.routes = ent["n_dangling"], ent["routes"]
+        self.blocks_aux, self.reset, self._local = ent["blocks_aux"], None, []
+        if reset is not None:
+            self.reset = _teleport(self, reset).persist()
+            aux = build_aux(self.vertices, self.dangling, self.reset, self.n, self.partitions)
+            self.blocks_aux = (
+                aux.join(ent["blocks"], "bucket", "left")
+                .repartition(self.partitions, "bucket")
+                .persist()
+            )
+            self._local = [self.reset, self.blocks_aux]
+
+    def keyed(self, frame: DataFrame, col: str) -> DataFrame:
+        """Entity space → vid space; rows on unknown ids drop."""
+        hint = F.broadcast if self.n <= BROADCAST_ROW_LIMIT else (lambda df: df)
+        return (
+            frame.select(F.col(self.id_col).alias("entity"), col)
+            .join(hint(self.ids), "entity")
+            .select("vid", col)
+        )
+
+    def result(self, state) -> DataFrame:
+        return (
+            self.to_frame(state)
+            .join(self.ids, "vid")
+            .select(F.col("entity").alias(self.id_col), "pr")
+            .localCheckpoint(eager=True)
+        )
+
+    def release(self) -> None:
+        for df in self._local:
+            df.unpersist()
+
+
+class _BroadcastFrontier(_Csr):
+    """n ≤ BROADCAST_ROW_LIMIT: the frontier fits on the driver BY MODE
+    DEFINITION (that is what made broadcasting it safe), so the state is a
+    dense vid-indexed numpy array. Each superstep ships it as one
+    ``sc.broadcast`` and runs ONE ``mapInArrow`` job over the static cached
+    blocks⊕aux table — no join, no cogroup, no exchange (plan:
+    InMemoryScan → MapInArrow → ArrowCollect; see _make_arrow_map_kernel).
+    The loop-carried scalars reduce in FIXED vid-sorted numpy order."""
+
+    _bc = None
+
+    def init(self, ranks: DataFrame | None) -> np.ndarray:
+        if ranks is None:
+            # uniform x0 built driver-side — zero Spark jobs
+            return np.full(self.n, 1.0 / self.n)
+        pdf = ranks.toPandas()
+        pr = np.zeros(int(self.n), dtype=np.float64)
+        pr[pdf["vid"].to_numpy(dtype=np.int64)] = pdf["pr"].to_numpy(dtype=np.float64)
+        return pr
+
+    def step(self, pr: np.ndarray, dm: float):
+        self._bc = bc = self.spark.sparkContext.broadcast(pr)
+        fused_map = _make_arrow_map_kernel(int(self.n), self.partitions, self.damping, dm, bc)
+        pdf = (
+            self.blocks_aux.mapInArrow(fused_map, schema=STATE_SCHEMA)
+            .toPandas()
+            .sort_values("vid", kind="mergesort", ignore_index=True)
+        )
+        delta = float(pdf["abs_delta"].to_numpy().sum())
+        next_dm = float(pdf["dang_pr"].to_numpy().sum())
+        bc.destroy()
+        self._bc = None
+        return pdf["pr"].to_numpy(dtype=np.float64).copy(), delta, next_dm
+
+    def to_frame(self, pr: np.ndarray) -> DataFrame:
+        return self.spark.createDataFrame(
+            pd.DataFrame({"vid": np.arange(int(self.n), dtype=np.int64), "pr": pr}),
+            "vid long, pr double",
+        )
+
+    def release(self) -> None:
+        if self._bc is not None:
+            self._bc.destroy()
+        super().release()
+
+
+class _Scale(_Csr):
+    """Large n: ranks merge-join the vid-partitioned routes and the routed
+    frontier exchanges into its dst buckets — the frontier-sized shuffles a
+    distributed PageRank fundamentally pays; never a full-vector
+    broadcast."""
+
+    def init(self, ranks: DataFrame | None) -> DataFrame:
+        if ranks is None:
+            ranks = self.vertices.withColumn("pr", F.lit(1.0 / self.n))
+        return ranks.localCheckpoint(eager=True)
+
+    def step(self, ranks: DataFrame, dm: float):
+        P = self.partitions
+        fused_arrow = _make_arrow_kernel(int(self.n), P, self.damping, dm)
+        routed = self.routes.hint("merge").join(ranks, "vid")
+        state = (
+            self.blocks_aux.groupBy("bucket")
+            .cogroup(routed.select("bucket", "pos", "pr", "tag").groupBy("bucket"))
+            .applyInArrow(fused_arrow, schema=STATE_SCHEMA)
+        )
+        state = state.localCheckpoint(eager=False)
+        # ONE scalar job materializes the checkpoint AND reads the
+        # loop-carried scalars (no join against the previous vector).
+        # Reduction is per-bucket first (each bucket's rows are one
+        # contiguous cogroup output chunk, so the partial agg accumulates
+        # them in the kernel's vid order), then the ≤P bucket scalars sum in
+        # FIXED bucket order on the driver — the loop-carried scalars are
+        # bitwise-deterministic, like the broadcast mode's vid-sorted numpy
+        # reduction (resume must be bit-identical to an uninterrupted run).
+        brows = (
+            state.groupBy(F.pmod(F.col("vid"), F.lit(P)).cast("int").alias("b"))
+            .agg(
+                F.sum("abs_delta").alias("bd"),
+                F.coalesce(F.sum("dang_pr"), F.lit(0.0)).alias("bm"),
+            )
+            .collect()
+        )
+        brows.sort(key=lambda r: r["b"])
+        delta = float(np.sum(np.array([r["bd"] for r in brows], dtype=np.float64)))
+        next_dm = float(np.sum(np.array([r["bm"] for r in brows], dtype=np.float64)))
+        return state.select("vid", "pr"), delta, next_dm
+
+    def to_frame(self, ranks: DataFrame) -> DataFrame:
+        return ranks
+
+
+def csr_kernel(
     vertices: DataFrame,
     edges: DataFrame,
     *,
-    id_col: str = "entity",
-    damping: float,
-    tol: float,
-    max_iter: int,
-    fixed_iters: int | None,
+    id_col: str,
     partitions: int,
+    damping: float,
     reset: DataFrame | None = None,
-    x0: DataFrame | None = None,
-    checkpointer=None,
     broadcast_frontier: bool | None = None,
-):
-    """CSR-blocks kernel entry (called via pagerank(kernel='csr-blocks')).
-
-    Runs the fused superstep loop in dense vid space, then maps ranks back
-    to entities; the result is column-identical to the join-agg kernel
-    (cross-kernel differential bar: 1e-12, SURVEY.md §5 item 3).
-    ``reset``: optional personalized teleport distribution (id_col, weight)
-    — mapped into vid space, normalized, and baked into the per-bucket aux
-    arrays, so the kernel dispatch contract is feature-uniform with
-    join-agg (the reference's macro dispatch runs every variant through
-    the same rig, build_test_rig.sh:37-48).
+) -> _Csr:
+    """The csr-blocks kernel for pagerank(kernel='csr-blocks'): compiles
+    (or fetches) the layout and picks the frontier mode. The ranks it
+    yields are column-identical to the join-agg kernel's (cross-kernel
+    differential bar: 1e-12, SURVEY.md §5 item 3).
     ``broadcast_frontier``: None (default) picks by |V| vs
     BROADCAST_ROW_LIMIT; True/False forces broadcast-frontier or scale
     (merge-join + frontier shuffle) mode regardless of size — both modes
@@ -748,141 +724,7 @@ def pagerank_csr(
     reference's distribute-once/measure-many protocol (timer_op.c:52-61).
     Library callers done with a large graph should call
     ``clear_compile_cache()`` to free the pinned executor storage
-    immediately; otherwise it frees on LRU eviction or session stop.
-    """
-    from pagerank_optimization_spark.operators.pagerank import PageRankResult
-
+    immediately; otherwise it frees on LRU eviction or session stop."""
     ent = _compile(vertices, edges, id_col, partitions, broadcast_frontier)
-    partitions = ent["partitions"]  # effective bucket count (≤ requested)
-    ids, n, nnz = ent["ids"], ent["n"], ent["nnz"]
-    vids, vid_edges = ent["vids"], ent["vid_edges"]
-    dangling_vids, n_dangling = ent["dangling_vids"], ent["n_dangling"]
-    broadcast_frontier = ent["broadcast_frontier"]
-    routes = ent["routes"]
-    hint = F.broadcast if n <= BROADCAST_ROW_LIMIT else (lambda df: df)
-
-    reset_vid = None
-    blocks_aux_local = None
-    if reset is None:
-        blocks_aux = ent["blocks_aux"]
-    else:
-        # entity space → vid space; weights on unknown ids drop, then
-        # normalize over what remains (same contract as the join-agg path).
-        # Personalized runs rebuild only the aux slice (reset_arr) — the
-        # blocks and routes come from the compiled cache untouched.
-        reset_vid = reset.select(F.col(id_col).alias("entity"), "weight").join(
-            hint(ids), "entity"
-        )
-        total = reset_vid.agg(F.sum("weight")).collect()[0][0]
-        if not total or total <= 0:
-            raise ValueError(
-                "pagerank: reset distribution has no positive weight on any "
-                "graph vertex (check ids and weights)"
-            )
-        reset_vid = reset_vid.select(
-            "vid", (F.col("weight") / F.lit(float(total))).alias("reset_w")
-        ).persist()
-        aux_p = build_aux(vids, dangling_vids, reset_vid, n, partitions)
-        blocks_aux_local = (
-            aux_p.join(ent["blocks"], "bucket", "left")
-            .repartition(partitions, "bucket")
-            .persist()
-        )
-        blocks_aux = blocks_aux_local
-
-    # resume / fresh x0 + the first superstep's dangling mass
-    start_iter = 0
-    ranks0 = None
-    if checkpointer is not None:
-        resumed = checkpointer.resume()
-        if resumed is not None:
-            start_iter, ranks0 = resumed
-    if ranks0 is None:
-        if x0 is not None:
-            # warm start: entity space → vid space (mass on departed ids
-            # drops via the join, new vids densify to 0), renormalize —
-            # the same contract as the join-agg path, so the kernel
-            # dispatch stays feature-uniform
-            x0_vid = x0.select(
-                F.col(id_col).alias("entity"), F.col("pr").alias("_x0")
-            ).join(hint(ids), "entity")
-            total = x0_vid.agg(F.sum("_x0")).collect()[0][0]
-            if not total or total <= 0:
-                raise ValueError(
-                    "pagerank: x0 has no positive mass on any graph vertex"
-                )
-            ranks0 = vids.join(x0_vid.select("vid", "_x0"), "vid", "left").select(
-                "vid",
-                (F.coalesce(F.col("_x0"), F.lit(0.0)) / F.lit(float(total))).alias(
-                    "pr"
-                ),
-            )
-            dm0 = (
-                ranks0.join(dangling_vids, "vid", "left_semi")
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
-                .collect()[0][0]
-            )
-        elif reset_vid is not None:
-            ranks0 = vids.join(reset_vid, "vid", "left").select(
-                "vid", F.coalesce(F.col("reset_w"), F.lit(0.0)).alias("pr")
-            )
-            dm0 = (
-                ranks0.join(dangling_vids, "vid", "left_semi")
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
-                .collect()[0][0]
-            )
-        elif broadcast_frontier:
-            # uniform x0 built driver-side (the frontier is driver-sized by
-            # mode definition) — zero Spark jobs
-            ranks0 = pd.DataFrame(
-                {"vid": np.arange(n, dtype=np.int64), "pr": np.full(n, 1.0 / n)}
-            )
-            dm0 = n_dangling / n
-        else:
-            ranks0 = vids.withColumn("pr", F.lit(1.0 / n))
-            dm0 = n_dangling / n
-    else:
-        saved = checkpointer.last_metrics() if checkpointer is not None else None
-        if saved is not None and saved.get("dangling_mass_next") is not None:
-            dm0 = float(saved["dangling_mass_next"])
-        else:
-            dm0 = (
-                ranks0.join(dangling_vids, "vid", "left_semi")
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
-                .collect()[0][0]
-            )
-
-    try:
-        res = _iterate_csr_fused(
-            blocks_aux,
-            routes,
-            n,
-            nnz,
-            float(dm0),
-            ranks0,
-            start_iter=start_iter,
-            damping=damping,
-            tol=tol,
-            max_iter=max_iter,
-            fixed_iters=fixed_iters,
-            partitions=partitions,
-            broadcast_frontier=broadcast_frontier,
-            checkpointer=checkpointer,
-        )
-        entity_ranks = (
-            res.ranks.join(ids, "vid").select(F.col("entity").alias(id_col), "pr")
-        ).localCheckpoint(eager=True)
-        return PageRankResult(
-            ranks=entity_ranks,
-            iterations=res.iterations,
-            converged=res.converged,
-            deltas=res.deltas,
-            metrics=res.metrics,
-        )
-    finally:
-        # cached compile artifacts stay persisted (released on cache
-        # eviction / clear_compile_cache); only per-call extras go
-        if blocks_aux_local is not None:
-            blocks_aux_local.unpersist()
-        if reset_vid is not None:
-            reset_vid.unpersist()
+    cls = _BroadcastFrontier if ent["broadcast_frontier"] else _Scale
+    return cls(ent, id_col=id_col, damping=damping, reset=reset)

@@ -43,6 +43,24 @@ def iterative_conf(spark: SparkSession, shuffle_partitions: int | None = None):
         spark.conf.set(skey, sprev)
 
 
+def default_driver_memory() -> str:
+    """Half of the memory this process may use — the cgroup limit when one
+    is set, else physical RAM — as a JVM size string. The other half is
+    left for JVM off-heap use, the Python workers and the OS: a fixed
+    large default lets the heap outgrow a small machine until the kernel
+    OOM-kills the JVM."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            total = min(total, int(limit))
+    return f"{max(1, total // 2 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "pagerank-optimization-spark",
     cores: int | None = None,
@@ -56,6 +74,8 @@ def get_spark(
     - AQE enabled: runtime coalescing + skew-join splitting (the reference
       ignores skew entirely; Kronecker graphs are power-law).
     - UTC timezone pinned for DuckDB-oracle parity.
+    - Driver heap: ``SPARK_DRIVER_MEMORY`` if set, else
+      ``default_driver_memory()``.
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cores
@@ -69,7 +89,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

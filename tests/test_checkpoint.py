@@ -31,17 +31,26 @@ def _d(df):
     return {r[0]: r[1] for r in df.collect()}
 
 
-def test_kill_resume_bitwise_equal(spark, graph, ckpt_root):
+KERNELS = {
+    "join-agg": {"kernel": "join-agg"},
+    "csr-broadcast": {"kernel": "csr-blocks", "csr_broadcast_frontier": True},
+    "csr-scale": {"kernel": "csr-blocks", "csr_broadcast_frontier": False},
+}
+
+
+@pytest.mark.parametrize("kern", list(KERNELS))
+def test_kill_resume_bitwise_equal(spark, graph, ckpt_root, kern):
     vertices, wedges = graph
+    kw = KERNELS[kern]
     # uninterrupted 6-superstep run (no checkpointer)
-    want = _d(pagerank(vertices, wedges, fixed_iters=6, partitions=4).ranks)
+    want = _d(pagerank(vertices, wedges, fixed_iters=6, partitions=4, **kw).ranks)
 
     # interrupted: run 3 supersteps, "die", resume to 6 with a fresh manager
     cm1 = CheckpointManager(spark, ckpt_root, "run-a")
-    pagerank(vertices, wedges, fixed_iters=3, partitions=4, checkpointer=cm1)
+    pagerank(vertices, wedges, fixed_iters=3, partitions=4, checkpointer=cm1, **kw)
     cm2 = CheckpointManager(spark, ckpt_root, "run-a")
     assert cm2.last_complete_superstep() == 2  # supersteps 0,1,2 complete
-    res = pagerank(vertices, wedges, fixed_iters=6, partitions=4, checkpointer=cm2)
+    res = pagerank(vertices, wedges, fixed_iters=6, partitions=4, checkpointer=cm2, **kw)
     got = _d(res.ranks)
     assert res.iterations == 6
     assert got == want  # exact float64 equality, not allclose
@@ -64,11 +73,6 @@ def test_metrics_and_lineage_written(spark, graph, ckpt_root):
 def test_resume_fresh_returns_none(spark, ckpt_root):
     cm = CheckpointManager(spark, ckpt_root, "never-ran")
     assert cm.resume() is None
-
-
-def test_iceberg_format_raises(spark, ckpt_root):
-    with pytest.raises(NotImplementedError):
-        CheckpointManager(spark, ckpt_root, "x", table_format="iceberg")
 
 
 def test_cc_kill_resume_exact(spark, graph, ckpt_root):

@@ -25,12 +25,12 @@ def test_csr_kernel_kill_resume(spark, bf):
 
     root = tempfile.mkdtemp(prefix="csr_ckpt_")
     try:
-        cm1 = CheckpointManager(spark, root, "r", id_col="vid")
+        cm1 = CheckpointManager(spark, root, "r")
         pagerank(
             vertices, wedges, fixed_iters=3, partitions=4, kernel="csr-blocks",
             checkpointer=cm1, csr_broadcast_frontier=bf,
         )
-        cm2 = CheckpointManager(spark, root, "r", id_col="vid")
+        cm2 = CheckpointManager(spark, root, "r")
         assert cm2.last_complete_superstep() == 2
         res = pagerank(
             vertices, wedges, fixed_iters=6, partitions=4, kernel="csr-blocks",
@@ -60,12 +60,12 @@ def test_csr_scale_mode_resume_bitwise(spark):
     }
     root = tempfile.mkdtemp(prefix="csr_ckpt_scale_")
     try:
-        cm1 = CheckpointManager(spark, root, "r", id_col="vid")
+        cm1 = CheckpointManager(spark, root, "r")
         pagerank(
             vertices, wedges, fixed_iters=3, partitions=4, kernel="csr-blocks",
             checkpointer=cm1, csr_broadcast_frontier=False,
         )
-        cm2 = CheckpointManager(spark, root, "r", id_col="vid")
+        cm2 = CheckpointManager(spark, root, "r")
         got = {
             r[0]: r[1]
             for r in pagerank(

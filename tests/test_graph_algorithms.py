@@ -157,7 +157,7 @@ def test_lpa_until_stable_stops_early_identical_labels(spark, tmp_path):
     )
     want = {r.entity: r.label for r in label_propagation(vertices, edges, rounds=10).collect()}
 
-    cm = CheckpointManager(spark, str(tmp_path), "lpa-stable", id_col="entity")
+    cm = CheckpointManager(spark, str(tmp_path), "lpa-stable")
     got = {
         r.entity: r.label
         for r in label_propagation(

@@ -9,15 +9,13 @@ from pagerank_optimization_spark.operators.graph_build import (
     turn_entities,
     vertex_ids,
 )
-from pagerank_optimization_spark.operators.pagerank import _dangling_of, _iterate, pagerank
+from pagerank_optimization_spark.operators.pagerank import pagerank
 from pagerank_optimization_spark.plans.partitioning import (
     assert_broadcast_join,
     assert_column_pruned,
     assert_no_broadcast_join,
     assert_no_single_partition_exchange,
     assert_partial_aggregation,
-    salted_pagerank_step,
-    with_degree_salt,
 )
 from pagerank_optimization_spark.sources.transcripts import synthesize_transcripts
 
@@ -27,39 +25,6 @@ def graph(spark):
     transcripts = synthesize_transcripts(spark, 200, seed=13).cache()
     vertices, wedges = build_graph(transcripts)
     return vertices.cache(), wedges.cache()
-
-
-def test_degree_salting_preserves_pagerank(spark, graph):
-    vertices, wedges = graph
-    plain = pagerank(vertices, wedges, fixed_iters=5, partitions=8)
-
-    # salted run through the same loop with the salted step (hub threshold
-    # tiny so real splitting happens on this fixture)
-    salted = with_degree_salt(wedges, max_deg=5).persist()
-    assert salted.filter(F.col("salt") > 0).count() > 0  # splitting engaged
-    verts = vertices.select("entity").repartition(8, "entity").persist()
-    n = verts.count()
-    dang = _dangling_of(verts, salted, "entity").persist()
-    res = _iterate(
-        verts, "entity", salted_pagerank_step(salted), dang, n,
-        salted.count(), damping=0.85, tol=1e-6, max_iter=100, fixed_iters=5,
-        partitions=8,
-    )
-    a = {r[0]: r[1] for r in plain.ranks.collect()}
-    b = {r[0]: r[1] for r in res.ranks.collect()}
-    ks = sorted(a)
-    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], atol=1e-12)
-
-
-def test_pagerank_hub_split_param(spark, graph):
-    """The public hub_split_degree knob gives identical results."""
-    vertices, wedges = graph
-    plain = pagerank(vertices, wedges, fixed_iters=4, partitions=8)
-    split = pagerank(vertices, wedges, fixed_iters=4, partitions=8, hub_split_degree=5)
-    a = {r[0]: r[1] for r in plain.ranks.collect()}
-    b = {r[0]: r[1] for r in split.ranks.collect()}
-    ks = sorted(a)
-    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], atol=1e-12)
 
 
 def test_auto_hub_split(spark, graph):
@@ -119,16 +84,12 @@ def test_src_split_triggered_preserves_pagerank(spark):
     assert np.allclose([a[k] for k in ks], [b[k] for k in ks], atol=1e-12)
 
 
-def test_salt_cardinality_bounded(graph):
-    _, wedges = graph
-    salted = with_degree_salt(wedges, max_deg=5)
-    stats = (
-        salted.groupBy("dst")
-        .agg(F.countDistinct("salt").alias("n_salts"), F.count("*").alias("indeg"))
-        .collect()
-    )
-    for r in stats:
-        assert r.n_salts <= max(1, -(-r.indeg // 5))  # ≤ ceil(indeg/max_deg)
+def test_hub_split_degree_accepts_only_auto_or_none(graph):
+    """The dst-side integer salt is gone: only "auto" or None are valid."""
+    vertices, wedges = graph
+    for bad in (5, 10_000, "on"):
+        with pytest.raises(ValueError, match="hub_split_degree"):
+            pagerank(vertices, wedges, fixed_iters=1, partitions=8, hub_split_degree=bad)
 
 
 def test_text_column_pruned_from_graph_scan(spark, tmp_path):

@@ -7,7 +7,7 @@ optionally captures ``.explain("formatted")`` output to a file.
 
 Usage:
     python tools/qbench.py q1 q2 ...            # time the named queries
-    QB_PLAN_DIR=plans/r06 QB_PLAN_SUFFIX=_before python tools/qbench.py q1
+    QB_PLAN_DIR=plan_dumps QB_PLAN_SUFFIX=_before python tools/qbench.py q1
     QB_TRIALS=2 python tools/qbench.py q1       # override trial count
 
 This file is NOT part of the driver contract (bench.py is frozen); numbers
