@@ -63,7 +63,12 @@ def shingles(
     documents: DataFrame, *, k: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """→ (doc_id, shingle): distinct word k-grams per document, built with a
-    lateral sequence/slice explode — no Python, fully codegen'd."""
+    lateral sequence/slice explode — no Python, fully codegen'd.
+
+    Precondition: ``id_col`` is unique per document. The k-grams are
+    deduplicated within each input row, not across rows, so two rows
+    sharing an id both keep their (id, shingle) rows and the Jaccard
+    counts built on this table (|A∩B|, |A|) are inflated."""
     toks = tokens_expr(F.col(text_col))
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0)) - 1 + F.lit(1)),

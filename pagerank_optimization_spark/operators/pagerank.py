@@ -31,6 +31,19 @@ x0/reset start vector (normalized by ``_normalized`` in the kernel's key
 space), the metrics row, the checkpoint save, the convergence test and
 releasing per-call state.
 
+Record-iterator contract: the loop consumes
+``kern.supersteps(state, dm, steps=, tol=, every_state=)``, which yields
+one ``Superstep`` record (state, l1_delta, dangling_mass_next, wall_ms,
+fused) per superstep run — at most ``steps`` of them, none after the
+first whose delta meets ``tol`` (``tol=None``: exactly ``steps``). The
+default (``_Kernel.supersteps``) runs one ``step`` per record, timed on
+the driver, so each record's state is live when it is yielded. A kernel
+may instead run the whole loop in one task (the csr broadcast kernel
+does when its layout is one bucket and ``every_state`` is False, i.e. no
+checkpointer needs each superstep's state): its records then carry
+in-task ``wall_ms``, ``fused=True``, and a state only on the last one.
+Either way the loop builds every metrics row itself from the records.
+
 Superstep lifecycle (lineage hygiene): each iterate is localCheckpoint'ed
 (or durably checkpointed via a CheckpointManager) — the DataFrame analog of
 the reference's ping-pong buffer swap (pagerank.h:40-45) that also cuts the
@@ -41,13 +54,48 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
-from typing import Any, Literal
+from typing import Any, Iterator, Literal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DAMPING = 0.85
 TOL = 1.0e-6
+
+
+@dataclass(frozen=True)
+class Superstep:
+    """One superstep's record, as a kernel's ``supersteps`` yields it.
+    ``state`` is the kernel's rank state after the superstep (None on the
+    non-final records of a fused run, which holds only the final vector);
+    ``wall_ms`` is driver wall time for a per-superstep job and in-task
+    compute time on a fused record."""
+
+    state: Any
+    l1_delta: float
+    dangling_mass_next: float
+    wall_ms: float
+    fused: bool = False
+
+
+def reached(delta: float, tol: float | None) -> bool:
+    """The convergence rule: L1 delta ≤ tol; ``tol=None`` (fixed_iters)
+    never stops early. Shared by the driver loop and the fused in-task
+    loop so both stop on the same superstep."""
+    return tol is not None and delta <= tol
+
+
+class _Kernel:
+    """Default record iterator: one ``step`` per superstep, wall time
+    measured on the driver around it."""
+
+    def supersteps(
+        self, state, dm: float, *, steps: int, tol: float | None, every_state: bool
+    ) -> Iterator[Superstep]:
+        for _ in range(steps):
+            t0 = time.monotonic()
+            state, delta, dm = self.step(state, dm)
+            yield Superstep(state, float(delta), float(dm), (time.monotonic() - t0) * 1000.0)
 
 
 @dataclass
@@ -140,30 +188,35 @@ def _drive(
         state = kern.init(ranks)
 
         k = fixed_iters if fixed_iters is not None else max_iter
+        stop_tol = None if fixed_iters is not None else tol
         deltas: list[float] = []
         metrics: list[dict[str, Any]] = []
         converged = False
+        records = kern.supersteps(
+            state, dm, steps=k - start_iter, tol=stop_tol, every_state=checkpointer is not None
+        )
         # shuffle width aligned with the kernel's layout (r6): in-loop
         # groupBys land directly on the rank vector's partitioning
         with iterative_conf(kern.spark, shuffle_partitions=kern.partitions):
-            for it in range(start_iter, k):
-                t0 = time.monotonic()
-                state, delta, next_dm = kern.step(state, dm)
-                deltas.append(float(delta))
+            for it, rec in enumerate(records, start_iter):
+                deltas.append(rec.l1_delta)
                 row = {
                     "superstep": it,
-                    "l1_delta": float(delta),
+                    "l1_delta": rec.l1_delta,
                     "edges_processed": int(kern.nnz),
-                    "wall_ms": (time.monotonic() - t0) * 1000.0,
+                    "wall_ms": rec.wall_ms,
                     "dangling_mass": dm,
-                    "dangling_mass_next": float(next_dm),
+                    "dangling_mass_next": rec.dangling_mass_next,
                     "n_partitions": kern.partitions,
                 }
+                if rec.fused:
+                    row["fused"] = True
                 metrics.append(row)
+                state = rec.state
                 if checkpointer is not None:
                     checkpointer.save(it, kern.to_frame(state), row)
-                dm = float(next_dm)
-                if fixed_iters is None and delta <= tol:
+                dm = rec.dangling_mass_next
+                if reached(rec.l1_delta, stop_tol):
                     converged = True
                     break
         ranks = kern.result(state)
@@ -186,7 +239,7 @@ def _dangling_of(vertices: DataFrame, edges: DataFrame, id_col: str) -> DataFram
     )
 
 
-class _JoinAgg:
+class _JoinAgg(_Kernel):
     """join-agg kernel in entity-id space. Setup is the one-time layout
     decision — the Spark analog of DISTRIBUTE_DATA
     (tuned_variant_baseline.c:247-324): co-partition edges on the join key

@@ -55,6 +55,20 @@ join-agg kernel runs three joins and two aggregations through the JVM
 per superstep; at scale both are shuffle-bound by the frontier, and the
 CSR path does its math vectorized.
 
+Record iterator (the contract of operators.pagerank._drive): both csr
+kernels inherit the default ``supersteps`` — one ``step`` job per
+record. ``_BroadcastFrontier`` overrides it when its layout has ONE
+bucket (P=1) and the loop needs no intermediate state (no checkpointer):
+the start vector crosses once as an ``sc.broadcast``, ONE ``mapInArrow``
+task loops ``bucket_update`` → ``loop_scalars`` to ``steps`` or to the
+shared ``reached`` rule, and returns the final vector plus one
+(l1_delta, dangling_mass_next, wall_ms) row per superstep, which become
+``Superstep(fused=True)`` records. At P=1 a superstep's numpy work is
+~0.1 ms and a job's dispatch ~300 ms, so this removes nearly all of a
+converged run's loop time. The per-bucket math is the one
+``bucket_update`` function in every path (scale cogroup, broadcast map,
+fused loop), so the fused loop is bitwise-equal to per-superstep jobs.
+
 Scale-mode history: with the round-≤3 ``applyInPandas`` kernel the routed
 frontier's pandas materialization dominated (measured 3.3× BEHIND
 join-agg at 1.1M vertices — at 2 FLOPs/edge the boundary cost dwarfed the
@@ -76,6 +90,8 @@ Arrow batches give full-width vectorization regardless of run lengths
 
 from __future__ import annotations
 
+import time
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W
@@ -83,7 +99,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pagerank_optimization_spark.operators.graph_build import vertex_ids_counted
-from pagerank_optimization_spark.operators.pagerank import _teleport
+from pagerank_optimization_spark.operators.pagerank import Superstep, _Kernel, _teleport, reached
 
 # Above this row count an id-map broadcast risks executor OOM at the
 # 10^9-vertex scale this engine targets — fall back to a shuffle join
@@ -128,8 +144,74 @@ STATE_SCHEMA = T.StructType(
 )
 
 
+LOOP_SCHEMA = T.StructType(
+    [
+        T.StructField("l1_delta", T.DoubleType(), False),
+        T.StructField("dangling_mass_next", T.DoubleType(), False),
+        T.StructField("wall_ms", T.DoubleType(), False),
+        T.StructField("pr", T.BinaryType(), True),  # float64 ranks, last row only
+    ]
+)
+
+
 def _bucket_size(n: int, b: int, P: int) -> int:
     return (n - b + P - 1) // P if b < n else 0
+
+
+def bucket_update(
+    old: np.ndarray,
+    x: np.ndarray | None,
+    blk: dict | None,
+    mask: np.ndarray,
+    reset_arr: np.ndarray | None,
+    n_: int,
+    d_: float,
+    dm: float,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The per-bucket superstep math, the ONE copy every csr path runs
+    (scale cogroup, broadcast map, fused broadcast loop), so they agree
+    bitwise by construction. ``old``: the bucket's rank slice in local
+    (vid // P) order; ``x``: the ranks of the bucket's distinct sources in
+    gather-slot order; ``blk``: the decoded CSR arrays (None: no in-edges).
+    Gather by source, segment-sum over the lexsorted CSR
+    (np.add.reduceat, tuned_variant_csr.c:74-84), scatter to the dense
+    slice, damping + teleport/personalized base → (new, |new−old|,
+    dangling rank per vertex)."""
+    acc = np.zeros(len(old), dtype=np.float64)
+    if blk is not None:
+        contrib = blk["weight"] * x[blk["src_idx"]]               # gather+mul
+        acc[blk["dst_local"]] = np.add.reduceat(contrib, blk["indptr"][:-1])
+    if reset_arr is not None:
+        base = ((1.0 - d_) + d_ * dm) * reset_arr
+    else:
+        base = (1.0 - d_) / n_ + d_ * dm / n_
+    new = base + d_ * acc
+    return new, np.abs(new - old), np.where(mask, new, 0.0)
+
+
+def loop_scalars(abs_delta: np.ndarray, dang_pr: np.ndarray) -> tuple[float, float]:
+    """(L1 delta, next dangling mass): numpy sums over vid-ordered arrays —
+    the fixed reduction order that keeps resume bitwise."""
+    return float(abs_delta.sum()), float(dang_pr.sum())
+
+
+def _decode_row(tb, i: int) -> tuple[dict | None, np.ndarray, np.ndarray | None]:
+    """Row ``i`` of a blocks⊕aux Arrow table → (CSR arrays or None,
+    dangling mask, reset slice or None) as numpy views on the buffers."""
+    blk = None
+    if tb["src_idx"][i].as_py() is not None:
+        blk = {"n_src": int(tb["n_src"][i].as_py())}
+        for col, dt in (
+            ("src_idx", np.int64),
+            ("src_vids", np.int64),
+            ("indptr", np.int64),
+            ("dst_local", np.int64),
+            ("weight", np.float64),
+        ):
+            blk[col] = np.frombuffer(tb[col][i].as_py(), dtype=dt)
+    mask = np.frombuffer(tb["dang_mask"][i].as_py(), dtype=np.uint8).astype(bool)
+    ra = tb["reset_arr"][i].as_py()
+    return blk, mask, None if ra is None else np.frombuffer(ra, dtype=np.float64)
 
 
 def _make_arrow_kernel(n_: int, P: int, d_: float, dm: float):
@@ -137,9 +219,9 @@ def _make_arrow_kernel(n_: int, P: int, d_: float, dm: float):
     routed frontier's columns come off the exchange as Arrow buffers and
     the state goes back as Arrow buffers — no pandas Block materialization
     on either side of the JVM↔Python boundary (round-3 measurement: that materialization, not
-    the shuffle, dominated the scale mode's per-superstep cost). Math is
-    numpy, identical operations and reduction order as rounds ≤3 (the
-    cross-kernel 1e-12 differential and bitwise-resume tests pin it)."""
+    the shuffle, dominated the scale mode's per-superstep cost). The math
+    is ``bucket_update``; the routed tag=0 rows carry the old slice and the
+    tag=1 rows the gather slots."""
     import pyarrow as pa
 
     def fused_arrow(key, blk: "pa.Table", routed_tb: "pa.Table") -> "pa.Table":
@@ -160,36 +242,21 @@ def _make_arrow_kernel(n_: int, P: int, d_: float, dm: float):
         own = tag == 0
         old = np.zeros(m, dtype=np.float64)
         old[pos[own]] = pr[own]
-        acc = np.zeros(m, dtype=np.float64)
-        reset_arr = None
+        csr, x, reset_arr = None, None, None
         if blk.num_rows > 0:
-            src_idx_buf = blk["src_idx"][0].as_py()
-            if src_idx_buf is not None:
-                src_idx = np.frombuffer(src_idx_buf, dtype=np.int64)
-                indptr = np.frombuffer(blk["indptr"][0].as_py(), dtype=np.int64)
-                dst_local = np.frombuffer(blk["dst_local"][0].as_py(), dtype=np.int64)
-                w = np.frombuffer(blk["weight"][0].as_py(), dtype=np.float64)
-                x = np.zeros(int(blk["n_src"][0].as_py()), dtype=np.float64)
+            csr, mask, reset_arr = _decode_row(blk, 0)
+            if csr is not None:
+                x = np.zeros(csr["n_src"], dtype=np.float64)
                 x[pos[~own]] = pr[~own]
-                contrib = w * x[src_idx]                   # gather+mul
-                acc[dst_local] = np.add.reduceat(contrib, indptr[:-1])
-            mask = np.frombuffer(blk["dang_mask"][0].as_py(), dtype=np.uint8).astype(bool)
-            ra = blk["reset_arr"][0].as_py()
-            if ra is not None:
-                reset_arr = np.frombuffer(ra, dtype=np.float64)
         else:  # bucket with vertices but no aux row cannot happen; guard
             mask = np.zeros(m, dtype=bool)
-        if reset_arr is not None:
-            base = ((1.0 - d_) + d_ * dm) * reset_arr
-        else:
-            base = (1.0 - d_) / n_ + d_ * dm / n_
-        new = base + d_ * acc
+        new, abs_delta, dang_pr = bucket_update(old, x, csr, mask, reset_arr, n_, d_, dm)
         return pa.table(
             {
                 "vid": pa.array(b + P * np.arange(m, dtype=np.int64)),
                 "pr": pa.array(new),
-                "abs_delta": pa.array(np.abs(new - old)),
-                "dang_pr": pa.array(np.where(mask, new, 0.0)),
+                "abs_delta": pa.array(abs_delta),
+                "dang_pr": pa.array(dang_pr),
             }
         )
 
@@ -207,9 +274,8 @@ def _make_arrow_map_kernel(n_: int, P: int, d_: float, dm: float, bc):
     gated on n ≤ BROADCAST_ROW_LIMIT), the kernel gathers pr[src_vids]
     directly by GLOBAL vid, and the old rank for the delta is pr[b::P] —
     no routes table, no join, no cogroup, no per-superstep exchange at
-    all. Math and float64 reduction order are IDENTICAL to the cogroup
-    form (same lexsorted edge order, same np.add.reduceat, same dense
-    bucket slices), so results are bitwise-unchanged."""
+    all. The math is ``bucket_update``, the same function the cogroup form
+    runs, so results are bitwise-unchanged across modes."""
     import pyarrow as pa
 
     def fused_map(batches):
@@ -222,32 +288,15 @@ def _make_arrow_map_kernel(n_: int, P: int, d_: float, dm: float, bc):
                 m = _bucket_size(n_, b, P)
                 if m == 0:
                     continue
-                old = pr_all[b::P]
-                acc = np.zeros(m, dtype=np.float64)
-                reset_arr = None
-                src_idx_buf = tb["src_idx"][i].as_py()
-                if src_idx_buf is not None:
-                    src_idx = np.frombuffer(src_idx_buf, dtype=np.int64)
-                    src_vids = np.frombuffer(tb["src_vids"][i].as_py(), dtype=np.int64)
-                    indptr = np.frombuffer(tb["indptr"][i].as_py(), dtype=np.int64)
-                    dst_local = np.frombuffer(tb["dst_local"][i].as_py(), dtype=np.int64)
-                    w = np.frombuffer(tb["weight"][i].as_py(), dtype=np.float64)
-                    x = pr_all[src_vids]
-                    contrib = w * x[src_idx]                   # gather+mul
-                    acc[dst_local] = np.add.reduceat(contrib, indptr[:-1])
-                mask = np.frombuffer(tb["dang_mask"][i].as_py(), dtype=np.uint8).astype(bool)
-                ra = tb["reset_arr"][i].as_py()
-                if ra is not None:
-                    reset_arr = np.frombuffer(ra, dtype=np.float64)
-                if reset_arr is not None:
-                    base = ((1.0 - d_) + d_ * dm) * reset_arr
-                else:
-                    base = (1.0 - d_) / n_ + d_ * dm / n_
-                new = base + d_ * acc
+                blk, mask, reset_arr = _decode_row(tb, i)
+                x = None if blk is None else pr_all[blk["src_vids"]]
+                new, abs_delta, dang_pr = bucket_update(
+                    pr_all[b::P], x, blk, mask, reset_arr, n_, d_, dm
+                )
                 out_vid.append(b + P * np.arange(m, dtype=np.int64))
                 out_pr.append(new)
-                out_ad.append(np.abs(new - old))
-                out_dp.append(np.where(mask, new, 0.0))
+                out_ad.append(abs_delta)
+                out_dp.append(dang_pr)
             if out_vid:
                 yield pa.record_batch(
                     [
@@ -260,6 +309,45 @@ def _make_arrow_map_kernel(n_: int, P: int, d_: float, dm: float, bc):
                 )
 
     return fused_map
+
+
+def _make_arrow_loop_kernel(n_: int, d_: float, dm0: float, bc, steps: int, tol: float | None):
+    """The WHOLE superstep loop as one ``mapInArrow`` task over a
+    one-bucket blocks⊕aux table (P=1, so local order is vid order). The
+    start vector arrives once as ``bc``; each superstep is
+    ``bucket_update`` + ``loop_scalars`` — the per-superstep job's math
+    and reduction order — until ``steps`` ran or the delta ``reached``
+    tol. Output: one LOOP_SCHEMA row per superstep, the final rank vector
+    (float64 bytes) on the last one. ``wall_ms`` is in-task compute time
+    (time.perf_counter), which leaves out the one job's dispatch."""
+    import pyarrow as pa
+
+    def loop_map(batches):
+        tb = pa.Table.from_batches(list(batches))
+        blk, mask, reset_arr = _decode_row(tb, 0)
+        pr, dm = bc.value, dm0
+        deltas, dms, walls = [], [], []
+        for _ in range(steps):
+            t0 = time.perf_counter()
+            x = None if blk is None else pr[blk["src_vids"]]
+            pr, abs_delta, dang_pr = bucket_update(pr, x, blk, mask, reset_arr, n_, d_, dm)
+            delta, dm = loop_scalars(abs_delta, dang_pr)
+            walls.append((time.perf_counter() - t0) * 1000.0)
+            deltas.append(delta)
+            dms.append(dm)
+            if reached(delta, tol):
+                break
+        yield pa.record_batch(
+            [
+                pa.array(deltas, type=pa.float64()),
+                pa.array(dms, type=pa.float64()),
+                pa.array(walls, type=pa.float64()),
+                pa.array([None] * (len(deltas) - 1) + [pr.tobytes()], type=pa.binary()),
+            ],
+            names=LOOP_SCHEMA.fieldNames(),
+        )
+
+    return loop_map
 
 
 def build_csr_blocks(vid_edges: DataFrame, n_buckets: int) -> DataFrame:
@@ -555,7 +643,7 @@ def _compile(
 
 
 
-class _Csr:
+class _Csr(_Kernel):
     """Key space shared by both csr kernels: dense vids 0..n-1 from the
     compiled layout; ranks map back to entities once, at the end. The
     compiled layout stays cached across calls (released on cache
@@ -634,11 +722,31 @@ class _BroadcastFrontier(_Csr):
             .toPandas()
             .sort_values("vid", kind="mergesort", ignore_index=True)
         )
-        delta = float(pdf["abs_delta"].to_numpy().sum())
-        next_dm = float(pdf["dang_pr"].to_numpy().sum())
+        delta, next_dm = loop_scalars(pdf["abs_delta"].to_numpy(), pdf["dang_pr"].to_numpy())
         bc.destroy()
         self._bc = None
         return pdf["pr"].to_numpy(dtype=np.float64).copy(), delta, next_dm
+
+    def supersteps(self, pr: np.ndarray, dm: float, *, steps: int, tol, every_state: bool):
+        """One bucket and no consumer of intermediate states: run the whole
+        loop in ONE mapInArrow task (_make_arrow_loop_kernel) instead of
+        one job per superstep — at P=1 the superstep's numpy work is
+        ~0.1 ms and its job dispatch ~300 ms. Otherwise the default
+        per-superstep jobs."""
+        if every_state or self.partitions != 1 or steps <= 0:
+            yield from super().supersteps(pr, dm, steps=steps, tol=tol, every_state=every_state)
+            return
+        self._bc = bc = self.spark.sparkContext.broadcast(pr)
+        loop_map = _make_arrow_loop_kernel(int(self.n), self.damping, dm, bc, steps, tol)
+        rows = self.blocks_aux.mapInArrow(loop_map, schema=LOOP_SCHEMA).collect()
+        bc.destroy()
+        self._bc = None
+        last = len(rows) - 1
+        for i, r in enumerate(rows):
+            state = np.frombuffer(r["pr"], dtype=np.float64).copy() if i == last else None
+            yield Superstep(
+                state, r["l1_delta"], r["dangling_mass_next"], r["wall_ms"], fused=True
+            )
 
     def to_frame(self, pr: np.ndarray) -> DataFrame:
         return self.spark.createDataFrame(

@@ -110,3 +110,104 @@ def test_csr_modes_agree_bitwise_on_personalized(graph):
     assert set(a) == set(b)
     ks = sorted(a)
     assert np.allclose([a[k] for k in ks], [b[k] for k in ks], atol=1e-12)
+
+
+FUSED_CASES = ["converged", "fixed5", "personalized", "x0"]
+
+
+@pytest.mark.parametrize("case", FUSED_CASES)
+def test_fused_loop_bitwise_equals_per_superstep_jobs(spark, graph, tmp_path, case):
+    """A one-bucket broadcast layout runs the whole loop in one task when no
+    checkpointer needs each superstep's state; a checkpointed run of the
+    same graph takes one job per superstep. Both run the same numpy update
+    in the same order, so deltas, dangling masses and ranks are
+    float64-equal, not just close."""
+    from pyspark.sql import functions as F
+
+    from pagerank_optimization_spark.checkpoint import CheckpointManager
+
+    vertices, wedges, _, _ = graph
+    kw = {"partitions": 8, "kernel": "csr-blocks", "csr_broadcast_frontier": True}
+    if case == "fixed5":
+        kw["fixed_iters"] = 5
+    else:
+        kw["tol"] = 1e-6
+    if case == "personalized":
+        kw["reset"] = vertices.filter(F.col("entity").startswith("tool:")).withColumn(
+            "weight", F.lit(1.0)
+        )
+    if case == "x0":
+        kw["x0"] = pagerank(vertices, wedges, fixed_iters=3, **kw).ranks
+
+    fused = pagerank(vertices, wedges, **kw)
+    jobs = pagerank(
+        vertices, wedges, checkpointer=CheckpointManager(spark, str(tmp_path), "r"), **kw
+    )
+    assert fused.metrics and fused.metrics[0]["n_partitions"] == 1
+    assert all(m.get("fused") is True for m in fused.metrics)
+    assert not any("fused" in m for m in jobs.metrics)
+    assert fused.deltas == jobs.deltas
+    assert [m["dangling_mass_next"] for m in fused.metrics] == [
+        m["dangling_mass_next"] for m in jobs.metrics
+    ]
+    assert [m["dangling_mass"] for m in fused.metrics] == [
+        m["dangling_mass"] for m in jobs.metrics
+    ]
+    assert (fused.iterations, fused.converged) == (jobs.iterations, jobs.converged)
+    assert fused.converged == (case != "fixed5")
+    assert _d(fused.ranks) == _d(jobs.ranks)
+
+
+def _job_count(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "pagerank job-count probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _jobs_per_extra_superstep(spark, vertices, edges, name: str, **kw) -> float:
+    """Jobs of a fixed_iters=3 call minus those of a fixed_iters=1 call, per
+    extra superstep (the call's fixed jobs cancel); the compiled layout is
+    cached by a warm-up call first."""
+    pagerank(vertices, edges, fixed_iters=1, **kw)
+    one, three = (
+        _job_count(spark, f"{name}-{k}", lambda k=k: pagerank(vertices, edges, fixed_iters=k, **kw))
+        for k in (1, 3)
+    )
+    return (three - one) / 2
+
+
+def test_one_bucket_loop_starts_no_job_per_superstep(spark, graph):
+    vertices, wedges, _, _ = graph
+    kw = {"partitions": 8, "kernel": "csr-blocks", "csr_broadcast_frontier": True}
+    assert pagerank(vertices, wedges, fixed_iters=1, **kw).metrics[0]["n_partitions"] == 1
+    assert _jobs_per_extra_superstep(spark, vertices, wedges, "csr-p1", **kw) == 0
+
+
+def test_multi_bucket_loop_starts_one_job_per_superstep(spark):
+    """Above ROWS_PER_PARTITION rows the layout has several buckets; the
+    broadcast kernel then keeps one mapInArrow job per superstep."""
+    from pyspark.sql import functions as F
+
+    from pagerank_optimization_spark.plans.partitioning import ROWS_PER_PARTITION
+
+    n = ROWS_PER_PARTITION + 4_464
+    ids = spark.range(n)
+    vertices = ids.select(F.col("id").cast("string").alias("entity")).cache()
+    ring = ids.select(  # a directed ring: every rank is 1/n
+        F.col("id").cast("string").alias("src"),
+        ((F.col("id") + 1) % n).cast("string").alias("dst"),
+        F.lit(1.0).alias("weight"),
+    ).cache()
+    kw = {"partitions": 4, "kernel": "csr-blocks", "csr_broadcast_frontier": True}
+    res = pagerank(vertices, ring, fixed_iters=2, **kw)
+    assert res.metrics[0]["n_partitions"] > 1
+    assert not any("fused" in m for m in res.metrics)
+    pr = np.array([r[0] for r in res.ranks.select("pr").collect()])
+    assert len(pr) == n and np.allclose(pr, 1.0 / n, rtol=0, atol=1e-15)
+    assert _jobs_per_extra_superstep(spark, vertices, ring, "csr-p4", **kw) == 1
+    vertices.unpersist()
+    ring.unpersist()
