@@ -72,16 +72,13 @@ def betweenness(
         )
 
     ed = edges.select(F.col("src").alias("v"), F.col("dst").alias("w")).persist()
-    # scale-adaptive loop width (r6): every round joins |E| and the settled
-    # pair table grows to n_src·|V| rows — size the loop from the larger of
-    # the two (caller's value stays the cluster cap)
+    # scale-adaptive loop width (r6): the settled set is bounded by
+    # n_sources·|V| pair rows and every round joins |E| — size the loop
+    # from the edge count (caller's value stays the cluster cap)
     from pagerank_optimization_spark.plans.partitioning import effective_partitions
     from pagerank_optimization_spark.session import iterative_conf
 
-    n_src = len(sources) if sources is not None else n_sources
-    partitions = effective_partitions(
-        partitions, max(2 * ed.count(), n_src * vertices.count())
-    )
+    partitions = effective_partitions(partitions, 2 * ed.count())
 
     # ---- forward pass: settled(s, v, d, sigma) --------------------------
     settled = (

@@ -33,16 +33,19 @@ releasing per-call state.
 
 Record-iterator contract: the loop consumes
 ``kern.supersteps(state, dm, steps=, tol=, every_state=)``, which yields
-one ``Superstep`` record (state, l1_delta, dangling_mass_next, wall_ms,
-fused) per superstep run — at most ``steps`` of them, none after the
-first whose delta meets ``tol`` (``tol=None``: exactly ``steps``). The
-default (``_Kernel.supersteps``) runs one ``step`` per record, timed on
-the driver, so each record's state is live when it is yielded. A kernel
-may instead run the whole loop in one task (the csr broadcast kernel
-does when its layout is one bucket and ``every_state`` is False, i.e. no
-checkpointer needs each superstep's state): its records then carry
-in-task ``wall_ms``, ``fused=True``, and a state only on the last one.
-Either way the loop builds every metrics row itself from the records.
+one ``Superstep`` record (state, l1_delta, dangling_mass_next, wall_ms)
+per superstep run. The iterator alone decides when the loop stops: at
+most ``steps`` records, and none after the first whose delta is
+``reached`` at ``tol`` (``tol=None``: exactly ``steps``); the loop only
+reads ``converged`` off the last record. ``wall_ms`` is driver wall time
+of the job(s) behind the records. The default (``_Kernel.supersteps``)
+runs one ``step`` job per record, so each record's state is live when it
+is yielded. A kernel may instead run the whole loop in one task when
+``every_state`` is False, i.e. no checkpointer needs each superstep's
+state (the csr broadcast kernel does when its layout is one bucket): its
+records then carry the one job's time split evenly over them, and a
+state only on the last one. Either way the loop builds every metrics row
+itself from the records.
 
 Superstep lifecycle (lineage hygiene): each iterate is localCheckpoint'ed
 (or durably checkpointed via a CheckpointManager) — the DataFrame analog of
@@ -67,27 +70,27 @@ TOL = 1.0e-6
 class Superstep:
     """One superstep's record, as a kernel's ``supersteps`` yields it.
     ``state`` is the kernel's rank state after the superstep (None on the
-    non-final records of a fused run, which holds only the final vector);
-    ``wall_ms`` is driver wall time for a per-superstep job and in-task
-    compute time on a fused record."""
+    non-final records of a one-task run, which holds only the final
+    vector); ``wall_ms`` is the driver wall time of the superstep's job,
+    or a one-task run's job time over its record count."""
 
     state: Any
     l1_delta: float
     dangling_mass_next: float
     wall_ms: float
-    fused: bool = False
 
 
 def reached(delta: float, tol: float | None) -> bool:
     """The convergence rule: L1 delta ≤ tol; ``tol=None`` (fixed_iters)
-    never stops early. Shared by the driver loop and the fused in-task
-    loop so both stop on the same superstep."""
+    never stops early. Shared by the per-job record iterator and the
+    one-task loop so both stop on the same superstep."""
     return tol is not None and delta <= tol
 
 
 class _Kernel:
-    """Default record iterator: one ``step`` per superstep, wall time
-    measured on the driver around it."""
+    """Default record iterator: one ``step`` job per superstep, wall time
+    measured on the driver around it; stops after the record whose delta
+    is ``reached`` at ``tol``."""
 
     def supersteps(
         self, state, dm: float, *, steps: int, tol: float | None, every_state: bool
@@ -96,6 +99,8 @@ class _Kernel:
             t0 = time.monotonic()
             state, delta, dm = self.step(state, dm)
             yield Superstep(state, float(delta), float(dm), (time.monotonic() - t0) * 1000.0)
+            if reached(float(delta), tol):
+                return
 
 
 @dataclass
@@ -191,7 +196,6 @@ def _drive(
         stop_tol = None if fixed_iters is not None else tol
         deltas: list[float] = []
         metrics: list[dict[str, Any]] = []
-        converged = False
         records = kern.supersteps(
             state, dm, steps=k - start_iter, tol=stop_tol, every_state=checkpointer is not None
         )
@@ -209,16 +213,12 @@ def _drive(
                     "dangling_mass_next": rec.dangling_mass_next,
                     "n_partitions": kern.partitions,
                 }
-                if rec.fused:
-                    row["fused"] = True
                 metrics.append(row)
                 state = rec.state
                 if checkpointer is not None:
                     checkpointer.save(it, kern.to_frame(state), row)
                 dm = rec.dangling_mass_next
-                if reached(rec.l1_delta, stop_tol):
-                    converged = True
-                    break
+        converged = bool(deltas) and reached(deltas[-1], stop_tol)
         ranks = kern.result(state)
     finally:
         kern.release()

@@ -62,8 +62,9 @@ bucket (P=1) and the loop needs no intermediate state (no checkpointer):
 the start vector crosses once as an ``sc.broadcast``, ONE ``mapInArrow``
 task loops ``bucket_update`` → ``loop_scalars`` to ``steps`` or to the
 shared ``reached`` rule, and returns the final vector plus one
-(l1_delta, dangling_mass_next, wall_ms) row per superstep, which become
-``Superstep(fused=True)`` records. At P=1 a superstep's numpy work is
+(l1_delta, dangling_mass_next) row per superstep, which become the
+``Superstep`` records; the job's driver time is split evenly over their
+``wall_ms``. At P=1 a superstep's numpy work is
 ~0.1 ms and a job's dispatch ~300 ms, so this removes nearly all of a
 converged run's loop time. The per-bucket math is the one
 ``bucket_update`` function in every path (scale cogroup, broadcast map,
@@ -148,7 +149,6 @@ LOOP_SCHEMA = T.StructType(
     [
         T.StructField("l1_delta", T.DoubleType(), False),
         T.StructField("dangling_mass_next", T.DoubleType(), False),
-        T.StructField("wall_ms", T.DoubleType(), False),
         T.StructField("pr", T.BinaryType(), True),  # float64 ranks, last row only
     ]
 )
@@ -318,21 +318,18 @@ def _make_arrow_loop_kernel(n_: int, d_: float, dm0: float, bc, steps: int, tol:
     ``bucket_update`` + ``loop_scalars`` — the per-superstep job's math
     and reduction order — until ``steps`` ran or the delta ``reached``
     tol. Output: one LOOP_SCHEMA row per superstep, the final rank vector
-    (float64 bytes) on the last one. ``wall_ms`` is in-task compute time
-    (time.perf_counter), which leaves out the one job's dispatch."""
+    (float64 bytes) on the last one."""
     import pyarrow as pa
 
     def loop_map(batches):
         tb = pa.Table.from_batches(list(batches))
         blk, mask, reset_arr = _decode_row(tb, 0)
         pr, dm = bc.value, dm0
-        deltas, dms, walls = [], [], []
+        deltas, dms = [], []
         for _ in range(steps):
-            t0 = time.perf_counter()
             x = None if blk is None else pr[blk["src_vids"]]
             pr, abs_delta, dang_pr = bucket_update(pr, x, blk, mask, reset_arr, n_, d_, dm)
             delta, dm = loop_scalars(abs_delta, dang_pr)
-            walls.append((time.perf_counter() - t0) * 1000.0)
             deltas.append(delta)
             dms.append(dm)
             if reached(delta, tol):
@@ -341,7 +338,6 @@ def _make_arrow_loop_kernel(n_: int, d_: float, dm0: float, bc, steps: int, tol:
             [
                 pa.array(deltas, type=pa.float64()),
                 pa.array(dms, type=pa.float64()),
-                pa.array(walls, type=pa.float64()),
                 pa.array([None] * (len(deltas) - 1) + [pr.tobytes()], type=pa.binary()),
             ],
             names=LOOP_SCHEMA.fieldNames(),
@@ -732,21 +728,22 @@ class _BroadcastFrontier(_Csr):
         loop in ONE mapInArrow task (_make_arrow_loop_kernel) instead of
         one job per superstep — at P=1 the superstep's numpy work is
         ~0.1 ms and its job dispatch ~300 ms. Otherwise the default
-        per-superstep jobs."""
+        per-superstep jobs. The one job's driver wall time is split evenly
+        over the records, so Σ wall_ms is the loop's time either way."""
         if every_state or self.partitions != 1 or steps <= 0:
             yield from super().supersteps(pr, dm, steps=steps, tol=tol, every_state=every_state)
             return
+        t0 = time.monotonic()
         self._bc = bc = self.spark.sparkContext.broadcast(pr)
         loop_map = _make_arrow_loop_kernel(int(self.n), self.damping, dm, bc, steps, tol)
         rows = self.blocks_aux.mapInArrow(loop_map, schema=LOOP_SCHEMA).collect()
         bc.destroy()
         self._bc = None
-        last = len(rows) - 1
-        for i, r in enumerate(rows):
-            state = np.frombuffer(r["pr"], dtype=np.float64).copy() if i == last else None
-            yield Superstep(
-                state, r["l1_delta"], r["dangling_mass_next"], r["wall_ms"], fused=True
-            )
+        final = np.frombuffer(rows[-1]["pr"], dtype=np.float64).copy()
+        wall_ms = (time.monotonic() - t0) * 1000.0 / len(rows)
+        for i, r in enumerate(rows, 1):
+            state = final if i == len(rows) else None
+            yield Superstep(state, r["l1_delta"], r["dangling_mass_next"], wall_ms)
 
     def to_frame(self, pr: np.ndarray) -> DataFrame:
         return self.spark.createDataFrame(

@@ -118,10 +118,10 @@ FUSED_CASES = ["converged", "fixed5", "personalized", "x0"]
 @pytest.mark.parametrize("case", FUSED_CASES)
 def test_fused_loop_bitwise_equals_per_superstep_jobs(spark, graph, tmp_path, case):
     """A one-bucket broadcast layout runs the whole loop in one task when no
-    checkpointer needs each superstep's state; a checkpointed run of the
-    same graph takes one job per superstep. Both run the same numpy update
-    in the same order, so deltas, dangling masses and ranks are
-    float64-equal, not just close."""
+    checkpointer needs each superstep's state (no job per superstep); a
+    checkpointed run of the same graph takes one job per superstep. Both
+    run the same numpy update in the same order, so deltas, dangling
+    masses and ranks are float64-equal, not just close."""
     from pyspark.sql import functions as F
 
     from pagerank_optimization_spark.checkpoint import CheckpointManager
@@ -144,8 +144,6 @@ def test_fused_loop_bitwise_equals_per_superstep_jobs(spark, graph, tmp_path, ca
         vertices, wedges, checkpointer=CheckpointManager(spark, str(tmp_path), "r"), **kw
     )
     assert fused.metrics and fused.metrics[0]["n_partitions"] == 1
-    assert all(m.get("fused") is True for m in fused.metrics)
-    assert not any("fused" in m for m in jobs.metrics)
     assert fused.deltas == jobs.deltas
     assert [m["dangling_mass_next"] for m in fused.metrics] == [
         m["dangling_mass_next"] for m in jobs.metrics
@@ -156,6 +154,8 @@ def test_fused_loop_bitwise_equals_per_superstep_jobs(spark, graph, tmp_path, ca
     assert (fused.iterations, fused.converged) == (jobs.iterations, jobs.converged)
     assert fused.converged == (case != "fixed5")
     assert _d(fused.ranks) == _d(jobs.ranks)
+    probe_kw = {k: v for k, v in kw.items() if k not in ("tol", "fixed_iters")}
+    assert _jobs_per_extra_superstep(spark, vertices, wedges, f"fused-{case}", **probe_kw) == 0
 
 
 def _job_count(spark, group: str, fn) -> int:
@@ -205,7 +205,6 @@ def test_multi_bucket_loop_starts_one_job_per_superstep(spark):
     kw = {"partitions": 4, "kernel": "csr-blocks", "csr_broadcast_frontier": True}
     res = pagerank(vertices, ring, fixed_iters=2, **kw)
     assert res.metrics[0]["n_partitions"] > 1
-    assert not any("fused" in m for m in res.metrics)
     pr = np.array([r[0] for r in res.ranks.select("pr").collect()])
     assert len(pr) == n and np.allclose(pr, 1.0 / n, rtol=0, atol=1e-15)
     assert _jobs_per_extra_superstep(spark, vertices, ring, "csr-p4", **kw) == 1
