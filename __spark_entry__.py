@@ -43,13 +43,12 @@ def _graph(spark: SparkSession, sf_dir: str):
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: converged PageRank (damping .85, dangling redistribution,
     L1 tol 1e-6) over the sf0.001 transcript graph; top-ranked entities.
-    Runs kernel="auto" — the measured dispatch (csr-blocks zero-exchange
-    broadcast-frontier below 1M vertices; above it, pure-JVM join-agg for
-    short fixed-k0 runs and the csr scale mode for converged runs, whose
-    one-time layout compile amortizes — rationale in
-    pagerank.resolve_auto_kernel, BENCH/sweep.csv, BENCH/converged_ab_4M.json);
-    at this graph size that resolves to csr-blocks, with join-agg as the
-    cross-check kernel (1e-12 differential, tests/test_pagerank_csr.py)."""
+    Runs kernel="auto" — the measured dispatch (zero-exchange csr-blocks
+    up to 1M vertices, join-agg above — rationale in
+    pagerank.resolve_auto_kernel, BENCH/sweep.csv,
+    BENCH/scale_mode_vm4_1100000.json); at this graph size that resolves
+    to csr-blocks, with join-agg as the cross-check kernel (1e-12
+    differential, tests/test_pagerank_csr.py)."""
     vertices, edges = _graph(spark, SF0001)
     res = pagerank(vertices, edges, tol=1e-6, max_iter=100, kernel="auto")
     return res.ranks.orderBy(F.desc("pr"), F.asc("entity")).limit(25)
@@ -78,23 +77,11 @@ def _q_pagerank_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pagerank_k5_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same query as graph_pagerank_k5 through the csr-blocks kernel
-    (broadcast-frontier mode at this |V|) — the vectorized kernel gets its
-    own driver-level value-hash check against the identical SQL twin."""
+    """Same query as graph_pagerank_k5 through the csr-blocks kernel — the
+    vectorized kernel gets its own driver-level value-hash check against
+    the identical SQL twin."""
     vertices, edges = _graph(spark, sf_dir)
     res = pagerank(vertices, edges, fixed_iters=5, kernel="csr-blocks")
-    return res.ranks.select("entity", F.round("pr", 8).alias("pr"))
-
-
-def _q_pagerank_k5_csr_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """csr-blocks kernel FORCED into scale mode (broadcast_frontier=False:
-    merge-join routes + frontier-sized shuffle — the physical plan a
-    10^9-vertex run uses) against the same SQL twin; the 100 TB code path
-    is oracle-checked, not just differential-tested."""
-    vertices, edges = _graph(spark, sf_dir)
-    res = pagerank(
-        vertices, edges, fixed_iters=5, kernel="csr-blocks", csr_broadcast_frontier=False
-    )
     return res.ranks.select("entity", F.round("pr", 8).alias("pr"))
 
 
@@ -1252,7 +1239,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_outdegree": _q_outdegree,
         "graph_pagerank_k5": _q_pagerank_k5,
         "graph_pagerank_k5_csr": _q_pagerank_k5_csr,
-        "graph_pagerank_k5_csr_scale": _q_pagerank_k5_csr_scale,
         "graph_ppr_k5": _q_ppr_k5,
         "graph_pagerank_weighted_k5": _q_pagerank_weighted_k5,
         "graph_pagerank_decay_k5": _q_pagerank_decay_k5,
@@ -1362,7 +1348,6 @@ def oracle_sql() -> dict[str, str]:
         "graph_outdegree": osql.outdegree_query_sql(),
         "graph_pagerank_k5": osql.pagerank_query_sql(k=5),
         "graph_pagerank_k5_csr": osql.pagerank_query_sql(k=5),
-        "graph_pagerank_k5_csr_scale": osql.pagerank_query_sql(k=5),
         "graph_ppr_k5": osql.ppr_query_sql(k=5, reset_prefix="tool:"),
         "graph_pagerank_weighted_k5": osql.pagerank_weighted_query_sql(k=5),
         "graph_pagerank_decay_k5": osql.pagerank_decay_query_sql(

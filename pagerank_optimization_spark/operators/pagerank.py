@@ -8,7 +8,7 @@ implement the full algorithm: damping 0.85, dangling-mass redistribution,
 L1-delta convergence (≤1e-6), float64 throughout (the reference's float32
 is why its own differential bar is only 1e-4, verify_op.c:11).
 
-ONE superstep loop (``_drive``) runs three kernels, differential-tested
+ONE superstep loop (``_drive``) runs two kernels, differential-tested
 against each other (mirroring the reference's REF/TST macro-dispatch
 harness, verify_op.c:196-239):
 
@@ -18,9 +18,10 @@ harness, verify_op.c:196-239):
   (tuned_variant_openmp.c:75-77). Edges are pre-repartitioned by the join
   key and cached, so per-superstep only the |V|-sized rank frontier
   shuffles — the big relation stays put (exchange reuse).
-- csr broadcast-frontier and csr scale (``kernel="csr-blocks"``) —
-  per-bucket CSR blocks (the tuned_variant_csr.c:179-229 counting-sort
-  layout rebuilt as numpy inside Arrow). See operators.pagerank_csr.
+- csr (``kernel="csr-blocks"``) — per-bucket CSR blocks (the
+  tuned_variant_csr.c:179-229 counting-sort layout rebuilt as numpy
+  inside Arrow) over a driver-held rank vector. See
+  operators.pagerank_csr.
 
 A kernel owns only its physical superstep: ``init(ranks) -> state``,
 ``step(state, dm) -> (state, l1_delta, next_dm)`` and
@@ -42,7 +43,7 @@ of the job(s) behind the records. The default (``_Kernel.supersteps``)
 runs one ``step`` job per record, so each record's state is live when it
 is yielded. A kernel may instead run the whole loop in one task when
 ``every_state`` is False, i.e. no checkpointer needs each superstep's
-state (the csr broadcast kernel does when its layout is one bucket): its
+state (the csr kernel does when its layout is one bucket): its
 records then carry the one job's time split evenly over them, and a
 state only on the last one. Either way the loop builds every metrics row
 itself from the records.
@@ -169,16 +170,22 @@ def _drive(
     for the uniform x0 (no job), the value the interrupted run recorded on
     resume (recomputing the sum could differ in the last ulp — sum order),
     else one scalar semi-join agg over the start vector. Every later
-    superstep's mass comes out of the kernel's step, alongside the delta."""
+    superstep's mass comes out of the kernel's step, alongside the delta.
+    A resumed run whose recorded delta already ``reached`` tol runs no
+    superstep: it returns the saved ranks, converged."""
     from pagerank_optimization_spark.session import iterative_conf
 
+    k = fixed_iters if fixed_iters is not None else max_iter
+    stop_tol = None if fixed_iters is not None else tol
     try:
-        start_iter, ranks, dm = 0, None, None
+        start_iter, ranks, dm, done = 0, None, None, False
         if checkpointer is not None:
             resumed = checkpointer.resume()
             if resumed is not None:
                 start_iter, ranks = resumed
-                dm = (checkpointer.last_metrics() or {}).get("dangling_mass_next")
+                last = checkpointer.last_metrics() or {}
+                dm = last.get("dangling_mass_next")
+                done = reached(last.get("l1_delta", float("inf")), stop_tol)
         if ranks is None:
             ranks = _start_vector(kern, x0)
             if ranks is None:
@@ -192,12 +199,14 @@ def _drive(
         dm = float(dm)
         state = kern.init(ranks)
 
-        k = fixed_iters if fixed_iters is not None else max_iter
-        stop_tol = None if fixed_iters is not None else tol
         deltas: list[float] = []
         metrics: list[dict[str, Any]] = []
         records = kern.supersteps(
-            state, dm, steps=k - start_iter, tol=stop_tol, every_state=checkpointer is not None
+            state,
+            dm,
+            steps=0 if done else k - start_iter,
+            tol=stop_tol,
+            every_state=checkpointer is not None,
         )
         # shuffle width aligned with the kernel's layout (r6): in-loop
         # groupBys land directly on the rank vector's partitioning
@@ -218,7 +227,7 @@ def _drive(
                 if checkpointer is not None:
                     checkpointer.save(it, kern.to_frame(state), row)
                 dm = rec.dangling_mass_next
-        converged = bool(deltas) and reached(deltas[-1], stop_tol)
+        converged = done or (bool(deltas) and reached(deltas[-1], stop_tol))
         ranks = kern.result(state)
     finally:
         kern.release()
@@ -388,37 +397,19 @@ class _JoinAgg(_Kernel):
                 df.unpersist()
 
 
-def resolve_auto_kernel(n_vertices: int, fixed_iters: int | None = None) -> str:
-    """kernel="auto" dispatch rule (measurements current as of round 5):
-    below BROADCAST_ROW_LIMIT vertices the csr-blocks broadcast-frontier
-    superstep is ONE zero-exchange Arrow job and wins on compute
-    throughput (2.36M vs 1.77M edges/s/superstep on the 1.9M-edge R-MAT
-    graph, BENCH/sweep.csv). Above it the choice is RUN-LENGTH dependent,
-    because the csr scale mode pays a one-time layout compile
-    (DISTRIBUTE_DATA, ~40-60s at 4M vertices) that only long runs
-    amortize:
-
-    - SHORT runs (``fixed_iters`` given — the reference's fixed-k0 mode,
-      typically k0=10): join-agg. Its superstep is all-JVM (no Python
-      worker fleet, no Arrow hop) and it starts compute immediately; at
-      k0=10 the compile would be ~half the wall. Compute-only margins
-      between the kernels are inside this box's noise envelope
-      (0.83-0.94× at 1.1M/4M vertices, BENCH/scale_kernel_probe_*.json).
-    - CONVERGED runs (``fixed_iters is None`` — iterate to tol, ~87
-      supersteps at 4M): csr-blocks scale mode. Measured amortized A/B at
-      4M vertices / 14.4M edges (interleaved min-of-2, COLD compile cache
-      each csr trial so the wall includes the full one-time compile): csr
-      219.4s vs join-agg 241.9s total wall (0.907×), 199.2s vs 235.6s
-      compute (0.846×) — csr won BOTH trials on both measures
-      (BENCH/converged_ab_4M.json). The compile is a fixed cost; the
-      per-superstep win compounds with run length, so the margin only
-      grows at 10^12-turn scale where convergence still takes ~80
-      supersteps but each superstep is minutes."""
+def resolve_auto_kernel(n_vertices: int) -> str:
+    """kernel="auto" dispatch rule: csr-blocks up to BROADCAST_ROW_LIMIT
+    vertices, join-agg above it. Below the limit the csr superstep is ONE
+    zero-exchange Arrow job and wins on compute throughput (2.36M vs 1.77M
+    edges/s/superstep on the 1.9M-edge R-MAT graph, BENCH/sweep.csv).
+    Above it join-agg keeps the rank vector in the JVM instead of on the
+    driver and pays no layout compile. At 1.1M vertices the csr kernel
+    still led join-agg (BENCH/scale_mode_vm4_1100000.json,
+    BENCH/AB_NOTES.md), so the limit is conservative; moving it needs
+    runs at larger sizes."""
     from pagerank_optimization_spark.operators.pagerank_csr import BROADCAST_ROW_LIMIT
 
-    if n_vertices <= BROADCAST_ROW_LIMIT:
-        return "csr-blocks"
-    return "join-agg" if fixed_iters is not None else "csr-blocks"
+    return "csr-blocks" if n_vertices <= BROADCAST_ROW_LIMIT else "join-agg"
 
 
 def pagerank(
@@ -436,7 +427,6 @@ def pagerank(
     reset: DataFrame | None = None,
     x0: DataFrame | None = None,
     checkpointer=None,
-    csr_broadcast_frontier: bool | None = None,
 ) -> PageRankResult:
     """Damped PageRank with dangling redistribution over weighted edges
     ``(src, dst, weight)`` (weight = 1/outdeg(src), column-stochastic).
@@ -446,10 +436,9 @@ def pagerank(
     ``fixed_iters`` runs exactly K supersteps (oracle mode — matches the
     reference's fixed k0, tuned_variant_baseline.c:120); otherwise iterate
     to L1 delta ≤ tol. ``kernel`` ∈ {"join-agg", "csr-blocks", "auto"} —
-    "auto" picks by |V| and run length via resolve_auto_kernel (measured:
-    zero-exchange csr below BROADCAST_ROW_LIMIT; above it, pure-JVM
-    join-agg for short fixed-k0 runs, csr scale mode for converged runs —
-    the one-time layout compile amortizes, BENCH/converged_ab_4M.json).
+    "auto" picks by |V| via resolve_auto_kernel: the zero-exchange csr
+    kernel up to BROADCAST_ROW_LIMIT vertices, join-agg above it. The csr
+    kernel keeps the rank vector on the driver at any |V|.
 
     ``hub_split_degree``: "auto" or None (join-agg kernel only). "auto"
     probes the OUT-degree histogram once and splits hub sources' edge
@@ -476,12 +465,8 @@ def pagerank(
     cut iterations-to-tol by an order of magnitude on small deltas
     (tested); supported by every kernel. A ``checkpointer`` resume takes
     precedence — resume is the bitwise mid-run form, warm start the
-    cross-run form.
-
-    ``csr_broadcast_frontier`` (csr-blocks kernel only): None picks the
-    frontier strategy by |V| (broadcast below BROADCAST_ROW_LIMIT, the
-    merge-join scale mode above); True/False forces a mode — used to run
-    the scale mode through the full correctness harness on small graphs.
+    cross-run form. Resuming a run whose last saved superstep had
+    already converged runs no superstep and returns the saved ranks.
     """
     if hub_split_degree not in ("auto", None):
         raise ValueError(f"hub_split_degree must be 'auto' or None, got {hub_split_degree!r}")
@@ -498,7 +483,7 @@ def pagerank(
         # full count is a real job, and the csr path recounts exactly
         # anyway inside its vid assignment (round-3 VERDICT nit)
         probe = vertices.limit(BROADCAST_ROW_LIMIT + 1).count()
-        kernel = resolve_auto_kernel(probe, fixed_iters)
+        kernel = resolve_auto_kernel(probe)
     if kernel == "csr-blocks":
         from pagerank_optimization_spark.operators.pagerank_csr import csr_kernel
 
@@ -509,7 +494,6 @@ def pagerank(
             partitions=partitions,
             damping=damping,
             reset=reset,
-            broadcast_frontier=csr_broadcast_frontier,
         )
     elif kernel == "join-agg":
         kern = _JoinAgg(

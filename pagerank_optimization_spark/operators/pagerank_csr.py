@@ -7,11 +7,10 @@ segment (tuned_variant_csr.c:72-84), then vectorize the gather with AVX2
 `_mm256_i32gather_ps` (tuned_variant_simd.c:297-300) and reduce each
 segment with an 8-lane horizontal sum (tuned_variant_simd.c:244-269).
 
-The Spark-native rebuild of that layout — DESTINATION-bucketed and FUSED,
-so each superstep is ONE job with at most ONE routing shuffle. This module
-holds two of the three kernels the one superstep loop
-(operators.pagerank._drive) runs: ``_BroadcastFrontier`` and ``_Scale``,
-both over the layout ``_compile`` builds once and caches:
+The Spark-native rebuild of that layout is DESTINATION-bucketed and FUSED.
+This module holds the csr kernel (``_Csr``) that the one superstep loop
+(operators.pagerank._drive) runs over the layout ``_compile`` builds once
+and caches:
 
 - vertex ids are dense 0..n-1, so bucket membership is pure arithmetic:
   bucket b owns vids {b, b+P, b+2P, ...} at local offset vid // P. No
@@ -21,13 +20,8 @@ both over the layout ``_compile`` builds once and caches:
   deterministic (dst, src) lexsort (the counting sort of
   tuned_variant_csr.c:179-229 with a fixed total order, so a rebuilt
   block is bit-identical regardless of shuffle arrival order), indptr
-  over the dst runs, sources localized to dense gather slots;
-- in SCALE mode a static ``routes`` table (vid → bucket, slot, tag)
-  carries BOTH the gather routes (tag=1: src rank → every bucket its
-  out-edges feed) and the identity routes (tag=0: each vertex's own rank
-  → its home bucket, for the delta and the base term). Blocks (+ routes
-  when built) are the DISTRIBUTE_DATA moment
-  (tuned_variant_baseline.c:247-324);
+  over the dst runs, sources localized to dense gather slots. The blocks
+  are the DISTRIBUTE_DATA moment (tuned_variant_baseline.c:247-324);
 - per superstep the kernel does the whole update INSIDE the Arrow batch:
   gather x by source (numpy fancy indexing — the i32gather analog for a
   full batch), CSR segment sum via np.add.reduceat
@@ -40,45 +34,30 @@ both over the layout ``_compile`` builds once and caches:
   vector, no join against a flagged vertex table, no second aggregation
   shuffle.
 
-Per-superstep plan, frontier-broadcast mode (n ≤ BROADCAST_ROW_LIMIT, r6
-form): the driver-held rank vector crosses as ONE ``sc.broadcast`` numpy
-array and the superstep is a single ``mapInArrow`` over the static
-cached blocks⊕aux table — no routes table, no join, no cogroup, ZERO
+Per-superstep plan (r6 form): the driver-held rank vector crosses as ONE
+``sc.broadcast`` numpy array and the superstep is a single ``mapInArrow``
+over the static cached blocks⊕aux table — no join, no cogroup, ZERO
 shuffle exchanges (plan: InMemoryScan → MapInArrow → ArrowCollect; the
 round-≤5 LocalRelation + broadcast-join + cogroup form measured 368 ms
 per superstep at sf0.1, 165 ms of it the per-superstep LocalRelation
-build — the map form runs ~160 ms). Scale mode (large n): ranks
-merge-join the vid-partitioned routes, the routed frontier exchanges
-into its dst buckets — the frontier-sized shuffles a distributed
-PageRank fundamentally pays, never a full-vector broadcast. The
-join-agg kernel runs three joins and two aggregations through the JVM
-per superstep; at scale both are shuffle-bound by the frontier, and the
-CSR path does its math vectorized.
+build — the map form runs ~160 ms). ``kernel="auto"`` sends graphs above
+BROADCAST_ROW_LIMIT vertices to join-agg, which keeps the rank vector in
+the JVM; an explicit ``kernel="csr-blocks"`` keeps it on the driver at
+any |V|.
 
-Record iterator (the contract of operators.pagerank._drive): both csr
-kernels inherit the default ``supersteps`` — one ``step`` job per
-record. ``_BroadcastFrontier`` overrides it when its layout has ONE
-bucket (P=1) and the loop needs no intermediate state (no checkpointer):
-the start vector crosses once as an ``sc.broadcast``, ONE ``mapInArrow``
-task loops ``bucket_update`` → ``loop_scalars`` to ``steps`` or to the
-shared ``reached`` rule, and returns the final vector plus one
-(l1_delta, dangling_mass_next) row per superstep, which become the
-``Superstep`` records; the job's driver time is split evenly over their
-``wall_ms``. At P=1 a superstep's numpy work is
-~0.1 ms and a job's dispatch ~300 ms, so this removes nearly all of a
+Record iterator (the contract of operators.pagerank._drive): the kernel
+inherits the default ``supersteps`` — one ``step`` job per record — and
+overrides it when its layout has ONE bucket (P=1) and the loop needs no
+intermediate state (no checkpointer): the start vector crosses once as
+an ``sc.broadcast``, ONE ``mapInArrow`` task loops ``bucket_update`` →
+``loop_scalars`` to ``steps`` or to the shared ``reached`` rule, and
+returns the final vector plus one (l1_delta, dangling_mass_next) row per
+superstep, which become the ``Superstep`` records; the job's driver time
+is split evenly over their ``wall_ms``. At P=1 a superstep's numpy work
+is ~0.1 ms and a job's dispatch ~300 ms, so this removes nearly all of a
 converged run's loop time. The per-bucket math is the one
-``bucket_update`` function in every path (scale cogroup, broadcast map,
-fused loop), so the fused loop is bitwise-equal to per-superstep jobs.
-
-Scale-mode history: with the round-≤3 ``applyInPandas`` kernel the routed
-frontier's pandas materialization dominated (measured 3.3× BEHIND
-join-agg at 1.1M vertices — at 2 FLOPs/edge the boundary cost dwarfed the
-vectorization win, BENCH/sweep.csv r3). Round 4 moved the cogroup to
-``applyInArrow`` (columns stay Arrow buffers both directions, numpy views
-on top); the same probe now measures the scale mode 1.2× AHEAD of
-join-agg (16.1s vs 19.3s compute at 1.1M vertices / 3.97M edges) and
-1.07× ahead at 4M vertices / 14.4M edges (24.6s vs 26.3s) —
-BENCH/scale_kernel_probe_*.json, interleaved min-of-3.
+``bucket_update`` function in both paths (per-superstep map, fused
+loop), so the fused loop is bitwise-equal to per-superstep jobs.
 
 No per-row Python anywhere (input_hint requirement): everything crossing
 the JVM↔Python boundary is an Arrow batch, everything inside is numpy.
@@ -95,7 +74,7 @@ import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -115,9 +94,9 @@ BLOCK_SCHEMA = T.StructType(
         T.StructField("src_vids", T.BinaryType(), False),   # int64 GLOBAL vids of the
                                                             # distinct sources (ascending —
                                                             # the np.unique slot order); the
-                                                            # broadcast-frontier kernel
-                                                            # gathers pr[src_vids] directly
-        T.StructField("indptr", T.BinaryType(), False),     # int64 CSR offsets
+                                                            # kernel gathers pr[src_vids]
+                                                            # directly
+    T.StructField("indptr", T.BinaryType(), False),     # int64 CSR offsets
         T.StructField("dst_local", T.BinaryType(), False),  # int64 bucket offsets of dsts
         T.StructField("weight", T.BinaryType(), False),     # float64 edge weights
     ]
@@ -169,8 +148,8 @@ def bucket_update(
     dm: float,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """The per-bucket superstep math, the ONE copy every csr path runs
-    (scale cogroup, broadcast map, fused broadcast loop), so they agree
-    bitwise by construction. ``old``: the bucket's rank slice in local
+    (per-superstep map, fused loop), so they agree bitwise by
+    construction. ``old``: the bucket's rank slice in local
     (vid // P) order; ``x``: the ranks of the bucket's distinct sources in
     gather-slot order; ``blk``: the decoded CSR arrays (None: no in-edges).
     Gather by source, segment-sum over the lexsorted CSR
@@ -214,68 +193,17 @@ def _decode_row(tb, i: int) -> tuple[dict | None, np.ndarray, np.ndarray | None]
     return blk, mask, None if ra is None else np.frombuffer(ra, dtype=np.float64)
 
 
-def _make_arrow_kernel(n_: int, P: int, d_: float, dm: float):
-    """Scale-mode superstep as a cogrouped ``applyInArrow`` function: the
-    routed frontier's columns come off the exchange as Arrow buffers and
-    the state goes back as Arrow buffers — no pandas Block materialization
-    on either side of the JVM↔Python boundary (round-3 measurement: that materialization, not
-    the shuffle, dominated the scale mode's per-superstep cost). The math
-    is ``bucket_update``; the routed tag=0 rows carry the old slice and the
-    tag=1 rows the gather slots."""
-    import pyarrow as pa
-
-    def fused_arrow(key, blk: "pa.Table", routed_tb: "pa.Table") -> "pa.Table":
-        b = int(key[0].as_py())
-        m = _bucket_size(n_, b, P)
-        if m == 0:
-            return pa.table(
-                {
-                    "vid": pa.array([], type=pa.int64()),
-                    "pr": pa.array([], type=pa.float64()),
-                    "abs_delta": pa.array([], type=pa.float64()),
-                    "dang_pr": pa.array([], type=pa.float64()),
-                }
-            )
-        pos = routed_tb["pos"].combine_chunks().to_numpy(zero_copy_only=False)
-        pr = routed_tb["pr"].combine_chunks().to_numpy(zero_copy_only=False)
-        tag = routed_tb["tag"].combine_chunks().to_numpy(zero_copy_only=False)
-        own = tag == 0
-        old = np.zeros(m, dtype=np.float64)
-        old[pos[own]] = pr[own]
-        csr, x, reset_arr = None, None, None
-        if blk.num_rows > 0:
-            csr, mask, reset_arr = _decode_row(blk, 0)
-            if csr is not None:
-                x = np.zeros(csr["n_src"], dtype=np.float64)
-                x[pos[~own]] = pr[~own]
-        else:  # bucket with vertices but no aux row cannot happen; guard
-            mask = np.zeros(m, dtype=bool)
-        new, abs_delta, dang_pr = bucket_update(old, x, csr, mask, reset_arr, n_, d_, dm)
-        return pa.table(
-            {
-                "vid": pa.array(b + P * np.arange(m, dtype=np.int64)),
-                "pr": pa.array(new),
-                "abs_delta": pa.array(abs_delta),
-                "dang_pr": pa.array(dang_pr),
-            }
-        )
-
-    return fused_arrow
-
-
 def _make_arrow_map_kernel(n_: int, P: int, d_: float, dm: float, bc):
-    """Broadcast-frontier superstep as ONE ``mapInArrow`` over the static
-    blocks⊕aux table (r6 restructure). The round-≤5 form broadcast-JOINED a
-    per-superstep LocalRelation of the rank vector onto a routes table and
-    cogrouped — measured at sf0.1 the LocalRelation build alone was 165 ms
-    of the 368 ms superstep, all of it spent re-shipping and re-planning
-    data the driver already held. Here the frontier crosses once per
-    superstep as an ``sc.broadcast`` numpy array (bounded: this mode is
-    gated on n ≤ BROADCAST_ROW_LIMIT), the kernel gathers pr[src_vids]
+    """One superstep as ONE ``mapInArrow`` over the static blocks⊕aux
+    table (r6 restructure). The round-≤5 form broadcast-JOINED a
+    per-superstep LocalRelation of the rank vector and cogrouped —
+    measured at sf0.1 the LocalRelation build alone was 165 ms of the
+    368 ms superstep, all of it spent re-shipping and re-planning data the
+    driver already held. Here the rank vector crosses once per superstep
+    as an ``sc.broadcast`` numpy array, the kernel gathers pr[src_vids]
     directly by GLOBAL vid, and the old rank for the delta is pr[b::P] —
-    no routes table, no join, no cogroup, no per-superstep exchange at
-    all. The math is ``bucket_update``, the same function the cogroup form
-    runs, so results are bitwise-unchanged across modes."""
+    no join, no cogroup, no per-superstep exchange at all. The math is
+    ``bucket_update``."""
     import pyarrow as pa
 
     def fused_map(batches):
@@ -386,60 +314,6 @@ def build_csr_blocks(vid_edges: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def build_routes(
-    vid_edges: DataFrame,
-    vids: DataFrame,
-    n_buckets: int,
-    partitions: int,
-    *,
-    bucket_layout: bool,
-) -> DataFrame:
-    """Static routing table (vid, bucket, pos, tag):
-
-    - tag=1 gather routes: source vid → every dst bucket it feeds, pos =
-      the bucket-local gather slot (rank of src among the bucket's
-      distinct sources — the same ascending order np.unique gives the
-      block's slot space);
-    - tag=0 identity routes: each vertex → its home bucket (vid % P) at
-      its dense offset (vid // P) — carries the old rank for the delta
-      and guarantees every vertex appears in its bucket's output.
-
-    ``bucket_layout=True`` (the broadcast-frontier mode, n ≤
-    BROADCAST_ROW_LIMIT): partition by bucket so the per-superstep
-    BroadcastHashJoin output feeds the cogroup with ZERO exchanges.
-    ``bucket_layout=False`` (scale mode): partition by vid for the
-    co-partitioned merge join against the canonical rank layout.
-
-    Size: |V| identity rows + one row per distinct (src, dst-bucket)
-    pair ≤ min(nnz, |V|·P) — the per-superstep shuffle volume, the same
-    frontier-replication bound a vertex-cut graph system pays."""
-    P = n_buckets
-    gather = (
-        vid_edges.select(
-            F.col("src").alias("vid"),
-            F.pmod(F.col("dst"), F.lit(P)).cast("int").alias("bucket"),
-        )
-        .distinct()
-    )
-    w = W.partitionBy("bucket").orderBy("vid")
-    gather = gather.select(
-        "vid",
-        "bucket",
-        (F.row_number().over(w) - 1).cast("long").alias("pos"),
-        F.lit(1).cast("tinyint").alias("tag"),
-    )
-    ident = vids.select(
-        "vid",
-        F.pmod(F.col("vid"), F.lit(P)).cast("int").alias("bucket"),
-        ((F.col("vid") - F.pmod(F.col("vid"), F.lit(P))) / F.lit(P)).cast("long").alias("pos"),
-        F.lit(0).cast("tinyint").alias("tag"),
-    )
-    routes = gather.unionByName(ident)
-    if bucket_layout:
-        return routes.repartition(P, "bucket")
-    return routes.repartition(partitions, "vid").sortWithinPartitions("vid")
-
-
 def build_aux(
     vids: DataFrame, dangling_vids: DataFrame, reset: DataFrame | None, n: int, n_buckets: int
 ) -> DataFrame:
@@ -510,9 +384,8 @@ def _compile(
     edges: DataFrame,
     id_col: str,
     partitions: int,
-    frontier_override: bool | None = None,
 ) -> dict:
-    key = (id(vertices._jdf), id(edges._jdf), id_col, partitions, frontier_override)
+    key = (id(vertices._jdf), id(edges._jdf), id_col, partitions)
     ent = _COMPILE_CACHE.get(key)
     if ent is not None:
         _COMPILE_CACHE.move_to_end(key)
@@ -543,7 +416,7 @@ def _compile(
         edges.join(hint(src_ids), "src")
         .join(hint(dst_ids), "dst")
         .select(F.col("src_vid").alias("src"), F.col("dst_vid").alias("dst"), "weight")
-        .persist()  # read 3× below (blocks, routes, dangling) — translate once
+        .persist()  # read below by the count, blocks and dangling — translate once
     )
     nnz = vid_edges.count()
 
@@ -566,32 +439,12 @@ def _compile(
         vid_edges.select(F.col("src").alias("vid")).distinct(), "vid", "left_anti"
     )
 
-    # DISTRIBUTE_DATA: blocks ⊕ aux (≤P rows), routes — compiled once.
-    # broadcast_frontier: below the row limit the per-superstep rank vector
-    # is broadcast (zero-exchange supersteps); above it, co-partitioned
-    # shuffles — a full-vector broadcast at 10^9 vertices is a driver OOM.
-    # An explicit override (pagerank(csr_broadcast_frontier=...)) forces
-    # either mode — the scale mode is testable on small graphs this way
-    # (the reference rig runs EVERY variant through the same harness,
-    # verify_op.c:196-254).
-    if frontier_override is None:
-        broadcast_frontier = n <= BROADCAST_ROW_LIMIT
-    else:
-        broadcast_frontier = bool(frontier_override)
+    # DISTRIBUTE_DATA: blocks ⊕ aux (≤P rows) — compiled once.
     blocks = build_csr_blocks(vid_edges, partitions)
     aux = build_aux(vids, dangling_vids, None, n, partitions)
     blocks_aux = (
         aux.join(blocks, "bucket", "left").repartition(partitions, "bucket").persist()
     )
-    # routes only exist in SCALE mode (r6): the broadcast-frontier superstep
-    # gathers pr[src_vids] from the broadcast array inside the kernel, so
-    # the gather/identity routing table — and its setup window job — is
-    # gone entirely in that mode.
-    routes = None
-    if not broadcast_frontier:
-        routes = build_routes(
-            vid_edges, vids, partitions, partitions, bucket_layout=False
-        ).persist()
     # force the compiled layout NOW: DISTRIBUTE_DATA belongs to setup, not
     # to the first timed superstep (the reference's timer starts after
     # distribution, timer_op.c; join-agg's setup likewise materializes its
@@ -599,19 +452,16 @@ def _compile(
     # one-time compile inside superstep 0's wall at 4M vertices — same
     # total work, asymmetric attribution between kernels.
     blocks_aux.count()
-    if routes is not None:
-        routes.count()
     # ≤P cached rows — a scalar agg over the just-materialized aux cache
     n_dangling = int(
         blocks_aux.agg(F.coalesce(F.sum("n_dang"), F.lit(0))).collect()[0][0]
     )
 
-    def release(_frames=(blocks_aux, routes, vid_edges)):
+    def release(_frames=(blocks_aux, vid_edges)):
         # ids is localCheckpointed, not persisted: its blocks are freed by
         # the ContextCleaner once the evicted entry's references are GC'd
         for df in _frames:
-            if df is not None:
-                df.unpersist()
+            df.unpersist()
 
     ent = {
         "ids": ids,
@@ -621,10 +471,8 @@ def _compile(
         "vids": vids,
         "dangling_vids": dangling_vids,
         "n_dangling": n_dangling,
-        "broadcast_frontier": broadcast_frontier,
         "blocks": blocks,
         "blocks_aux": blocks_aux,
-        "routes": routes,
         "release": release,
         # strong refs keep the id()-based key stable for the entry's lifetime
         "_vertices": vertices,
@@ -637,18 +485,24 @@ def _compile(
     return ent
 
 
-
-
 class _Csr(_Kernel):
-    """Key space shared by both csr kernels: dense vids 0..n-1 from the
-    compiled layout; ranks map back to entities once, at the end. The
-    compiled layout stays cached across calls (released on cache
+    """The csr kernel, in dense-vid key space 0..n-1 from the compiled
+    layout; ranks map back to entities once, at the end. The state is the
+    dense vid-indexed numpy rank vector, held on the driver. Each
+    superstep ships it as one ``sc.broadcast`` and runs ONE ``mapInArrow``
+    job over the static cached blocks⊕aux table — no join, no cogroup, no
+    exchange (plan: InMemoryScan → MapInArrow → ArrowCollect; see
+    _make_arrow_map_kernel). The loop-carried scalars reduce in FIXED
+    vid-sorted numpy order.
+
+    The compiled layout stays cached across calls (released on cache
     eviction / clear_compile_cache); only per-call extras are released
     here. ``reset`` is mapped into vid space, normalized, and baked into
     the per-bucket aux arrays — personalized runs rebuild only that aux
-    slice, the blocks and routes come from the compiled cache untouched."""
+    slice, the blocks come from the compiled cache untouched."""
 
     key = "vid"
+    _bc = None
 
     def __init__(self, ent: dict, *, id_col: str, damping: float, reset: DataFrame | None):
         self.id_col, self.damping = id_col, float(damping)
@@ -656,7 +510,7 @@ class _Csr(_Kernel):
         self.spark = self.ids.sparkSession
         self.partitions = ent["partitions"]  # effective bucket count (≤ requested)
         self.vertices, self.dangling = ent["vids"], ent["dangling_vids"]
-        self.n_dangling, self.routes = ent["n_dangling"], ent["routes"]
+        self.n_dangling = ent["n_dangling"]
         self.blocks_aux, self.reset, self._local = ent["blocks_aux"], None, []
         if reset is not None:
             self.reset = _teleport(self, reset).persist()
@@ -684,22 +538,6 @@ class _Csr(_Kernel):
             .select(F.col("entity").alias(self.id_col), "pr")
             .localCheckpoint(eager=True)
         )
-
-    def release(self) -> None:
-        for df in self._local:
-            df.unpersist()
-
-
-class _BroadcastFrontier(_Csr):
-    """n ≤ BROADCAST_ROW_LIMIT: the frontier fits on the driver BY MODE
-    DEFINITION (that is what made broadcasting it safe), so the state is a
-    dense vid-indexed numpy array. Each superstep ships it as one
-    ``sc.broadcast`` and runs ONE ``mapInArrow`` job over the static cached
-    blocks⊕aux table — no join, no cogroup, no exchange (plan:
-    InMemoryScan → MapInArrow → ArrowCollect; see _make_arrow_map_kernel).
-    The loop-carried scalars reduce in FIXED vid-sorted numpy order."""
-
-    _bc = None
 
     def init(self, ranks: DataFrame | None) -> np.ndarray:
         if ranks is None:
@@ -754,53 +592,8 @@ class _BroadcastFrontier(_Csr):
     def release(self) -> None:
         if self._bc is not None:
             self._bc.destroy()
-        super().release()
-
-
-class _Scale(_Csr):
-    """Large n: ranks merge-join the vid-partitioned routes and the routed
-    frontier exchanges into its dst buckets — the frontier-sized shuffles a
-    distributed PageRank fundamentally pays; never a full-vector
-    broadcast."""
-
-    def init(self, ranks: DataFrame | None) -> DataFrame:
-        if ranks is None:
-            ranks = self.vertices.withColumn("pr", F.lit(1.0 / self.n))
-        return ranks.localCheckpoint(eager=True)
-
-    def step(self, ranks: DataFrame, dm: float):
-        P = self.partitions
-        fused_arrow = _make_arrow_kernel(int(self.n), P, self.damping, dm)
-        routed = self.routes.hint("merge").join(ranks, "vid")
-        state = (
-            self.blocks_aux.groupBy("bucket")
-            .cogroup(routed.select("bucket", "pos", "pr", "tag").groupBy("bucket"))
-            .applyInArrow(fused_arrow, schema=STATE_SCHEMA)
-        )
-        state = state.localCheckpoint(eager=False)
-        # ONE scalar job materializes the checkpoint AND reads the
-        # loop-carried scalars (no join against the previous vector).
-        # Reduction is per-bucket first (each bucket's rows are one
-        # contiguous cogroup output chunk, so the partial agg accumulates
-        # them in the kernel's vid order), then the ≤P bucket scalars sum in
-        # FIXED bucket order on the driver — the loop-carried scalars are
-        # bitwise-deterministic, like the broadcast mode's vid-sorted numpy
-        # reduction (resume must be bit-identical to an uninterrupted run).
-        brows = (
-            state.groupBy(F.pmod(F.col("vid"), F.lit(P)).cast("int").alias("b"))
-            .agg(
-                F.sum("abs_delta").alias("bd"),
-                F.coalesce(F.sum("dang_pr"), F.lit(0.0)).alias("bm"),
-            )
-            .collect()
-        )
-        brows.sort(key=lambda r: r["b"])
-        delta = float(np.sum(np.array([r["bd"] for r in brows], dtype=np.float64)))
-        next_dm = float(np.sum(np.array([r["bm"] for r in brows], dtype=np.float64)))
-        return state.select("vid", "pr"), delta, next_dm
-
-    def to_frame(self, ranks: DataFrame) -> DataFrame:
-        return ranks
+        for df in self._local:
+            df.unpersist()
 
 
 def csr_kernel(
@@ -811,18 +604,13 @@ def csr_kernel(
     partitions: int,
     damping: float,
     reset: DataFrame | None = None,
-    broadcast_frontier: bool | None = None,
 ) -> _Csr:
     """The csr-blocks kernel for pagerank(kernel='csr-blocks'): compiles
-    (or fetches) the layout and picks the frontier mode. The ranks it
-    yields are column-identical to the join-agg kernel's (cross-kernel
-    differential bar: 1e-12, SURVEY.md §5 item 3).
-    ``broadcast_frontier``: None (default) picks by |V| vs
-    BROADCAST_ROW_LIMIT; True/False forces broadcast-frontier or scale
-    (merge-join + frontier shuffle) mode regardless of size — both modes
-    run through the same correctness harness.
+    (or fetches) the layout. The ranks it yields are column-identical to
+    the join-agg kernel's (cross-kernel differential bar: 1e-12, SURVEY.md
+    §5 item 3).
 
-    Cache lifetime: the compiled layout (blocks, routes, translated edges,
+    Cache lifetime: the compiled layout (blocks, translated edges,
     id map) stays persisted across calls in a bounded LRU
     (_COMPILE_CACHE, cap 2) keyed by the exact input DataFrames —
     repeated runs on the same graph skip DISTRIBUTE_DATA, mirroring the
@@ -830,6 +618,6 @@ def csr_kernel(
     Library callers done with a large graph should call
     ``clear_compile_cache()`` to free the pinned executor storage
     immediately; otherwise it frees on LRU eviction or session stop."""
-    ent = _compile(vertices, edges, id_col, partitions, broadcast_frontier)
-    cls = _BroadcastFrontier if ent["broadcast_frontier"] else _Scale
-    return cls(ent, id_col=id_col, damping=damping, reset=reset)
+    return _Csr(
+        _compile(vertices, edges, id_col, partitions), id_col=id_col, damping=damping, reset=reset
+    )

@@ -61,7 +61,7 @@ def test_md5_pivot_selection_is_portable(graph):
 def test_nonzero_and_sources_excluded(graph):
     """A Zipf-skewed transcript graph must have real brokers (bc > 0
     somewhere), and a vertex's own-source dependency never self-counts:
-    bc is 0 on vertices nothing routes through."""
+    bc is 0 on vertices no shortest path passes through."""
     vertices, edges, o_vertices, o_edges = graph
     srcs = _md5_pivots(o_vertices, 16)
     want = oracle.betweenness_sampled(o_vertices, o_edges, srcs, 4)

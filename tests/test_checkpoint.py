@@ -33,8 +33,7 @@ def _d(df):
 
 KERNELS = {
     "join-agg": {"kernel": "join-agg"},
-    "csr-broadcast": {"kernel": "csr-blocks", "csr_broadcast_frontier": True},
-    "csr-scale": {"kernel": "csr-blocks", "csr_broadcast_frontier": False},
+    "csr-broadcast": {"kernel": "csr-blocks"},
 }
 
 
@@ -54,6 +53,20 @@ def test_kill_resume_bitwise_equal(spark, graph, ckpt_root, kern):
     got = _d(res.ranks)
     assert res.iterations == 6
     assert got == want  # exact float64 equality, not allclose
+
+
+@pytest.mark.parametrize("kern", ["join-agg", "csr-broadcast"])
+def test_resume_after_convergence_runs_no_superstep(spark, graph, ckpt_root, kern):
+    """A converged checkpointed run resumed on the same root (the process
+    died after the last save) runs no further superstep: same iteration
+    count, converged, ranks bitwise-equal to the finished run."""
+    vertices, wedges = graph
+    kw = dict(KERNELS[kern], tol=1e-4, partitions=4)
+    first = pagerank(vertices, wedges, checkpointer=CheckpointManager(spark, ckpt_root, "c"), **kw)
+    assert first.converged
+    again = pagerank(vertices, wedges, checkpointer=CheckpointManager(spark, ckpt_root, "c"), **kw)
+    assert (again.iterations, again.converged, again.deltas) == (first.iterations, True, [])
+    assert _d(again.ranks) == _d(first.ranks)
 
 
 def test_metrics_and_lineage_written(spark, graph, ckpt_root):

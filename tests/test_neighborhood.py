@@ -67,7 +67,7 @@ def test_hyperball_tracks_exact(graph, salt):
     """p=8 HLL → ~6.5% typical error; assert mean relative error < 0.1
     and max < 0.35 against the exact reach at r=3, salted merge included
     (salting must not change the estimate: max is associative-commutative
-    and monotonically_increasing_id only routes WHICH pre-group merges)."""
+    and monotonically_increasing_id only picks WHICH pre-group merges)."""
     vertices, wedges, o_vertices, o_edges = graph
     exact = py_reach(o_vertices, o_edges, 3)
     est = {

@@ -95,13 +95,9 @@ def test_resolve_auto_kernel_crossover():
 
     assert resolve_auto_kernel(10) == "csr-blocks"
     assert resolve_auto_kernel(BROADCAST_ROW_LIMIT) == "csr-blocks"
-    # above the broadcast limit the choice is run-length dependent: short
-    # fixed-k0 runs never amortize the csr layout compile (join-agg);
-    # converged runs do and csr won the amortized A/B on both wall and
-    # compute (BENCH/converged_ab_4M.json)
-    assert resolve_auto_kernel(BROADCAST_ROW_LIMIT + 1, fixed_iters=10) == "join-agg"
-    assert resolve_auto_kernel(BROADCAST_ROW_LIMIT + 1) == "csr-blocks"
-    assert resolve_auto_kernel(BROADCAST_ROW_LIMIT + 1, fixed_iters=None) == "csr-blocks"
+    # above the broadcast limit join-agg keeps the rank vector in the JVM
+    # and pays no layout compile (BENCH/scale_mode_vm4_1100000.json)
+    assert resolve_auto_kernel(BROADCAST_ROW_LIMIT + 1) == "join-agg"
 
 
 def test_kernel_auto_end_to_end(spark):

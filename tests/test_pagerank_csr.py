@@ -1,13 +1,7 @@
 """Cross-kernel differential: csr-blocks (vectorized Arrow/numpy) vs
 join-agg (pure DataFrame) — the reference's REF/TST variant harness
 (verify_op.c:196-254) with a deterministic input and a 1e-12 bar
-(SURVEY.md §5 item 3).
-
-Every test runs the CSR kernel in BOTH frontier modes: broadcast
-(n ≤ BROADCAST_ROW_LIMIT zero-exchange path) and scale
-(broadcast_frontier=False — the merge-join + frontier-shuffle path that
-engages above 1M vertices on a cluster), so the 100 TB code path has the
-same correctness signal as the small-graph one."""
+(SURVEY.md §5 item 3)."""
 
 import numpy as np
 import pytest
@@ -16,9 +10,6 @@ from pagerank_optimization_spark.operators.graph_build import build_graph
 from pagerank_optimization_spark.operators.pagerank import pagerank
 from pagerank_optimization_spark.sources.transcripts import synthesize_transcripts
 from tests import oracle
-
-MODES = [True, False]  # broadcast-frontier / scale (merge-join) mode
-
 
 @pytest.fixture(scope="module")
 def graph(spark):
@@ -34,28 +25,18 @@ def _d(df):
     return {r[0]: r[1] for r in df.collect()}
 
 
-@pytest.mark.parametrize("bf", MODES)
-def test_csr_kernel_matches_joinagg_fixed_k(graph, bf):
+def test_csr_kernel_matches_joinagg_fixed_k(graph):
     vertices, wedges, _, _ = graph
     a = _d(pagerank(vertices, wedges, fixed_iters=4, partitions=8, kernel="join-agg").ranks)
-    b = _d(
-        pagerank(
-            vertices, wedges, fixed_iters=4, partitions=8, kernel="csr-blocks",
-            csr_broadcast_frontier=bf,
-        ).ranks
-    )
+    b = _d(pagerank(vertices, wedges, fixed_iters=4, partitions=8, kernel="csr-blocks").ranks)
     assert set(a) == set(b)
     ks = sorted(a)
     assert np.allclose([a[k] for k in ks], [b[k] for k in ks], atol=1e-12)
 
 
-@pytest.mark.parametrize("bf", MODES)
-def test_csr_kernel_matches_numpy_converged(graph, bf):
+def test_csr_kernel_matches_numpy_converged(graph):
     vertices, wedges, o_vertices, o_edges = graph
-    res = pagerank(
-        vertices, wedges, tol=1e-6, max_iter=100, partitions=8, kernel="csr-blocks",
-        csr_broadcast_frontier=bf,
-    )
+    res = pagerank(vertices, wedges, tol=1e-6, max_iter=100, partitions=8, kernel="csr-blocks")
     assert res.converged
     got = _d(res.ranks)
     want = oracle.pagerank_dense(o_vertices, o_edges, tol=1e-6, max_iter=100)
@@ -63,51 +44,13 @@ def test_csr_kernel_matches_numpy_converged(graph, bf):
     assert np.allclose([got[k] for k in ks], [want[k] for k in ks], atol=1e-6)
 
 
-@pytest.mark.parametrize("bf", MODES)
-def test_csr_kernel_partition_count_invariance(graph, bf):
+def test_csr_kernel_partition_count_invariance(graph):
     """Physical partitioning must not change the result (the reference's
     OpenMP reorder tolerance was 1e-4 because of float32; float64 bucketed
     sums agree to ~1e-15)."""
     vertices, wedges, _, _ = graph
-    a = _d(
-        pagerank(
-            vertices, wedges, fixed_iters=3, partitions=3, kernel="csr-blocks",
-            csr_broadcast_frontier=bf,
-        ).ranks
-    )
-    b = _d(
-        pagerank(
-            vertices, wedges, fixed_iters=3, partitions=16, kernel="csr-blocks",
-            csr_broadcast_frontier=bf,
-        ).ranks
-    )
-    ks = sorted(a)
-    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], atol=1e-12)
-
-
-def test_csr_modes_agree_bitwise_on_personalized(graph):
-    """The two frontier modes are the same math in the same FP order
-    (vid-sorted/bucketed reductions) — they must agree to 1e-12 even with a
-    personalized reset, the feature most likely to diverge across layouts."""
-    from pyspark.sql import functions as F
-
-    vertices, wedges, _, _ = graph
-    reset = vertices.filter(F.col("entity").startswith("tool:")).withColumn(
-        "weight", F.lit(1.0)
-    )
-    a = _d(
-        pagerank(
-            vertices, wedges, fixed_iters=5, partitions=8, kernel="csr-blocks",
-            reset=reset, csr_broadcast_frontier=True,
-        ).ranks
-    )
-    b = _d(
-        pagerank(
-            vertices, wedges, fixed_iters=5, partitions=8, kernel="csr-blocks",
-            reset=reset, csr_broadcast_frontier=False,
-        ).ranks
-    )
-    assert set(a) == set(b)
+    a = _d(pagerank(vertices, wedges, fixed_iters=3, partitions=3, kernel="csr-blocks").ranks)
+    b = _d(pagerank(vertices, wedges, fixed_iters=3, partitions=16, kernel="csr-blocks").ranks)
     ks = sorted(a)
     assert np.allclose([a[k] for k in ks], [b[k] for k in ks], atol=1e-12)
 
@@ -127,7 +70,7 @@ def test_fused_loop_bitwise_equals_per_superstep_jobs(spark, graph, tmp_path, ca
     from pagerank_optimization_spark.checkpoint import CheckpointManager
 
     vertices, wedges, _, _ = graph
-    kw = {"partitions": 8, "kernel": "csr-blocks", "csr_broadcast_frontier": True}
+    kw = {"partitions": 8, "kernel": "csr-blocks"}
     if case == "fixed5":
         kw["fixed_iters"] = 5
     else:
@@ -182,14 +125,14 @@ def _jobs_per_extra_superstep(spark, vertices, edges, name: str, **kw) -> float:
 
 def test_one_bucket_loop_starts_no_job_per_superstep(spark, graph):
     vertices, wedges, _, _ = graph
-    kw = {"partitions": 8, "kernel": "csr-blocks", "csr_broadcast_frontier": True}
+    kw = {"partitions": 8, "kernel": "csr-blocks"}
     assert pagerank(vertices, wedges, fixed_iters=1, **kw).metrics[0]["n_partitions"] == 1
     assert _jobs_per_extra_superstep(spark, vertices, wedges, "csr-p1", **kw) == 0
 
 
 def test_multi_bucket_loop_starts_one_job_per_superstep(spark):
     """Above ROWS_PER_PARTITION rows the layout has several buckets; the
-    broadcast kernel then keeps one mapInArrow job per superstep."""
+    csr kernel then keeps one mapInArrow job per superstep."""
     from pyspark.sql import functions as F
 
     from pagerank_optimization_spark.plans.partitioning import ROWS_PER_PARTITION
@@ -202,7 +145,7 @@ def test_multi_bucket_loop_starts_one_job_per_superstep(spark):
         ((F.col("id") + 1) % n).cast("string").alias("dst"),
         F.lit(1.0).alias("weight"),
     ).cache()
-    kw = {"partitions": 4, "kernel": "csr-blocks", "csr_broadcast_frontier": True}
+    kw = {"partitions": 4, "kernel": "csr-blocks"}
     res = pagerank(vertices, ring, fixed_iters=2, **kw)
     assert res.metrics[0]["n_partitions"] > 1
     pr = np.array([r[0] for r in res.ranks.select("pr").collect()])
@@ -210,3 +153,23 @@ def test_multi_bucket_loop_starts_one_job_per_superstep(spark):
     assert _jobs_per_extra_superstep(spark, vertices, ring, "csr-p4", **kw) == 1
     vertices.unpersist()
     ring.unpersist()
+
+
+def test_csr_blocks_runs_above_broadcast_row_limit(graph, monkeypatch):
+    """``kernel="auto"`` sends graphs above BROADCAST_ROW_LIMIT to join-agg,
+    but an explicit ``kernel="csr-blocks"`` still runs there (the rank
+    vector stays on the driver; the id-map joins lose the broadcast hint)
+    and matches join-agg."""
+    from pagerank_optimization_spark.operators import pagerank_csr
+    from pagerank_optimization_spark.operators.pagerank import resolve_auto_kernel
+
+    vertices, wedges, _, _ = graph
+    monkeypatch.setattr(pagerank_csr, "BROADCAST_ROW_LIMIT", 10)
+    assert resolve_auto_kernel(vertices.count()) == "join-agg"
+    pagerank_csr.clear_compile_cache()
+    a = _d(pagerank(vertices, wedges, fixed_iters=4, partitions=8, kernel="join-agg").ranks)
+    b = _d(pagerank(vertices, wedges, fixed_iters=4, partitions=8, kernel="csr-blocks").ranks)
+    pagerank_csr.clear_compile_cache()
+    assert set(a) == set(b)
+    ks = sorted(a)
+    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], atol=1e-12)

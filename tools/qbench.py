@@ -156,7 +156,6 @@ def main() -> None:
         pagerank(v, e, fixed_iters=2, partitions=cpus, kernel="csr-blocks")
         timed("synth_pagerank_k10_joinagg", lambda: pagerank(v, e, fixed_iters=k0, partitions=cpus))
         timed("synth_pagerank_k10_csr", csr_cold(lambda: pagerank(v, e, fixed_iters=k0, partitions=cpus, kernel="csr-blocks")))
-        timed("synth_pagerank_k10_csr_scale", csr_cold(lambda: pagerank(v, e, fixed_iters=k0, partitions=cpus, kernel="csr-blocks", csr_broadcast_frontier=False)))
         v.unpersist(), e.unpersist()
 
     @q("connected_components")
