@@ -86,10 +86,13 @@ def _q_pagerank_k5_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_ppr_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank, teleport uniform over tool entities —
-    oracle-checked end to end (unrolled SQL twin with the same reset)."""
+    """Personalized PageRank, teleport uniform over agent entities —
+    oracle-checked end to end (unrolled SQL twin with the same reset).
+    Agents have out-edges, so the ranks move off the reset distribution;
+    every tool vertex is dangling, and a tool reset would already be its
+    own fixed point."""
     vertices, edges = _graph(spark, sf_dir)
-    reset = vertices.filter(F.col("entity").startswith("tool:")).withColumn(
+    reset = vertices.filter(F.col("entity").startswith("agent:")).withColumn(
         "weight", F.lit(1.0)
     )
     res = pagerank(vertices, edges, fixed_iters=5, reset=reset)
@@ -1348,7 +1351,7 @@ def oracle_sql() -> dict[str, str]:
         "graph_outdegree": osql.outdegree_query_sql(),
         "graph_pagerank_k5": osql.pagerank_query_sql(k=5),
         "graph_pagerank_k5_csr": osql.pagerank_query_sql(k=5),
-        "graph_ppr_k5": osql.ppr_query_sql(k=5, reset_prefix="tool:"),
+        "graph_ppr_k5": osql.ppr_query_sql(k=5, reset_prefix="agent:"),
         "graph_pagerank_weighted_k5": osql.pagerank_weighted_query_sql(k=5),
         "graph_pagerank_decay_k5": osql.pagerank_decay_query_sql(
             k=5, halflife_s=259200.0

@@ -16,13 +16,11 @@ output JSON, and the headline ``value`` is the SUM OF PER-QUERY MINIMUMS
 — stable round-over-round regardless of trial multiplicity (round 2's
 single-pass one-shots swung 1.4-2× on ambient noise).
 
-Kernel-comparison hygiene: pagerank_csr caches its compiled layout
-(blocks/id-map) across calls, while join-agg re-pays its setup
-per call — so every timed CSR trial first calls ``clear_compile_cache()``
-(both kernels then include full per-call setup: apples-to-apples walls).
-The ``*_compute`` throughput extras measure the OTHER protocol — the
-steady-state per-superstep region only (sum of res.metrics wall_ms,
-setup excluded for both kernels, the region the reference times).
+Both kernels build their layout on every call, so walls include full
+per-call setup. The ``*_compute`` throughput extras measure the OTHER
+protocol — the steady-state per-superstep region only (sum of
+res.metrics wall_ms, setup excluded for both kernels, the region the
+reference times).
 
 A size-sweep table (the S10 plot-sink analog, plotter_multi.py:16-62 —
 size × kernel × edges/sec/superstep) lands in BENCH/sweep.csv when
@@ -61,7 +59,6 @@ def main() -> None:
     from pagerank_optimization_spark.operators.graph_build import build_graph
     from pagerank_optimization_spark.operators.lpa import label_propagation
     from pagerank_optimization_spark.operators.pagerank import pagerank
-    from pagerank_optimization_spark.operators.pagerank_csr import clear_compile_cache
     from pagerank_optimization_spark.operators.triangles import triangle_count
     from pagerank_optimization_spark.session import get_spark
     from pagerank_optimization_spark.sources.transcripts import (
@@ -102,14 +99,6 @@ def main() -> None:
         one-time DISTRIBUTE_DATA excluded (the region timer_op.c times)."""
         return sum(m["wall_ms"] for m in res.metrics) / 1000.0
 
-    def csr_cold(fn):
-        """Timed CSR trial with a cold compiled-layout cache, so the wall
-        includes the same per-call setup join-agg re-pays every call."""
-        def run():
-            clear_compile_cache()
-            return fn()
-        return run
-
     # --- sf-table graph -----------------------------------------------------
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
 
@@ -124,8 +113,7 @@ def main() -> None:
     vertices, edges, n_v, n_e = timed_min("graph_build", _build, n=oneshot_trials, dispose=_unbuild)
     extra["graph"] = {"vertices": n_v, "edges": n_e}
 
-    # one unmeasured warm-up (JIT + python worker pool); its compiled layout
-    # is cleared before every timed CSR trial (csr_cold)
+    # one unmeasured warm-up (JIT + python worker pool)
     pagerank(vertices, edges, fixed_iters=2, partitions=cpus, kernel="csr-blocks")
 
     res_ja = timed_min("pagerank_k10_joinagg", lambda: pagerank(vertices, edges, fixed_iters=k0, partitions=cpus))
@@ -134,14 +122,14 @@ def main() -> None:
 
     res_csr = timed_min(
         "pagerank_k10_csr",
-        csr_cold(lambda: pagerank(vertices, edges, fixed_iters=k0, partitions=cpus, kernel="csr-blocks")),
+        lambda: pagerank(vertices, edges, fixed_iters=k0, partitions=cpus, kernel="csr-blocks"),
     )
     extra["edges_per_sec_per_superstep_csr"] = round(n_e * k0 / queries["pagerank_k10_csr"])
     extra["edges_per_sec_per_superstep_csr_compute"] = round(n_e * k0 / compute_s(res_csr))
 
     res_conv = timed_min(
         "pagerank_converged",
-        csr_cold(lambda: pagerank(vertices, edges, tol=1e-6, max_iter=100, partitions=cpus, kernel="csr-blocks")),
+        lambda: pagerank(vertices, edges, tol=1e-6, max_iter=100, partitions=cpus, kernel="csr-blocks"),
         n=oneshot_trials,
     )
     extra["iterations_to_1e-6"] = res_conv.iterations
@@ -323,7 +311,7 @@ def main() -> None:
 
     sres_csr = timed_min(
         "synth_pagerank_k10_csr",
-        csr_cold(lambda: pagerank(sv, se, fixed_iters=k0, partitions=cpus, kernel="csr-blocks")),
+        lambda: pagerank(sv, se, fixed_iters=k0, partitions=cpus, kernel="csr-blocks"),
     )
     extra["synth_edges_per_sec_per_superstep_csr"] = round(s_ne * k0 / queries["synth_pagerank_k10_csr"])
     extra["synth_edges_per_sec_per_superstep_csr_compute"] = round(s_ne * k0 / compute_s(sres_csr))
@@ -853,7 +841,6 @@ def main() -> None:
         def sweep_row(rows, label, wv, we, w_nv, w_ne, kern, n, **kw):
             best, cbest = None, None
             for _ in range(n):
-                clear_compile_cache()
                 t0 = time.monotonic()
                 r = pagerank(wv, we, fixed_iters=k0, partitions=cpus, kernel=kern, **kw)
                 dt = time.monotonic() - t0
@@ -975,9 +962,8 @@ def main() -> None:
         "kernel_trials": trials,
         "oneshot_trials": oneshot_trials,
         "csr_timing_protocol": (
-            "every timed CSR trial starts with a COLD compiled-layout cache "
-            "(clear_compile_cache), so walls include full per-call setup for "
-            "both kernels; the *_compute extras exclude setup for both "
+            "every CSR call builds its layout anew, so walls include full "
+            "per-call setup for both kernels; the *_compute extras exclude setup for both "
             "(steady-state per-superstep region, the reference's timed region; "
             "since r4 the CSR layout compile is forced at setup, so superstep 0 "
             "no longer carries lazy DISTRIBUTE_DATA — r3 csr *_compute figures "

@@ -95,7 +95,8 @@ def hits(
     with iterative_conf(spark, shuffle_partitions=partitions):
         for _ in range(k):
             # superseded checkpoints are reclaimed by Spark's ContextCleaner
-            # once unreferenced (same contract as pagerank_csr.py:500)
+            # once unreferenced (same contract as the csr kernel's id map,
+            # pagerank_csr._Csr)
             auth = _half(hub, by_src, gather="src", emit="dst")
             hub = _half(auth, by_dst, gather="dst", emit="src")
 

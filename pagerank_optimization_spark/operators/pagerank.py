@@ -485,9 +485,9 @@ def pagerank(
         probe = vertices.limit(BROADCAST_ROW_LIMIT + 1).count()
         kernel = resolve_auto_kernel(probe)
     if kernel == "csr-blocks":
-        from pagerank_optimization_spark.operators.pagerank_csr import csr_kernel
+        from pagerank_optimization_spark.operators.pagerank_csr import _Csr
 
-        kern = csr_kernel(
+        kern = _Csr(
             vertices,
             edges,
             id_col=id_col,

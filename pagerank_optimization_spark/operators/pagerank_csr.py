@@ -9,19 +9,22 @@ segment with an 8-lane horizontal sum (tuned_variant_simd.c:244-269).
 
 The Spark-native rebuild of that layout is DESTINATION-bucketed and FUSED.
 This module holds the csr kernel (``_Csr``) that the one superstep loop
-(operators.pagerank._drive) runs over the layout ``_compile`` builds once
-and caches:
+(operators.pagerank._drive) runs over a layout each call builds for
+itself, in one cogrouped pass (``build_layout``), and frees when it
+returns:
 
 - vertex ids are dense 0..n-1, so bucket membership is pure arithmetic:
   bucket b owns vids {b, b+P, b+2P, ...} at local offset vid // P. No
   vertex list is ever materialized — the bucket's rank slice, dangling
   mask and reset slice are flat arrays indexed by that offset;
-- edges are compiled ONCE per bucket (dst % P) into a numpy CSR block:
-  deterministic (dst, src) lexsort (the counting sort of
+- edges are compiled ONCE per call and bucket (dst % P) into a numpy CSR
+  block: deterministic (dst, src) lexsort (the counting sort of
   tuned_variant_csr.c:179-229 with a fixed total order, so a rebuilt
   block is bit-identical regardless of shuffle arrival order), indptr
-  over the dst runs, sources localized to dense gather slots. The blocks
-  are the DISTRIBUTE_DATA moment (tuned_variant_baseline.c:247-324);
+  over the dst runs, sources localized to dense gather slots. The same
+  pass writes the bucket's dangling mask and reset slice beside its
+  block; it is the DISTRIBUTE_DATA moment
+  (tuned_variant_baseline.c:247-324);
 - per superstep the kernel does the whole update INSIDE the Arrow batch:
   gather x by source (numpy fancy indexing — the i32gather analog for a
   full batch), CSR segment sum via np.add.reduceat
@@ -36,7 +39,7 @@ and caches:
 
 Per-superstep plan (r6 form): the driver-held rank vector crosses as ONE
 ``sc.broadcast`` numpy array and the superstep is a single ``mapInArrow``
-over the static cached blocks⊕aux table — no join, no cogroup, ZERO
+over the call's cached layout table — no join, no cogroup, ZERO
 shuffle exchanges (plan: InMemoryScan → MapInArrow → ArrowCollect; the
 round-≤5 LocalRelation + broadcast-join + cogroup form measured 368 ms
 per superstep at sf0.1, 165 ms of it the per-superstep LocalRelation
@@ -86,31 +89,28 @@ from pagerank_optimization_spark.operators.pagerank import Superstep, _Kernel, _
 # (AQE still upgrades it to broadcast if the measured size is tiny).
 BROADCAST_ROW_LIMIT = 1_000_000
 
-BLOCK_SCHEMA = T.StructType(
-    [
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("n_src", T.LongType(), False),        # local gather slots
-        T.StructField("src_idx", T.BinaryType(), False),    # int64 local gather index
-        T.StructField("src_vids", T.BinaryType(), False),   # int64 GLOBAL vids of the
-                                                            # distinct sources (ascending —
-                                                            # the np.unique slot order); the
-                                                            # kernel gathers pr[src_vids]
-                                                            # directly
-    T.StructField("indptr", T.BinaryType(), False),     # int64 CSR offsets
-        T.StructField("dst_local", T.BinaryType(), False),  # int64 bucket offsets of dsts
-        T.StructField("weight", T.BinaryType(), False),     # float64 edge weights
-    ]
-)
-
-AUX_SCHEMA = T.StructType(
+# One row per bucket. The CSR columns are null for a bucket with no
+# in-edges; reset_arr is null unless the run is personalized.
+LAYOUT_SCHEMA = T.StructType(
     [
         T.StructField("bucket", T.IntegerType(), False),
         T.StructField("dang_mask", T.BinaryType(), False),  # uint8 per bucket vertex
         T.StructField("n_dang", T.LongType(), False),       # popcount of dang_mask —
-                                                            # summed once at compile so
+                                                            # summed by the scan that
+                                                            # materializes the layout, so
                                                             # setup needs no separate
                                                             # |D|-count job (r6)
         T.StructField("reset_arr", T.BinaryType(), True),   # float64 per bucket vertex
+        T.StructField("n_src", T.LongType(), True),         # local gather slots
+        T.StructField("src_idx", T.BinaryType(), True),     # int64 local gather index
+        T.StructField("src_vids", T.BinaryType(), True),    # int64 GLOBAL vids of the
+                                                            # distinct sources (ascending —
+                                                            # the np.unique slot order); the
+                                                            # kernel gathers pr[src_vids]
+                                                            # directly
+        T.StructField("indptr", T.BinaryType(), True),      # int64 CSR offsets
+        T.StructField("dst_local", T.BinaryType(), True),   # int64 bucket offsets of dsts
+        T.StructField("weight", T.BinaryType(), True),      # float64 edge weights
     ]
 )
 
@@ -175,7 +175,7 @@ def loop_scalars(abs_delta: np.ndarray, dang_pr: np.ndarray) -> tuple[float, flo
 
 
 def _decode_row(tb, i: int) -> tuple[dict | None, np.ndarray, np.ndarray | None]:
-    """Row ``i`` of a blocks⊕aux Arrow table → (CSR arrays or None,
+    """Row ``i`` of a layout Arrow table → (CSR arrays or None,
     dangling mask, reset slice or None) as numpy views on the buffers."""
     blk = None
     if tb["src_idx"][i].as_py() is not None:
@@ -194,8 +194,8 @@ def _decode_row(tb, i: int) -> tuple[dict | None, np.ndarray, np.ndarray | None]
 
 
 def _make_arrow_map_kernel(n_: int, P: int, d_: float, dm: float, bc):
-    """One superstep as ONE ``mapInArrow`` over the static blocks⊕aux
-    table (r6 restructure). The round-≤5 form broadcast-JOINED a
+    """One superstep as ONE ``mapInArrow`` over the static layout table
+    (r6 restructure). The round-≤5 form broadcast-JOINED a
     per-superstep LocalRelation of the rank vector and cogrouped —
     measured at sf0.1 the LocalRelation build alone was 165 ms of the
     368 ms superstep, all of it spent re-shipping and re-planning data the
@@ -241,7 +241,7 @@ def _make_arrow_map_kernel(n_: int, P: int, d_: float, dm: float, bc):
 
 def _make_arrow_loop_kernel(n_: int, d_: float, dm0: float, bc, steps: int, tol: float | None):
     """The WHOLE superstep loop as one ``mapInArrow`` task over a
-    one-bucket blocks⊕aux table (P=1, so local order is vid order). The
+    one-bucket layout table (P=1, so local order is vid order). The
     start vector arrives once as ``bc``; each superstep is
     ``bucket_update`` + ``loop_scalars`` — the per-superstep job's math
     and reduction order — until ``steps`` ran or the delta ``reached``
@@ -274,260 +274,178 @@ def _make_arrow_loop_kernel(n_: int, d_: float, dm0: float, bc, steps: int, tol:
     return loop_map
 
 
-def build_csr_blocks(vid_edges: DataFrame, n_buckets: int) -> DataFrame:
-    """Compile (src, dst, weight) vid-space edges into ≤P cached CSR blocks,
-    bucketed by DESTINATION (dst % P) so per-superstep segment sums are
-    final without a global re-aggregation.
+def build_layout(vid_edges: DataFrame, flagged: DataFrame, n: int, P: int) -> DataFrame:
+    """The call's layout in ONE cogrouped pass: (src, dst, weight) vid-space
+    edges bucketed by DESTINATION (dst % P) meet the flagged vids
+    (vid, _d[, reset_w]) of the same bucket (vid % P), and every bucket
+    compiles to one LAYOUT_SCHEMA row — its CSR block, dangling mask and,
+    when personalized, reset slice, all aligned to the dense bucket layout
+    (offset vid // P). Destination buckets make the per-superstep segment
+    sums final without a global re-aggregation, and the per-superstep
+    kernel needs no vertex-table join at all.
 
-    Layout is a deterministic function of the edge SET (lexsort by
-    (dst, src)), not of shuffle arrival order — a block rebuilt on resume
-    reduces in the same FP order."""
-    P = n_buckets
+    The layout has P partitions, so a superstep runs ≤P tasks (one at
+    P=1). Above P=1 both sides are hash-partitioned on the bucket into P
+    partitions and the cogroup reuses that exchange, so the compiled
+    blocks are never shuffled again. The CSR is a deterministic function
+    of the edge SET (lexsort by (dst, src)), not of shuffle arrival order
+    — a layout rebuilt on resume reduces in the same FP order."""
+    has_reset = "reset_w" in flagged.columns
 
-    def compile_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = int(pdf["bucket"].iloc[0])
-        src = pdf["src"].to_numpy(dtype=np.int64)
-        dst = pdf["dst"].to_numpy(dtype=np.int64)
-        w = pdf["weight"].to_numpy(dtype=np.float64)
-        order = np.lexsort((src, dst))  # deterministic total order
-        src, dst, w = src[order], dst[order], w[order]
-        dst_unique, counts = np.unique(dst, return_counts=True)
-        indptr = np.zeros(len(dst_unique) + 1, dtype=np.int64)
-        np.cumsum(counts, out=indptr[1:])
-        src_unique, src_idx = np.unique(src, return_inverse=True)
-        return pd.DataFrame(
-            {
-                "bucket": [b],
-                "n_src": [len(src_unique)],
-                "src_idx": [src_idx.astype(np.int64).tobytes()],
-                "src_vids": [src_unique.astype(np.int64).tobytes()],
-                "indptr": [indptr.tobytes()],
-                "dst_local": [((dst_unique - b) // P).tobytes()],
-                "weight": [w.tobytes()],
-            }
-        )
-
-    return (
-        vid_edges.withColumn("bucket", F.pmod(F.col("dst"), F.lit(P)).cast("int"))
-        .groupBy("bucket")
-        .applyInPandas(compile_block, schema=BLOCK_SCHEMA)
-    )
-
-
-def build_aux(
-    vids: DataFrame, dangling_vids: DataFrame, reset: DataFrame | None, n: int, n_buckets: int
-) -> DataFrame:
-    """Per-bucket flat auxiliary arrays aligned to the dense bucket layout
-    (offset vid // P): dangling bitmask and, when personalized, the reset
-    distribution slice. Built once at DISTRIBUTE_DATA time so the
-    per-superstep kernel needs no vertex-table join at all."""
-    P = n_buckets
-    flagged = vids.join(
-        dangling_vids.withColumn("_d", F.lit(True)), "vid", "left"
-    ).select("vid", F.coalesce(F.col("_d"), F.lit(False)).alias("_d"))
-    if reset is not None:
-        flagged = flagged.join(reset, "vid", "left").select(
-            "vid", "_d", F.coalesce(F.col("reset_w"), F.lit(0.0)).alias("_r")
-        )
-    else:
-        flagged = flagged.withColumn("_r", F.lit(None).cast("double"))
-    has_reset = reset is not None
-
-    def compile_aux(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = int(pdf["bucket"].iloc[0])
-        m = _bucket_size(n, b, P)
-        off = (pdf["vid"].to_numpy(dtype=np.int64) - b) // P
-        mask = np.zeros(m, dtype=np.uint8)
-        mask[off[pdf["_d"].to_numpy(dtype=bool)]] = 1
+    def compile_bucket(epdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
+        b = int(fpdf["bucket"].iloc[0])
+        off = (fpdf["vid"].to_numpy(dtype=np.int64) - b) // P
+        mask = np.zeros(_bucket_size(n, b, P), dtype=np.uint8)
+        mask[off[fpdf["_d"].to_numpy(dtype=bool)]] = 1
+        row = dict.fromkeys(LAYOUT_SCHEMA.fieldNames())
+        row.update(bucket=b, dang_mask=mask.tobytes(), n_dang=int(mask.sum()))
         if has_reset:
-            r = np.zeros(m, dtype=np.float64)
-            r[off] = pdf["_r"].to_numpy(dtype=np.float64)
-            rbytes = r.tobytes()
-        else:
-            rbytes = None
-        return pd.DataFrame(
-            {
-                "bucket": [b],
-                "dang_mask": [mask.tobytes()],
-                "n_dang": [int(mask.sum())],
-                "reset_arr": [rbytes],
-            }
-        )
+            r = np.zeros(len(mask), dtype=np.float64)
+            r[off] = fpdf["reset_w"].to_numpy(dtype=np.float64)
+            row["reset_arr"] = r.tobytes()
+        if len(epdf):
+            src = epdf["src"].to_numpy(dtype=np.int64)
+            dst = epdf["dst"].to_numpy(dtype=np.int64)
+            w = epdf["weight"].to_numpy(dtype=np.float64)
+            order = np.lexsort((src, dst))  # deterministic total order
+            src, dst, w = src[order], dst[order], w[order]
+            dst_unique, counts = np.unique(dst, return_counts=True)
+            indptr = np.zeros(len(dst_unique) + 1, dtype=np.int64)
+            np.cumsum(counts, out=indptr[1:])
+            src_unique, src_idx = np.unique(src, return_inverse=True)
+            row.update(
+                n_src=len(src_unique),
+                src_idx=src_idx.astype(np.int64).tobytes(),
+                src_vids=src_unique.astype(np.int64).tobytes(),
+                indptr=indptr.tobytes(),
+                dst_local=((dst_unique - b) // P).tobytes(),
+                weight=w.tobytes(),
+            )
+        return pd.DataFrame([row])
+
+    def by_bucket(df: DataFrame, col: str):
+        df = df.withColumn("bucket", F.pmod(F.col(col), F.lit(P)).cast("int"))
+        # a 1-partition repartition plans as SinglePartition, which the
+        # cogroup does not reuse: it would shuffle the side a second time
+        return (df.repartition(P, "bucket") if P > 1 else df).groupBy("bucket")
 
     return (
-        flagged.withColumn("bucket", F.pmod(F.col("vid"), F.lit(P)).cast("int"))
-        .groupBy("bucket")
-        .applyInPandas(compile_aux, schema=AUX_SCHEMA)
+        by_bucket(vid_edges, "dst")
+        .cogroup(by_bucket(flagged, "vid"))
+        .applyInPandas(compile_bucket, schema=LAYOUT_SCHEMA)
+        .coalesce(P)
     )
-
-
-# Compiled-layout cache — the reference's protocol distributes data ONCE
-# and times COMPUTE over repeated trials (timer_op.c:52-61 takes the min
-# AFTER the one-time DISTRIBUTE_DATA of tuned_variant_baseline.c:247-324).
-# Keyed by the exact DataFrame objects (immutable within a session), so
-# repeated pagerank() calls on the same graph skip recompilation; bounded,
-# evicted entries unpersist everything they pinned.
-from collections import OrderedDict
-
-_COMPILE_CACHE: "OrderedDict[tuple, dict]" = OrderedDict()
-_COMPILE_CACHE_CAP = 2
 
 
 def clear_compile_cache() -> None:
-    while _COMPILE_CACHE:
-        _, old = _COMPILE_CACHE.popitem(last=False)
-        old["release"]()
-
-
-def _compile(
-    vertices: DataFrame,
-    edges: DataFrame,
-    id_col: str,
-    partitions: int,
-) -> dict:
-    key = (id(vertices._jdf), id(edges._jdf), id_col, partitions)
-    ent = _COMPILE_CACHE.get(key)
-    if ent is not None:
-        _COMPILE_CACHE.move_to_end(key)
-        return ent
-
-    # normalize the external id column to 'entity' for the vid mapping
-    # (works for string entities and for already-numeric ids alike);
-    # the assignment's counting pass yields n as a by-product (no extra job).
-    # eager=True (localCheckpoint NOW, while the counted range layout is
-    # still cached) is the only correct execution mode: the range sampler's
-    # boundaries are not stable across recomputations, so a lazily
-    # re-materialized assignment could disagree with the counted offsets.
-    # The checkpoint's blocks are reclaimed by Spark's ContextCleaner once
-    # the cache entry is evicted and the last reference is GC'd.
-    ids, n = vertex_ids_counted(
-        vertices.select(F.col(id_col).alias("entity")), partitions=partitions
-    )
-    if n == 0:
-        raise ValueError("pagerank: empty vertex set (no entities derivable from input)")
-
-    # id-map joins: broadcast only while the map verifiably fits; above the
-    # limit a shuffle join (AQE may still upgrade) — a forced broadcast of a
-    # 10^9-row map is an executor OOM
-    hint = F.broadcast if n <= BROADCAST_ROW_LIMIT else (lambda df: df)
-    src_ids = ids.select(F.col("entity").alias("src"), F.col("vid").alias("src_vid"))
-    dst_ids = ids.select(F.col("entity").alias("dst"), F.col("vid").alias("dst_vid"))
-    vid_edges = (
-        edges.join(hint(src_ids), "src")
-        .join(hint(dst_ids), "dst")
-        .select(F.col("src_vid").alias("src"), F.col("dst_vid").alias("dst"), "weight")
-        .persist()  # read below by the count, blocks and dangling — translate once
-    )
-    nnz = vid_edges.count()
-
-    # scale-adaptive bucket count (r6, guide §2.2): the caller's
-    # ``partitions`` is the cluster-sized cap; the compiled layout uses
-    # what |E| needs. Small graphs get a few big CSR blocks (less
-    # per-superstep task scheduling, longer numpy vectors — strictly
-    # better on both axes); big graphs keep the caller's parallelism.
-    # Deterministic per graph, so a resumed run recompiles identically.
-    from pagerank_optimization_spark.plans.partitioning import effective_partitions
-
-    partitions = effective_partitions(partitions, max(nnz, n))
-
-    vids = ids.select("vid")
-    # lazy: only the reset/x0/resume dm0 semi-joins read this frame (rare
-    # paths, one extra anti-join each); the common path's |D| count rides
-    # the aux compile below as a per-bucket popcount (r6 — one fewer
-    # setup job per cold compile)
-    dangling_vids = vids.join(
-        vid_edges.select(F.col("src").alias("vid")).distinct(), "vid", "left_anti"
-    )
-
-    # DISTRIBUTE_DATA: blocks ⊕ aux (≤P rows) — compiled once.
-    blocks = build_csr_blocks(vid_edges, partitions)
-    aux = build_aux(vids, dangling_vids, None, n, partitions)
-    blocks_aux = (
-        aux.join(blocks, "bucket", "left").repartition(partitions, "bucket").persist()
-    )
-    # force the compiled layout NOW: DISTRIBUTE_DATA belongs to setup, not
-    # to the first timed superstep (the reference's timer starts after
-    # distribution, timer_op.c; join-agg's setup likewise materializes its
-    # co-partitioned cache via its nnz count). Deferring this put 10-15s of
-    # one-time compile inside superstep 0's wall at 4M vertices — same
-    # total work, asymmetric attribution between kernels.
-    blocks_aux.count()
-    # ≤P cached rows — a scalar agg over the just-materialized aux cache
-    n_dangling = int(
-        blocks_aux.agg(F.coalesce(F.sum("n_dang"), F.lit(0))).collect()[0][0]
-    )
-
-    def release(_frames=(blocks_aux, vid_edges)):
-        # ids is localCheckpointed, not persisted: its blocks are freed by
-        # the ContextCleaner once the evicted entry's references are GC'd
-        for df in _frames:
-            df.unpersist()
-
-    ent = {
-        "ids": ids,
-        "n": n,
-        "nnz": nnz,
-        "partitions": partitions,  # effective bucket count (≤ requested)
-        "vids": vids,
-        "dangling_vids": dangling_vids,
-        "n_dangling": n_dangling,
-        "blocks": blocks,
-        "blocks_aux": blocks_aux,
-        "release": release,
-        # strong refs keep the id()-based key stable for the entry's lifetime
-        "_vertices": vertices,
-        "_edges": edges,
-    }
-    _COMPILE_CACHE[key] = ent
-    if len(_COMPILE_CACHE) > _COMPILE_CACHE_CAP:
-        _, old = _COMPILE_CACHE.popitem(last=False)
-        old["release"]()
-    return ent
+    """Does nothing: each csr call builds its own layout and frees it when
+    the call returns, so no layout outlives a call. Kept because the
+    benchmark harness (perfbench/workloads.py) still calls it."""
 
 
 class _Csr(_Kernel):
-    """The csr kernel, in dense-vid key space 0..n-1 from the compiled
-    layout; ranks map back to entities once, at the end. The state is the
-    dense vid-indexed numpy rank vector, held on the driver. Each
-    superstep ships it as one ``sc.broadcast`` and runs ONE ``mapInArrow``
-    job over the static cached blocks⊕aux table — no join, no cogroup, no
-    exchange (plan: InMemoryScan → MapInArrow → ArrowCollect; see
-    _make_arrow_map_kernel). The loop-carried scalars reduce in FIXED
-    vid-sorted numpy order.
+    """The csr kernel, in dense-vid key space 0..n-1; ranks map back to
+    entities once, at the end. The state is the dense vid-indexed numpy
+    rank vector, held on the driver. Each superstep ships it as one
+    ``sc.broadcast`` and runs ONE ``mapInArrow`` job over the cached
+    layout table — no join, no cogroup, no exchange (plan: InMemoryScan →
+    MapInArrow → ArrowCollect; see _make_arrow_map_kernel). The
+    loop-carried scalars reduce in FIXED vid-sorted numpy order. Its ranks
+    are column-identical to the join-agg kernel's (cross-kernel
+    differential bar: 1e-12, SURVEY.md §5 item 3).
 
-    The compiled layout stays cached across calls (released on cache
-    eviction / clear_compile_cache); only per-call extras are released
-    here. ``reset`` is mapped into vid space, normalized, and baked into
-    the per-bucket aux arrays — personalized runs rebuild only that aux
-    slice, the blocks come from the compiled cache untouched."""
+    The constructor builds the call's layout — the DISTRIBUTE_DATA moment
+    (tuned_variant_baseline.c:247-324): the vid assignment, the vid-space
+    edges, and ONE cogrouped pass (build_layout) that compiles each
+    bucket's CSR block, dangling mask and, when ``reset`` is given, its
+    slice of the normalized reset distribution. ``release`` unpersists
+    all of it when the call returns. The id map and the result are
+    localCheckpointed, not persisted; Spark's ContextCleaner frees their
+    blocks once they are unreferenced."""
 
     key = "vid"
     _bc = None
 
-    def __init__(self, ent: dict, *, id_col: str, damping: float, reset: DataFrame | None):
+    def __init__(
+        self,
+        vertices: DataFrame,
+        edges: DataFrame,
+        *,
+        id_col: str,
+        partitions: int,
+        damping: float,
+        reset: DataFrame | None,
+    ):
+        from pagerank_optimization_spark.plans.partitioning import effective_partitions
+
         self.id_col, self.damping = id_col, float(damping)
-        self.ids, self.n, self.nnz = ent["ids"], ent["n"], ent["nnz"]
+        # normalize the external id column to 'entity' for the vid mapping
+        # (works for string entities and for already-numeric ids alike);
+        # the assignment's counting pass yields n as a by-product (no extra
+        # job). It is localCheckpointed NOW, while the counted range layout
+        # is still cached: the range sampler's boundaries are not stable
+        # across recomputations, so a lazily re-materialized assignment
+        # could disagree with the counted offsets.
+        self.ids, self.n = vertex_ids_counted(
+            vertices.select(F.col(id_col).alias("entity")), partitions=partitions
+        )
+        if self.n == 0:
+            raise ValueError("pagerank: empty vertex set (no entities derivable from input)")
         self.spark = self.ids.sparkSession
-        self.partitions = ent["partitions"]  # effective bucket count (≤ requested)
-        self.vertices, self.dangling = ent["vids"], ent["dangling_vids"]
-        self.n_dangling = ent["n_dangling"]
-        self.blocks_aux, self.reset, self._local = ent["blocks_aux"], None, []
+        # id-map joins: broadcast only while the map verifiably fits; above
+        # the limit a shuffle join (AQE may still upgrade) — a forced
+        # broadcast of a 10^9-row map is an executor OOM
+        self._hint = F.broadcast if self.n <= BROADCAST_ROW_LIMIT else (lambda df: df)
+        self.vertices = self.ids.select("vid")
+        self.reset, self._cached = None, []
         if reset is not None:
+            # before anything else is persisted: a reset without mass raises
             self.reset = _teleport(self, reset).persist()
-            aux = build_aux(self.vertices, self.dangling, self.reset, self.n, self.partitions)
-            self.blocks_aux = (
-                aux.join(ent["blocks"], "bucket", "left")
-                .repartition(self.partitions, "bucket")
-                .persist()
+            self._cached.append(self.reset)
+        src_ids = self.ids.select(F.col("entity").alias("src"), F.col("vid").alias("src_vid"))
+        dst_ids = self.ids.select(F.col("entity").alias("dst"), F.col("vid").alias("dst_vid"))
+        vid_edges = (
+            edges.join(self._hint(src_ids), "src")
+            .join(self._hint(dst_ids), "dst")
+            .select(F.col("src_vid").alias("src"), F.col("dst_vid").alias("dst"), "weight")
+            .persist()  # read by the count, the layout and the dangling flags
+        )
+        self._cached.append(vid_edges)
+        self.nnz = vid_edges.count()
+        # scale-adaptive bucket count (r6, guide §2.2): the caller's
+        # ``partitions`` is the cluster-sized cap; the layout uses what the
+        # graph needs. Small graphs get a few big CSR blocks (less
+        # per-superstep task scheduling, longer numpy vectors — strictly
+        # better on both axes); big graphs keep the caller's parallelism.
+        # Deterministic per graph, so a resumed run rebuilds identically.
+        self.partitions = effective_partitions(partitions, max(self.nnz, self.n))
+
+        has_out = vid_edges.select(F.col("src").alias("vid")).distinct()
+        flagged = self.vertices.join(has_out.withColumn("_o", F.lit(True)), "vid", "left").select(
+            "vid", F.col("_o").isNull().alias("_d")
+        )
+        # lazy: only the reset/x0/resume dm0 semi-joins read it
+        self.dangling = flagged.filter("_d").select("vid")
+        if self.reset is not None:
+            flagged = flagged.join(self.reset, "vid", "left").select(
+                "vid", "_d", F.coalesce(F.col("reset_w"), F.lit(0.0)).alias("reset_w")
             )
-            self._local = [self.reset, self.blocks_aux]
+        self.layout = build_layout(vid_edges, flagged, self.n, self.partitions).persist()
+        self._cached.append(self.layout)
+        # the scan that sums the dangling popcount also materializes the
+        # cached layout NOW: DISTRIBUTE_DATA belongs to setup, not to the
+        # first timed superstep (the reference's timer starts after
+        # distribution, timer_op.c; join-agg's setup likewise materializes
+        # its co-partitioned cache via its nnz count)
+        self.n_dangling = int(
+            self.layout.agg(F.coalesce(F.sum("n_dang"), F.lit(0))).collect()[0][0]
+        )
 
     def keyed(self, frame: DataFrame, col: str) -> DataFrame:
         """Entity space → vid space; rows on unknown ids drop."""
-        hint = F.broadcast if self.n <= BROADCAST_ROW_LIMIT else (lambda df: df)
         return (
             frame.select(F.col(self.id_col).alias("entity"), col)
-            .join(hint(self.ids), "entity")
+            .join(self._hint(self.ids), "entity")
             .select("vid", col)
         )
 
@@ -552,7 +470,7 @@ class _Csr(_Kernel):
         self._bc = bc = self.spark.sparkContext.broadcast(pr)
         fused_map = _make_arrow_map_kernel(int(self.n), self.partitions, self.damping, dm, bc)
         pdf = (
-            self.blocks_aux.mapInArrow(fused_map, schema=STATE_SCHEMA)
+            self.layout.mapInArrow(fused_map, schema=STATE_SCHEMA)
             .toPandas()
             .sort_values("vid", kind="mergesort", ignore_index=True)
         )
@@ -574,7 +492,7 @@ class _Csr(_Kernel):
         t0 = time.monotonic()
         self._bc = bc = self.spark.sparkContext.broadcast(pr)
         loop_map = _make_arrow_loop_kernel(int(self.n), self.damping, dm, bc, steps, tol)
-        rows = self.blocks_aux.mapInArrow(loop_map, schema=LOOP_SCHEMA).collect()
+        rows = self.layout.mapInArrow(loop_map, schema=LOOP_SCHEMA).collect()
         bc.destroy()
         self._bc = None
         final = np.frombuffer(rows[-1]["pr"], dtype=np.float64).copy()
@@ -592,32 +510,5 @@ class _Csr(_Kernel):
     def release(self) -> None:
         if self._bc is not None:
             self._bc.destroy()
-        for df in self._local:
+        for df in reversed(self._cached):  # dependents before their inputs
             df.unpersist()
-
-
-def csr_kernel(
-    vertices: DataFrame,
-    edges: DataFrame,
-    *,
-    id_col: str,
-    partitions: int,
-    damping: float,
-    reset: DataFrame | None = None,
-) -> _Csr:
-    """The csr-blocks kernel for pagerank(kernel='csr-blocks'): compiles
-    (or fetches) the layout. The ranks it yields are column-identical to
-    the join-agg kernel's (cross-kernel differential bar: 1e-12, SURVEY.md
-    §5 item 3).
-
-    Cache lifetime: the compiled layout (blocks, translated edges,
-    id map) stays persisted across calls in a bounded LRU
-    (_COMPILE_CACHE, cap 2) keyed by the exact input DataFrames —
-    repeated runs on the same graph skip DISTRIBUTE_DATA, mirroring the
-    reference's distribute-once/measure-many protocol (timer_op.c:52-61).
-    Library callers done with a large graph should call
-    ``clear_compile_cache()`` to free the pinned executor storage
-    immediately; otherwise it frees on LRU eviction or session stop."""
-    return _Csr(
-        _compile(vertices, edges, id_col, partitions), id_col=id_col, damping=damping, reset=reset
-    )

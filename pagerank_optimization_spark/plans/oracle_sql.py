@@ -239,7 +239,7 @@ l{i} AS {m}(
 
 def ppr_query_sql(
     k: int = 5,
-    reset_prefix: str = "tool:",
+    reset_prefix: str = "agent:",
     dialect: str = "duckdb",
     round_to: int = 8,
 ) -> str:

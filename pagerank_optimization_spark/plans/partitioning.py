@@ -24,8 +24,6 @@ scale-adaptive partition sizing and physical-plan audits.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,24 +33,20 @@ from pyspark.sql import functions as F
 # Using it unconditionally makes every stage of a tiny-graph superstep pay
 # a 32-task scheduling floor — at sf0.1 (54k edges) the per-superstep wall
 # is ~95% task/stage overhead (measured: compute region 0.75 s/superstep at
-# 32 partitions vs ~0.1 s at the data-sized count). The target is
-# parameterised (env) with a local default; at scale rows/target exceeds
-# the cap and the caller's value wins unchanged, so cluster behavior is
-# untouched.
-ROWS_PER_PARTITION = int(os.environ.get("SPARK_GRAFT_ROWS_PER_PARTITION", "65536"))
+# 32 partitions vs ~0.1 s at the data-sized count). At scale
+# rows/target exceeds the cap and the caller's value wins unchanged, so
+# cluster behavior is untouched.
+ROWS_PER_PARTITION = 65_536
 
 
-def effective_partitions(
-    requested: int, rows: int | None, *, rows_per_partition: int | None = None
-) -> int:
-    """min(requested, ceil(rows / rows_per_partition)), floor 1: never MORE
+def effective_partitions(requested: int, rows: int | None) -> int:
+    """min(requested, ceil(rows / ROWS_PER_PARTITION)), floor 1: never MORE
     tasks than the caller sized for the cluster, never more than the data
-    needs at ~rows_per_partition rows per task. ``rows=None`` (size
+    needs at ~ROWS_PER_PARTITION rows per task. ``rows=None`` (size
     unknown) keeps the caller's value."""
     if rows is None:
         return max(1, requested)
-    rpp = rows_per_partition or ROWS_PER_PARTITION
-    need = max(1, -(-int(rows) // rpp))
+    need = max(1, -(-int(rows) // ROWS_PER_PARTITION))
     return max(1, min(int(requested), need))
 
 
@@ -168,23 +162,13 @@ def with_src_degree_salt(
 
 def src_salted_pagerank_step(salted_edges: DataFrame, hubs: DataFrame, id_col: str = "entity"):
     """Contribution step of the join-agg kernel over src-salted edges:
-    hub rank rows replicate across their salt range (explode over a
-    broadcast of the tiny hubs table); the join key becomes (src, ssalt),
+    hub rank rows replicate across their salt range (salted_unique_side
+    over the tiny broadcast hubs table); the join key becomes (src, ssalt),
     so no single task owns a hub's whole edge list. The contribution agg
     is untouched — partial+final combine handles the dst side."""
 
     def step(ranks: DataFrame) -> DataFrame:
-        r = (
-            ranks.withColumnRenamed(id_col, "src")
-            .join(F.broadcast(hubs), "src", "left")
-            .withColumn(
-                "ssalt",
-                F.explode(
-                    F.sequence(F.lit(0), F.coalesce(F.col("n_salts"), F.lit(1)) - 1)
-                ),
-            )
-            .drop("n_salts")
-        )
+        r = salted_unique_side(ranks.withColumnRenamed(id_col, "src"), hubs, "src")
         return (
             salted_edges.join(r, ["src", "ssalt"], "inner")
             .groupBy(F.col("dst").alias(id_col))

@@ -5,6 +5,7 @@ join-agg (pure DataFrame) — the reference's REF/TST variant harness
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from pagerank_optimization_spark.operators.graph_build import build_graph
 from pagerank_optimization_spark.operators.pagerank import pagerank
@@ -23,6 +24,10 @@ def graph(spark):
 
 def _d(df):
     return {r[0]: r[1] for r in df.collect()}
+
+
+def _agent_reset(vertices):
+    return vertices.filter(F.col("entity").startswith("agent:")).withColumn("weight", F.lit(1.0))
 
 
 def test_csr_kernel_matches_joinagg_fixed_k(graph):
@@ -65,8 +70,6 @@ def test_fused_loop_bitwise_equals_per_superstep_jobs(spark, graph, tmp_path, ca
     checkpointed run of the same graph takes one job per superstep. Both
     run the same numpy update in the same order, so deltas, dangling
     masses and ranks are float64-equal, not just close."""
-    from pyspark.sql import functions as F
-
     from pagerank_optimization_spark.checkpoint import CheckpointManager
 
     vertices, wedges, _, _ = graph
@@ -76,9 +79,9 @@ def test_fused_loop_bitwise_equals_per_superstep_jobs(spark, graph, tmp_path, ca
     else:
         kw["tol"] = 1e-6
     if case == "personalized":
-        kw["reset"] = vertices.filter(F.col("entity").startswith("tool:")).withColumn(
-            "weight", F.lit(1.0)
-        )
+        # agents have out-edges; a reset on (dangling) tools would already
+        # be its own fixed point
+        kw["reset"] = _agent_reset(vertices)
     if case == "x0":
         kw["x0"] = pagerank(vertices, wedges, fixed_iters=3, **kw).ranks
 
@@ -96,6 +99,7 @@ def test_fused_loop_bitwise_equals_per_superstep_jobs(spark, graph, tmp_path, ca
     ]
     assert (fused.iterations, fused.converged) == (jobs.iterations, jobs.converged)
     assert fused.converged == (case != "fixed5")
+    assert fused.iterations > 1
     assert _d(fused.ranks) == _d(jobs.ranks)
     probe_kw = {k: v for k, v in kw.items() if k not in ("tol", "fixed_iters")}
     assert _jobs_per_extra_superstep(spark, vertices, wedges, f"fused-{case}", **probe_kw) == 0
@@ -113,9 +117,8 @@ def _job_count(spark, group: str, fn) -> int:
 
 def _jobs_per_extra_superstep(spark, vertices, edges, name: str, **kw) -> float:
     """Jobs of a fixed_iters=3 call minus those of a fixed_iters=1 call, per
-    extra superstep (the call's fixed jobs cancel); the compiled layout is
-    cached by a warm-up call first."""
-    pagerank(vertices, edges, fixed_iters=1, **kw)
+    extra superstep (the call's fixed jobs, its layout build included,
+    cancel)."""
     one, three = (
         _job_count(spark, f"{name}-{k}", lambda k=k: pagerank(vertices, edges, fixed_iters=k, **kw))
         for k in (1, 3)
@@ -133,8 +136,6 @@ def test_one_bucket_loop_starts_no_job_per_superstep(spark, graph):
 def test_multi_bucket_loop_starts_one_job_per_superstep(spark):
     """Above ROWS_PER_PARTITION rows the layout has several buckets; the
     csr kernel then keeps one mapInArrow job per superstep."""
-    from pyspark.sql import functions as F
-
     from pagerank_optimization_spark.plans.partitioning import ROWS_PER_PARTITION
 
     n = ROWS_PER_PARTITION + 4_464
@@ -166,10 +167,33 @@ def test_csr_blocks_runs_above_broadcast_row_limit(graph, monkeypatch):
     vertices, wedges, _, _ = graph
     monkeypatch.setattr(pagerank_csr, "BROADCAST_ROW_LIMIT", 10)
     assert resolve_auto_kernel(vertices.count()) == "join-agg"
-    pagerank_csr.clear_compile_cache()
     a = _d(pagerank(vertices, wedges, fixed_iters=4, partitions=8, kernel="join-agg").ranks)
     b = _d(pagerank(vertices, wedges, fixed_iters=4, partitions=8, kernel="csr-blocks").ranks)
-    pagerank_csr.clear_compile_cache()
     assert set(a) == set(b)
     ks = sorted(a)
     assert np.allclose([a[k] for k in ks], [b[k] for k in ks], atol=1e-12)
+
+
+@pytest.mark.parametrize("personalized", [False, True], ids=["plain", "personalized"])
+def test_csr_call_releases_what_it_cached(spark, graph, monkeypatch, personalized):
+    """A csr call builds its layout for itself and unpersists it before it
+    returns: afterwards Spark's cache manager holds no DataFrame that the
+    call persisted. Frames cached outside the call are left alone."""
+    vertices, wedges, _, _ = graph
+    # new frame objects: the layout must be built by this call, whatever
+    # earlier calls on the fixture's frames left behind
+    vertices, wedges = vertices.select("*"), wedges.select("*")
+    kw = {"reset": _agent_reset(vertices)} if personalized else {}
+    frame_cls = type(vertices)
+    persist, persisted = frame_cls.persist, []
+
+    def spy(self, *args, **kwargs):
+        persisted.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "persist", spy)
+    pagerank(vertices, wedges, fixed_iters=2, partitions=8, kernel="csr-blocks", **kw)
+    monkeypatch.undo()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert persisted
+    assert [df for df in persisted if cache.lookupCachedData(df._jdf).isDefined()] == []

@@ -40,7 +40,6 @@ def main() -> None:
 
     from pagerank_optimization_spark.operators.graph_build import build_graph
     from pagerank_optimization_spark.operators.pagerank import pagerank
-    from pagerank_optimization_spark.operators.pagerank_csr import clear_compile_cache
     from pagerank_optimization_spark.session import get_spark
     from pagerank_optimization_spark.sources.transcripts import (
         synthesize_transcripts,
@@ -99,12 +98,6 @@ def main() -> None:
             _g["emb"].count()
         return _g["emb"]
 
-    def csr_cold(fn):
-        def run():
-            clear_compile_cache()
-            return fn()
-        return run
-
     # query registry mirroring bench.py ---------------------------------------
     Q = {}
 
@@ -137,14 +130,14 @@ def main() -> None:
     def _pr_csr():
         v, e = graph()
         pagerank(v, e, fixed_iters=2, partitions=cpus, kernel="csr-blocks")  # warmup
-        res = timed("pagerank_k10_csr", csr_cold(lambda: pagerank(v, e, fixed_iters=k0, partitions=cpus, kernel="csr-blocks")))
+        res = timed("pagerank_k10_csr", lambda: pagerank(v, e, fixed_iters=k0, partitions=cpus, kernel="csr-blocks"))
         log("compute_s=%.2f" % (sum(m["wall_ms"] for m in res.metrics) / 1000.0))
 
     @q("pagerank_converged")
     def _pr_conv():
         v, e = graph()
         pagerank(v, e, fixed_iters=2, partitions=cpus, kernel="csr-blocks")  # warmup
-        res = timed("pagerank_converged", csr_cold(lambda: pagerank(v, e, tol=1e-6, max_iter=100, partitions=cpus, kernel="csr-blocks")))
+        res = timed("pagerank_converged", lambda: pagerank(v, e, tol=1e-6, max_iter=100, partitions=cpus, kernel="csr-blocks"))
         log(f"iterations={res.iterations} compute_s=%.2f" % (sum(m["wall_ms"] for m in res.metrics) / 1000.0))
 
     @q("synth_pagerank")
@@ -155,7 +148,7 @@ def main() -> None:
         log(f"synth: v={v.count()} e={e.count()}")
         pagerank(v, e, fixed_iters=2, partitions=cpus, kernel="csr-blocks")
         timed("synth_pagerank_k10_joinagg", lambda: pagerank(v, e, fixed_iters=k0, partitions=cpus))
-        timed("synth_pagerank_k10_csr", csr_cold(lambda: pagerank(v, e, fixed_iters=k0, partitions=cpus, kernel="csr-blocks")))
+        timed("synth_pagerank_k10_csr", lambda: pagerank(v, e, fixed_iters=k0, partitions=cpus, kernel="csr-blocks"))
         v.unpersist(), e.unpersist()
 
     @q("connected_components")
