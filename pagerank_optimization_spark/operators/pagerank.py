@@ -18,13 +18,13 @@ harness, verify_op.c:196-239):
   (tuned_variant_openmp.c:75-77). Edges are pre-repartitioned by the join
   key and cached, so per-superstep only the |V|-sized rank frontier
   shuffles — the big relation stays put (exchange reuse).
-- csr (``kernel="csr-blocks"``) — per-bucket CSR blocks (the
+- csr (``kernel="csr-blocks"``) — one CSR block (the
   tuned_variant_csr.c:179-229 counting-sort layout rebuilt as numpy
   inside Arrow) over a driver-held rank vector. See
   operators.pagerank_csr.
 
-A kernel owns only its physical superstep: ``init(ranks) -> state``,
-``step(state, dm) -> (state, l1_delta, next_dm)`` and
+A kernel owns only its physical supersteps: ``init(ranks) -> state``,
+``supersteps(state, dm, ...)`` (the record iterator below) and
 ``to_frame(state) -> (key, pr)``, over its own key space (the entity id
 for join-agg, the dense vid for csr). The loop owns everything else, once:
 resume and the bitwise restore of the loop-carried dangling mass, the
@@ -39,14 +39,13 @@ per superstep run. The iterator alone decides when the loop stops: at
 most ``steps`` records, and none after the first whose delta is
 ``reached`` at ``tol`` (``tol=None``: exactly ``steps``); the loop only
 reads ``converged`` off the last record. ``wall_ms`` is driver wall time
-of the job(s) behind the records. The default (``_Kernel.supersteps``)
-runs one ``step`` job per record, so each record's state is live when it
-is yielded. A kernel may instead run the whole loop in one task when
-``every_state`` is False, i.e. no checkpointer needs each superstep's
-state (the csr kernel does when its layout is one bucket): its
-records then carry the one job's time split evenly over them, and a
-state only on the last one. Either way the loop builds every metrics row
-itself from the records.
+of the job(s) behind the records. join-agg runs one ``step`` job per
+record, so each record's state is live when it is yielded. csr runs
+several supersteps in one task: all of them when ``every_state`` is
+False, i.e. no checkpointer needs each superstep's state, else one per
+task. Its records carry the task's job time split evenly over them, and
+a state only on the last one. Either way the loop builds every metrics
+row itself from the records.
 
 Superstep lifecycle (lineage hygiene): each iterate is localCheckpoint'ed
 (or durably checkpointed via a CheckpointManager) — the DataFrame analog of
@@ -86,22 +85,6 @@ def reached(delta: float, tol: float | None) -> bool:
     never stops early. Shared by the per-job record iterator and the
     one-task loop so both stop on the same superstep."""
     return tol is not None and delta <= tol
-
-
-class _Kernel:
-    """Default record iterator: one ``step`` job per superstep, wall time
-    measured on the driver around it; stops after the record whose delta
-    is ``reached`` at ``tol``."""
-
-    def supersteps(
-        self, state, dm: float, *, steps: int, tol: float | None, every_state: bool
-    ) -> Iterator[Superstep]:
-        for _ in range(steps):
-            t0 = time.monotonic()
-            state, delta, dm = self.step(state, dm)
-            yield Superstep(state, float(delta), float(dm), (time.monotonic() - t0) * 1000.0)
-            if reached(float(delta), tol):
-                return
 
 
 @dataclass
@@ -170,7 +153,8 @@ def _drive(
     for the uniform x0 (no job), the value the interrupted run recorded on
     resume (recomputing the sum could differ in the last ulp — sum order),
     else one scalar semi-join agg over the start vector. Every later
-    superstep's mass comes out of the kernel's step, alongside the delta.
+    superstep's mass comes out of the kernel's supersteps, alongside the
+    delta.
     A resumed run whose recorded delta already ``reached`` tol runs no
     superstep: it returns the saved ranks, converged."""
     from pagerank_optimization_spark.session import iterative_conf
@@ -248,7 +232,7 @@ def _dangling_of(vertices: DataFrame, edges: DataFrame, id_col: str) -> DataFram
     )
 
 
-class _JoinAgg(_Kernel):
+class _JoinAgg:
     """join-agg kernel in entity-id space. Setup is the one-time layout
     decision — the Spark analog of DISTRIBUTE_DATA
     (tuned_variant_baseline.c:247-324): co-partition edges on the join key
@@ -386,6 +370,20 @@ class _JoinAgg(_Kernel):
         )
         return new_ranks, delta, next_dm
 
+    def supersteps(
+        self, ranks: DataFrame, dm: float, *, steps: int, tol: float | None, every_state: bool
+    ) -> Iterator[Superstep]:
+        """One ``step`` job per record, wall time measured on the driver
+        around it; stops after the record whose delta is ``reached`` at
+        ``tol``. Every record's state is live, so ``every_state`` needs
+        nothing extra."""
+        for _ in range(steps):
+            t0 = time.monotonic()
+            ranks, delta, dm = self.step(ranks, dm)
+            yield Superstep(ranks, float(delta), float(dm), (time.monotonic() - t0) * 1000.0)
+            if reached(float(delta), tol):
+                return
+
     def to_frame(self, ranks: DataFrame) -> DataFrame:
         return ranks.select(self.key, "pr")
 
@@ -448,8 +446,8 @@ def pagerank(
     plans.partitioning; AQE skew-join is OFF inside the loop, so this is
     the only in-loop skew defense). In-degree hubs need no split: the
     contribution sum has partial+final HashAggregate. The csr-blocks
-    kernel needs no salting: a hub's edges are contiguous CSR segments
-    reduced vectorized inside evenly-sized buckets.
+    kernel needs no salting: a hub's edges are one contiguous CSR
+    segment, reduced vectorized inside the one csr task.
 
     ``reset``: personalized/topic-sensitive PageRank — a DataFrame
     (id_col, weight ≥ 0, any scale; normalized internally). Teleport and

@@ -1,4 +1,4 @@
-"""Vectorized CSR-blocks PageRank kernel (the north-star physical design).
+"""Vectorized CSR PageRank kernel (the north-star physical design).
 
 The reference's fastest variants rebuild the COO edge list into CSR via a
 counting sort (histogram + exclusive prefix-sum + stable scatter,
@@ -7,60 +7,46 @@ segment (tuned_variant_csr.c:72-84), then vectorize the gather with AVX2
 `_mm256_i32gather_ps` (tuned_variant_simd.c:297-300) and reduce each
 segment with an 8-lane horizontal sum (tuned_variant_simd.c:244-269).
 
-The Spark-native rebuild of that layout is DESTINATION-bucketed and FUSED.
-This module holds the csr kernel (``_Csr``) that the one superstep loop
-(operators.pagerank._drive) runs over a layout each call builds for
-itself, in one cogrouped pass (``build_layout``), and frees when it
-returns:
+Like the reference, this kernel (``_Csr``) runs over ONE CSR matrix. Each
+call builds it for itself, in one cogrouped pass (``build_layout``), as
+ONE layout row indexed by the dense vid 0..n-1, and frees it when it
+returns. The one superstep loop (operators.pagerank._drive) runs over it:
 
-- vertex ids are dense 0..n-1, so bucket membership is pure arithmetic:
-  bucket b owns vids {b, b+P, b+2P, ...} at local offset vid // P. No
-  vertex list is ever materialized — the bucket's rank slice, dangling
-  mask and reset slice are flat arrays indexed by that offset;
-- edges are compiled ONCE per call and bucket (dst % P) into a numpy CSR
-  block: deterministic (dst, src) lexsort (the counting sort of
-  tuned_variant_csr.c:179-229 with a fixed total order, so a rebuilt
-  block is bit-identical regardless of shuffle arrival order), indptr
-  over the dst runs, sources localized to dense gather slots. The same
-  pass writes the bucket's dangling mask and reset slice beside its
+- vertex ids are dense 0..n-1, so the rank vector, the dangling mask and
+  the reset vector are flat arrays indexed by vid. No vertex list is
+  ever materialized;
+- the edges are compiled into the CSR block: deterministic (dst, src)
+  lexsort (the counting sort of tuned_variant_csr.c:179-229 with a fixed
+  total order, so a rebuilt block is bit-identical regardless of shuffle
+  arrival order), indptr over the dst runs, each edge's global source
+  vid. The same pass writes the dangling mask and reset vector beside the
   block; it is the DISTRIBUTE_DATA moment
   (tuned_variant_baseline.c:247-324);
-- per superstep the kernel does the whole update INSIDE the Arrow batch:
-  gather x by source (numpy fancy indexing — the i32gather analog for a
-  full batch), CSR segment sum via np.add.reduceat
-  (tuned_variant_csr.c:74-84), scatter to the dense bucket slice,
-  damping + teleport/personalized base, |new−old| per vertex and the
-  bucket's dangling rank mass;
-- the kernel output (vid, pr, abs_delta, dang_pr) is the ENTIRE
-  superstep state: new ranks, the L1 delta and next dangling mass all
-  come out of the one kernel pass — no join against the previous rank
-  vector, no join against a flagged vertex table, no second aggregation
-  shuffle.
+- a superstep does the whole update inside the Arrow task
+  (``csr_update``): gather the ranks by source (numpy fancy indexing —
+  the i32gather analog for a full batch), CSR segment sum via
+  np.add.reduceat (tuned_variant_csr.c:74-84), scatter to the dense
+  vector, damping + teleport/personalized base, |new−old| per vertex and
+  the dangling rank mass. ``loop_scalars`` reduces the last two in vid
+  order, so new ranks, the L1 delta and the next dangling mass all come
+  out of one pass — no join, no exchange.
 
-Per-superstep plan (r6 form): the driver-held rank vector crosses as ONE
-``sc.broadcast`` numpy array and the superstep is a single ``mapInArrow``
-over the call's cached layout table — no join, no cogroup, ZERO
-shuffle exchanges (plan: InMemoryScan → MapInArrow → ArrowCollect; the
-round-≤5 LocalRelation + broadcast-join + cogroup form measured 368 ms
-per superstep at sf0.1, 165 ms of it the per-superstep LocalRelation
-build — the map form runs ~160 ms). ``kernel="auto"`` sends graphs above
-BROADCAST_ROW_LIMIT vertices to join-agg, which keeps the rank vector in
-the JVM; an explicit ``kernel="csr-blocks"`` keeps it on the driver at
-any |V|.
+Record iterator (the contract of operators.pagerank._drive): the start
+vector crosses once as an ``sc.broadcast`` and ONE ``mapInArrow`` task
+over the cached layout loops ``csr_update`` → ``loop_scalars`` to
+``steps`` or to the shared ``reached`` rule, returning the final vector
+plus one (l1_delta, dangling_mass_next) row per superstep, which become
+the ``Superstep`` records; the job's driver time is split evenly over
+their ``wall_ms``. A checkpointed run needs every superstep's state, so
+it runs the same task with ``steps=1`` once per superstep. A superstep's
+numpy work is ~0.1 ms on the benchmark graph and a job's dispatch
+~300 ms, so the uncheckpointed loop costs about one job. Both forms run
+the same function in the same order, so they agree bitwise.
 
-Record iterator (the contract of operators.pagerank._drive): the kernel
-inherits the default ``supersteps`` — one ``step`` job per record — and
-overrides it when its layout has ONE bucket (P=1) and the loop needs no
-intermediate state (no checkpointer): the start vector crosses once as
-an ``sc.broadcast``, ONE ``mapInArrow`` task loops ``bucket_update`` →
-``loop_scalars`` to ``steps`` or to the shared ``reached`` rule, and
-returns the final vector plus one (l1_delta, dangling_mass_next) row per
-superstep, which become the ``Superstep`` records; the job's driver time
-is split evenly over their ``wall_ms``. At P=1 a superstep's numpy work
-is ~0.1 ms and a job's dispatch ~300 ms, so this removes nearly all of a
-converged run's loop time. The per-bucket math is the one
-``bucket_update`` function in both paths (per-superstep map, fused
-loop), so the fused loop is bitwise-equal to per-superstep jobs.
+``kernel="auto"`` sends graphs above BROADCAST_ROW_LIMIT vertices to
+join-agg, which keeps the rank vector in the JVM; an explicit
+``kernel="csr-blocks"`` keeps it on the driver at any |V| whose layout
+fits in one Spark row (LAYOUT_BYTES_LIMIT), and raises above that.
 
 No per-row Python anywhere (input_hint requirement): everything crossing
 the JVM↔Python boundary is an Arrow batch, everything inside is numpy.
@@ -82,47 +68,30 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pagerank_optimization_spark.operators.graph_build import vertex_ids_counted
-from pagerank_optimization_spark.operators.pagerank import Superstep, _Kernel, _teleport, reached
+from pagerank_optimization_spark.operators.pagerank import Superstep, _teleport, reached
 
 # Above this row count an id-map broadcast risks executor OOM at the
 # 10^9-vertex scale this engine targets — fall back to a shuffle join
 # (AQE still upgrades it to broadcast if the measured size is tiny).
 BROADCAST_ROW_LIMIT = 1_000_000
 
-# One row per bucket. The CSR columns are null for a bucket with no
-# in-edges; reset_arr is null unless the run is personalized.
+# The layout is one Spark row, and a row holds at most ~2 GiB (its buffer
+# is one JVM byte array); 1 MiB is left for the row's header and padding.
+LAYOUT_BYTES_LIMIT = 2**31 - 2**20
+
+# The one layout row. The CSR columns are null for a graph without edges;
+# reset_arr is null unless the run is personalized.
 LAYOUT_SCHEMA = T.StructType(
     [
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("dang_mask", T.BinaryType(), False),  # uint8 per bucket vertex
-        T.StructField("n_dang", T.LongType(), False),       # popcount of dang_mask —
-                                                            # summed by the scan that
-                                                            # materializes the layout, so
-                                                            # setup needs no separate
-                                                            # |D|-count job (r6)
-        T.StructField("reset_arr", T.BinaryType(), True),   # float64 per bucket vertex
-        T.StructField("n_src", T.LongType(), True),         # local gather slots
-        T.StructField("src_idx", T.BinaryType(), True),     # int64 local gather index
-        T.StructField("src_vids", T.BinaryType(), True),    # int64 GLOBAL vids of the
-                                                            # distinct sources (ascending —
-                                                            # the np.unique slot order); the
-                                                            # kernel gathers pr[src_vids]
-                                                            # directly
+        T.StructField("dang_mask", T.BinaryType(), False),  # uint8 per vertex
+        T.StructField("n_dang", T.LongType(), False),       # popcount of dang_mask
+        T.StructField("reset_arr", T.BinaryType(), True),   # float64 per vertex
+        T.StructField("src", T.BinaryType(), True),         # int64 source vid per edge
         T.StructField("indptr", T.BinaryType(), True),      # int64 CSR offsets
-        T.StructField("dst_local", T.BinaryType(), True),   # int64 bucket offsets of dsts
+        T.StructField("dst", T.BinaryType(), True),         # int64 vid of each dst run
         T.StructField("weight", T.BinaryType(), True),      # float64 edge weights
     ]
 )
-
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("vid", T.LongType(), False),
-        T.StructField("pr", T.DoubleType(), False),
-        T.StructField("abs_delta", T.DoubleType(), False),
-        T.StructField("dang_pr", T.DoubleType(), False),
-    ]
-)
-
 
 LOOP_SCHEMA = T.StructType(
     [
@@ -133,13 +102,8 @@ LOOP_SCHEMA = T.StructType(
 )
 
 
-def _bucket_size(n: int, b: int, P: int) -> int:
-    return (n - b + P - 1) // P if b < n else 0
-
-
-def bucket_update(
+def csr_update(
     old: np.ndarray,
-    x: np.ndarray | None,
     blk: dict | None,
     mask: np.ndarray,
     reset_arr: np.ndarray | None,
@@ -147,19 +111,15 @@ def bucket_update(
     d_: float,
     dm: float,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The per-bucket superstep math, the ONE copy every csr path runs
-    (per-superstep map, fused loop), so they agree bitwise by
-    construction. ``old``: the bucket's rank slice in local
-    (vid // P) order; ``x``: the ranks of the bucket's distinct sources in
-    gather-slot order; ``blk``: the decoded CSR arrays (None: no in-edges).
-    Gather by source, segment-sum over the lexsorted CSR
-    (np.add.reduceat, tuned_variant_csr.c:74-84), scatter to the dense
-    slice, damping + teleport/personalized base → (new, |new−old|,
-    dangling rank per vertex)."""
+    """One superstep over the vid-ordered rank vector ``old``; ``blk``: the
+    decoded CSR arrays (None: no edges). Gather by source, segment-sum
+    over the lexsorted CSR (np.add.reduceat, tuned_variant_csr.c:74-84),
+    scatter to the dense vector, damping + teleport/personalized base →
+    (new, |new−old|, dangling rank per vertex)."""
     acc = np.zeros(len(old), dtype=np.float64)
     if blk is not None:
-        contrib = blk["weight"] * x[blk["src_idx"]]               # gather+mul
-        acc[blk["dst_local"]] = np.add.reduceat(contrib, blk["indptr"][:-1])
+        contrib = blk["weight"] * old[blk["src"]]               # gather+mul
+        acc[blk["dst"]] = np.add.reduceat(contrib, blk["indptr"][:-1])
     if reset_arr is not None:
         base = ((1.0 - d_) + d_ * dm) * reset_arr
     else:
@@ -174,89 +134,40 @@ def loop_scalars(abs_delta: np.ndarray, dang_pr: np.ndarray) -> tuple[float, flo
     return float(abs_delta.sum()), float(dang_pr.sum())
 
 
-def _decode_row(tb, i: int) -> tuple[dict | None, np.ndarray, np.ndarray | None]:
-    """Row ``i`` of a layout Arrow table → (CSR arrays or None,
-    dangling mask, reset slice or None) as numpy views on the buffers."""
+def _decode_row(tb) -> tuple[dict | None, np.ndarray, np.ndarray | None]:
+    """The layout Arrow table's one row → (CSR arrays or None, dangling
+    mask, reset vector or None) as numpy views on the buffers."""
     blk = None
-    if tb["src_idx"][i].as_py() is not None:
-        blk = {"n_src": int(tb["n_src"][i].as_py())}
-        for col, dt in (
-            ("src_idx", np.int64),
-            ("src_vids", np.int64),
-            ("indptr", np.int64),
-            ("dst_local", np.int64),
-            ("weight", np.float64),
-        ):
-            blk[col] = np.frombuffer(tb[col][i].as_py(), dtype=dt)
-    mask = np.frombuffer(tb["dang_mask"][i].as_py(), dtype=np.uint8).astype(bool)
-    ra = tb["reset_arr"][i].as_py()
+    if tb["src"][0].is_valid:
+        blk = {
+            col: np.frombuffer(tb[col][0].as_py(), dtype=dt)
+            for col, dt in (
+                ("src", np.int64),
+                ("indptr", np.int64),
+                ("dst", np.int64),
+                ("weight", np.float64),
+            )
+        }
+    mask = np.frombuffer(tb["dang_mask"][0].as_py(), dtype=np.uint8).astype(bool)
+    ra = tb["reset_arr"][0].as_py()
     return blk, mask, None if ra is None else np.frombuffer(ra, dtype=np.float64)
 
 
-def _make_arrow_map_kernel(n_: int, P: int, d_: float, dm: float, bc):
-    """One superstep as ONE ``mapInArrow`` over the static layout table
-    (r6 restructure). The round-≤5 form broadcast-JOINED a
-    per-superstep LocalRelation of the rank vector and cogrouped —
-    measured at sf0.1 the LocalRelation build alone was 165 ms of the
-    368 ms superstep, all of it spent re-shipping and re-planning data the
-    driver already held. Here the rank vector crosses once per superstep
-    as an ``sc.broadcast`` numpy array, the kernel gathers pr[src_vids]
-    directly by GLOBAL vid, and the old rank for the delta is pr[b::P] —
-    no join, no cogroup, no per-superstep exchange at all. The math is
-    ``bucket_update``."""
-    import pyarrow as pa
-
-    def fused_map(batches):
-        pr_all = bc.value
-        for batch in batches:
-            tb = pa.Table.from_batches([batch])
-            out_vid, out_pr, out_ad, out_dp = [], [], [], []
-            for i in range(tb.num_rows):
-                b = int(tb["bucket"][i].as_py())
-                m = _bucket_size(n_, b, P)
-                if m == 0:
-                    continue
-                blk, mask, reset_arr = _decode_row(tb, i)
-                x = None if blk is None else pr_all[blk["src_vids"]]
-                new, abs_delta, dang_pr = bucket_update(
-                    pr_all[b::P], x, blk, mask, reset_arr, n_, d_, dm
-                )
-                out_vid.append(b + P * np.arange(m, dtype=np.int64))
-                out_pr.append(new)
-                out_ad.append(abs_delta)
-                out_dp.append(dang_pr)
-            if out_vid:
-                yield pa.record_batch(
-                    [
-                        pa.array(np.concatenate(out_vid)),
-                        pa.array(np.concatenate(out_pr)),
-                        pa.array(np.concatenate(out_ad)),
-                        pa.array(np.concatenate(out_dp)),
-                    ],
-                    names=["vid", "pr", "abs_delta", "dang_pr"],
-                )
-
-    return fused_map
-
-
 def _make_arrow_loop_kernel(n_: int, d_: float, dm0: float, bc, steps: int, tol: float | None):
-    """The WHOLE superstep loop as one ``mapInArrow`` task over a
-    one-bucket layout table (P=1, so local order is vid order). The
-    start vector arrives once as ``bc``; each superstep is
-    ``bucket_update`` + ``loop_scalars`` — the per-superstep job's math
-    and reduction order — until ``steps`` ran or the delta ``reached``
-    tol. Output: one LOOP_SCHEMA row per superstep, the final rank vector
-    (float64 bytes) on the last one."""
+    """Up to ``steps`` supersteps as one ``mapInArrow`` task over the layout
+    table. The start vector arrives once as ``bc``; each superstep is
+    ``csr_update`` + ``loop_scalars`` until ``steps`` ran or the delta
+    ``reached`` tol. Output: one LOOP_SCHEMA row per superstep, the final
+    rank vector (float64 bytes) on the last one."""
     import pyarrow as pa
 
     def loop_map(batches):
         tb = pa.Table.from_batches(list(batches))
-        blk, mask, reset_arr = _decode_row(tb, 0)
+        blk, mask, reset_arr = _decode_row(tb)
         pr, dm = bc.value, dm0
         deltas, dms = [], []
         for _ in range(steps):
-            x = None if blk is None else pr[blk["src_vids"]]
-            pr, abs_delta, dang_pr = bucket_update(pr, x, blk, mask, reset_arr, n_, d_, dm)
+            pr, abs_delta, dang_pr = csr_update(pr, blk, mask, reset_arr, n_, d_, dm)
             delta, dm = loop_scalars(abs_delta, dang_pr)
             deltas.append(delta)
             dms.append(dm)
@@ -274,34 +185,25 @@ def _make_arrow_loop_kernel(n_: int, d_: float, dm0: float, bc, steps: int, tol:
     return loop_map
 
 
-def build_layout(vid_edges: DataFrame, flagged: DataFrame, n: int, P: int) -> DataFrame:
-    """The call's layout in ONE cogrouped pass: (src, dst, weight) vid-space
-    edges bucketed by DESTINATION (dst % P) meet the flagged vids
-    (vid, _d[, reset_w]) of the same bucket (vid % P), and every bucket
-    compiles to one LAYOUT_SCHEMA row — its CSR block, dangling mask and,
-    when personalized, reset slice, all aligned to the dense bucket layout
-    (offset vid // P). Destination buckets make the per-superstep segment
-    sums final without a global re-aggregation, and the per-superstep
-    kernel needs no vertex-table join at all.
-
-    The layout has P partitions, so a superstep runs ≤P tasks (one at
-    P=1). Above P=1 both sides are hash-partitioned on the bucket into P
-    partitions and the cogroup reuses that exchange, so the compiled
-    blocks are never shuffled again. The CSR is a deterministic function
-    of the edge SET (lexsort by (dst, src)), not of shuffle arrival order
-    — a layout rebuilt on resume reduces in the same FP order."""
+def build_layout(vid_edges: DataFrame, flagged: DataFrame, n: int) -> DataFrame:
+    """The call's layout in ONE cogrouped pass: the (src, dst, weight)
+    vid-space edges meet the flagged vids (vid, _d[, reset_w]) under one
+    constant key and compile to the one LAYOUT_SCHEMA row — the CSR block,
+    the dangling mask and, when personalized, the reset vector, all
+    indexed by vid. The CSR is a deterministic function of the edge SET
+    (lexsort by (dst, src)), not of shuffle arrival order — a layout
+    rebuilt on resume reduces in the same FP order."""
     has_reset = "reset_w" in flagged.columns
 
-    def compile_bucket(epdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
-        b = int(fpdf["bucket"].iloc[0])
-        off = (fpdf["vid"].to_numpy(dtype=np.int64) - b) // P
-        mask = np.zeros(_bucket_size(n, b, P), dtype=np.uint8)
-        mask[off[fpdf["_d"].to_numpy(dtype=bool)]] = 1
+    def compile_layout(epdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
+        vid = fpdf["vid"].to_numpy(dtype=np.int64)
+        mask = np.zeros(n, dtype=np.uint8)
+        mask[vid[fpdf["_d"].to_numpy(dtype=bool)]] = 1
         row = dict.fromkeys(LAYOUT_SCHEMA.fieldNames())
-        row.update(bucket=b, dang_mask=mask.tobytes(), n_dang=int(mask.sum()))
+        row.update(dang_mask=mask.tobytes(), n_dang=int(mask.sum()))
         if has_reset:
-            r = np.zeros(len(mask), dtype=np.float64)
-            r[off] = fpdf["reset_w"].to_numpy(dtype=np.float64)
+            r = np.zeros(n, dtype=np.float64)
+            r[vid] = fpdf["reset_w"].to_numpy(dtype=np.float64)
             row["reset_arr"] = r.tobytes()
         if len(epdf):
             src = epdf["src"].to_numpy(dtype=np.int64)
@@ -312,28 +214,22 @@ def build_layout(vid_edges: DataFrame, flagged: DataFrame, n: int, P: int) -> Da
             dst_unique, counts = np.unique(dst, return_counts=True)
             indptr = np.zeros(len(dst_unique) + 1, dtype=np.int64)
             np.cumsum(counts, out=indptr[1:])
-            src_unique, src_idx = np.unique(src, return_inverse=True)
             row.update(
-                n_src=len(src_unique),
-                src_idx=src_idx.astype(np.int64).tobytes(),
-                src_vids=src_unique.astype(np.int64).tobytes(),
+                src=src.tobytes(),
                 indptr=indptr.tobytes(),
-                dst_local=((dst_unique - b) // P).tobytes(),
+                dst=dst_unique.tobytes(),
                 weight=w.tobytes(),
             )
         return pd.DataFrame([row])
 
-    def by_bucket(df: DataFrame, col: str):
-        df = df.withColumn("bucket", F.pmod(F.col(col), F.lit(P)).cast("int"))
-        # a 1-partition repartition plans as SinglePartition, which the
-        # cogroup does not reuse: it would shuffle the side a second time
-        return (df.repartition(P, "bucket") if P > 1 else df).groupBy("bucket")
-
+    # the cogroup shuffles its one key into spark.sql.shuffle.partitions
+    # partitions, all but one empty; the one-task loop reads one partition
+    key = F.lit(0).alias("layout")  # aliased: a bare integer is a column ordinal
     return (
-        by_bucket(vid_edges, "dst")
-        .cogroup(by_bucket(flagged, "vid"))
-        .applyInPandas(compile_bucket, schema=LAYOUT_SCHEMA)
-        .coalesce(P)
+        vid_edges.groupBy(key)
+        .cogroup(flagged.groupBy(key))
+        .applyInPandas(compile_layout, schema=LAYOUT_SCHEMA)
+        .coalesce(1)
     )
 
 
@@ -343,27 +239,26 @@ def clear_compile_cache() -> None:
     benchmark harness (perfbench/workloads.py) still calls it."""
 
 
-class _Csr(_Kernel):
+class _Csr:
     """The csr kernel, in dense-vid key space 0..n-1; ranks map back to
     entities once, at the end. The state is the dense vid-indexed numpy
-    rank vector, held on the driver. Each superstep ships it as one
-    ``sc.broadcast`` and runs ONE ``mapInArrow`` job over the cached
-    layout table — no join, no cogroup, no exchange (plan: InMemoryScan →
-    MapInArrow → ArrowCollect; see _make_arrow_map_kernel). The
-    loop-carried scalars reduce in FIXED vid-sorted numpy order. Its ranks
-    are column-identical to the join-agg kernel's (cross-kernel
-    differential bar: 1e-12, SURVEY.md §5 item 3).
+    rank vector, held on the driver; ``supersteps`` ships it as one
+    ``sc.broadcast`` to one ``mapInArrow`` task over the cached layout —
+    no join, no exchange. The loop-carried scalars reduce in FIXED vid
+    order. Its ranks are column-identical to the join-agg kernel's
+    (cross-kernel differential bar: 1e-12, SURVEY.md §5 item 3).
 
     The constructor builds the call's layout — the DISTRIBUTE_DATA moment
     (tuned_variant_baseline.c:247-324): the vid assignment, the vid-space
-    edges, and ONE cogrouped pass (build_layout) that compiles each
-    bucket's CSR block, dangling mask and, when ``reset`` is given, its
-    slice of the normalized reset distribution. ``release`` unpersists
-    all of it when the call returns. The id map and the result are
-    localCheckpointed, not persisted; Spark's ContextCleaner frees their
-    blocks once they are unreferenced."""
+    edges, and ONE cogrouped pass (build_layout) that compiles the CSR
+    block, the dangling mask and, when ``reset`` is given, the normalized
+    reset distribution. A layout above LAYOUT_BYTES_LIMIT raises before it
+    is built. ``release`` unpersists all of it when the call returns. The
+    id map and the result are localCheckpointed, not persisted; Spark's
+    ContextCleaner frees their blocks once they are unreferenced."""
 
     key = "vid"
+    partitions = 1  # the layout is one row, read by one task
     _bc = None
 
     def __init__(
@@ -376,8 +271,6 @@ class _Csr(_Kernel):
         damping: float,
         reset: DataFrame | None,
     ):
-        from pagerank_optimization_spark.plans.partitioning import effective_partitions
-
         self.id_col, self.damping = id_col, float(damping)
         # normalize the external id column to 'entity' for the vid mapping
         # (works for string entities and for already-numeric ids alike);
@@ -412,13 +305,16 @@ class _Csr(_Kernel):
         )
         self._cached.append(vid_edges)
         self.nnz = vid_edges.count()
-        # scale-adaptive bucket count (r6, guide §2.2): the caller's
-        # ``partitions`` is the cluster-sized cap; the layout uses what the
-        # graph needs. Small graphs get a few big CSR blocks (less
-        # per-superstep task scheduling, longer numpy vectors — strictly
-        # better on both axes); big graphs keep the caller's parallelism.
-        # Deterministic per graph, so a resumed run rebuilds identically.
-        self.partitions = effective_partitions(partitions, max(self.nnz, self.n))
+        # the layout row's payload, at most: src and weight per edge,
+        # indptr and dst per destination, dangling mask and reset per vertex
+        need = 16 * self.nnz + 25 * self.n + 8
+        if need > LAYOUT_BYTES_LIMIT:
+            self.release()
+            raise ValueError(
+                f"pagerank: the csr layout of {self.n} vertices and {self.nnz} edges "
+                f"needs ~{need / 2**30:.1f} GiB, more than one Spark row holds "
+                f'({LAYOUT_BYTES_LIMIT} bytes); use kernel="join-agg"'
+            )
 
         has_out = vid_edges.select(F.col("src").alias("vid")).distinct()
         flagged = self.vertices.join(has_out.withColumn("_o", F.lit(True)), "vid", "left").select(
@@ -430,16 +326,14 @@ class _Csr(_Kernel):
             flagged = flagged.join(self.reset, "vid", "left").select(
                 "vid", "_d", F.coalesce(F.col("reset_w"), F.lit(0.0)).alias("reset_w")
             )
-        self.layout = build_layout(vid_edges, flagged, self.n, self.partitions).persist()
+        self.layout = build_layout(vid_edges, flagged, self.n).persist()
         self._cached.append(self.layout)
-        # the scan that sums the dangling popcount also materializes the
+        # the scan that reads the dangling popcount also materializes the
         # cached layout NOW: DISTRIBUTE_DATA belongs to setup, not to the
         # first timed superstep (the reference's timer starts after
         # distribution, timer_op.c; join-agg's setup likewise materializes
         # its co-partitioned cache via its nnz count)
-        self.n_dangling = int(
-            self.layout.agg(F.coalesce(F.sum("n_dang"), F.lit(0))).collect()[0][0]
-        )
+        self.n_dangling = int(self.layout.select("n_dang").collect()[0][0])
 
     def keyed(self, frame: DataFrame, col: str) -> DataFrame:
         """Entity space → vid space; rows on unknown ids drop."""
@@ -466,40 +360,30 @@ class _Csr(_Kernel):
         pr[pdf["vid"].to_numpy(dtype=np.int64)] = pdf["pr"].to_numpy(dtype=np.float64)
         return pr
 
-    def step(self, pr: np.ndarray, dm: float):
-        self._bc = bc = self.spark.sparkContext.broadcast(pr)
-        fused_map = _make_arrow_map_kernel(int(self.n), self.partitions, self.damping, dm, bc)
-        pdf = (
-            self.layout.mapInArrow(fused_map, schema=STATE_SCHEMA)
-            .toPandas()
-            .sort_values("vid", kind="mergesort", ignore_index=True)
-        )
-        delta, next_dm = loop_scalars(pdf["abs_delta"].to_numpy(), pdf["dang_pr"].to_numpy())
-        bc.destroy()
-        self._bc = None
-        return pdf["pr"].to_numpy(dtype=np.float64).copy(), delta, next_dm
-
     def supersteps(self, pr: np.ndarray, dm: float, *, steps: int, tol, every_state: bool):
-        """One bucket and no consumer of intermediate states: run the whole
-        loop in ONE mapInArrow task (_make_arrow_loop_kernel) instead of
-        one job per superstep — at P=1 the superstep's numpy work is
-        ~0.1 ms and its job dispatch ~300 ms. Otherwise the default
-        per-superstep jobs. The one job's driver wall time is split evenly
-        over the records, so Σ wall_ms is the loop's time either way."""
-        if every_state or self.partitions != 1 or steps <= 0:
-            yield from super().supersteps(pr, dm, steps=steps, tol=tol, every_state=every_state)
-            return
-        t0 = time.monotonic()
-        self._bc = bc = self.spark.sparkContext.broadcast(pr)
-        loop_map = _make_arrow_loop_kernel(int(self.n), self.damping, dm, bc, steps, tol)
-        rows = self.layout.mapInArrow(loop_map, schema=LOOP_SCHEMA).collect()
-        bc.destroy()
-        self._bc = None
-        final = np.frombuffer(rows[-1]["pr"], dtype=np.float64).copy()
-        wall_ms = (time.monotonic() - t0) * 1000.0 / len(rows)
-        for i, r in enumerate(rows, 1):
-            state = final if i == len(rows) else None
-            yield Superstep(state, r["l1_delta"], r["dangling_mass_next"], wall_ms)
+        """The whole loop in ONE mapInArrow task (_make_arrow_loop_kernel);
+        when ``every_state`` (a checkpointer saves each state), one such
+        task per superstep. A job's driver wall time is split evenly over
+        its records, so Σ wall_ms is the loop's time either way."""
+        done = 0
+        while done < steps:
+            t0 = time.monotonic()
+            self._bc = bc = self.spark.sparkContext.broadcast(pr)
+            loop_map = _make_arrow_loop_kernel(
+                int(self.n), self.damping, dm, bc, 1 if every_state else steps - done, tol
+            )
+            rows = self.layout.mapInArrow(loop_map, schema=LOOP_SCHEMA).collect()
+            bc.destroy()
+            self._bc = None
+            pr = np.frombuffer(rows[-1]["pr"], dtype=np.float64).copy()
+            wall_ms = (time.monotonic() - t0) * 1000.0 / len(rows)
+            for i, r in enumerate(rows, 1):
+                yield Superstep(pr if i == len(rows) else None, r["l1_delta"],
+                                r["dangling_mass_next"], wall_ms)
+            done += len(rows)
+            dm = rows[-1]["dangling_mass_next"]
+            if reached(rows[-1]["l1_delta"], tol):
+                return
 
     def to_frame(self, pr: np.ndarray) -> DataFrame:
         return self.spark.createDataFrame(

@@ -71,8 +71,8 @@ def effective_partitions(requested: int, rows: int | None) -> int:
 # threshold = max(min_deg, ratio·p99). This matters because AQE (whose
 # skew-join would otherwise help) is deliberately OFF inside superstep
 # loops (session.iterative_conf). The csr-blocks kernel needs none of
-# this: a hub's edges are contiguous CSR segments reduced by vectorized
-# np.add.reduceat inside an evenly-sized bucket.
+# this: a hub's edges are one contiguous CSR segment reduced by vectorized
+# np.add.reduceat inside the one csr task.
 HUB_SPLIT_AUTO_MIN_DEG = 10_000
 HUB_SPLIT_AUTO_RATIO = 4.0
 

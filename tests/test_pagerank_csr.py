@@ -50,14 +50,14 @@ def test_csr_kernel_matches_numpy_converged(graph):
 
 
 def test_csr_kernel_partition_count_invariance(graph):
-    """Physical partitioning must not change the result (the reference's
-    OpenMP reorder tolerance was 1e-4 because of float32; float64 bucketed
-    sums agree to ~1e-15)."""
+    """Physical partitioning must not change the result, not even in the
+    last ulp: every ``partitions`` compiles the same one CSR block and
+    reduces it in the same order (the reference's OpenMP reorder tolerance
+    was 1e-4 because of float32)."""
     vertices, wedges, _, _ = graph
     a = _d(pagerank(vertices, wedges, fixed_iters=3, partitions=3, kernel="csr-blocks").ranks)
     b = _d(pagerank(vertices, wedges, fixed_iters=3, partitions=16, kernel="csr-blocks").ranks)
-    ks = sorted(a)
-    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], atol=1e-12)
+    assert a == b
 
 
 FUSED_CASES = ["converged", "fixed5", "personalized", "x0"]
@@ -65,9 +65,9 @@ FUSED_CASES = ["converged", "fixed5", "personalized", "x0"]
 
 @pytest.mark.parametrize("case", FUSED_CASES)
 def test_fused_loop_bitwise_equals_per_superstep_jobs(spark, graph, tmp_path, case):
-    """A one-bucket broadcast layout runs the whole loop in one task when no
-    checkpointer needs each superstep's state (no job per superstep); a
-    checkpointed run of the same graph takes one job per superstep. Both
+    """The csr kernel runs the whole loop in one task when no checkpointer
+    needs each superstep's state (no job per superstep); a checkpointed
+    run of the same graph takes one one-superstep job per superstep. Both
     run the same numpy update in the same order, so deltas, dangling
     masses and ranks are float64-equal, not just close."""
     from pagerank_optimization_spark.checkpoint import CheckpointManager
@@ -133,12 +133,11 @@ def test_one_bucket_loop_starts_no_job_per_superstep(spark, graph):
     assert _jobs_per_extra_superstep(spark, vertices, wedges, "csr-p1", **kw) == 0
 
 
-def test_multi_bucket_loop_starts_one_job_per_superstep(spark):
-    """Above ROWS_PER_PARTITION rows the layout has several buckets; the
-    csr kernel then keeps one mapInArrow job per superstep."""
-    from pagerank_optimization_spark.plans.partitioning import ROWS_PER_PARTITION
-
-    n = ROWS_PER_PARTITION + 4_464
+def test_large_ring_loop_runs_one_block_and_no_job_per_superstep(spark):
+    """Above ROWS_PER_PARTITION rows at ``partitions=4`` the vid assignment
+    runs several partitions, yet the layout is still one CSR block and the
+    loop still runs in one task."""
+    n = 70_000  # > ROWS_PER_PARTITION (65,536)
     ids = spark.range(n)
     vertices = ids.select(F.col("id").cast("string").alias("entity")).cache()
     ring = ids.select(  # a directed ring: every rank is 1/n
@@ -148,10 +147,10 @@ def test_multi_bucket_loop_starts_one_job_per_superstep(spark):
     ).cache()
     kw = {"partitions": 4, "kernel": "csr-blocks"}
     res = pagerank(vertices, ring, fixed_iters=2, **kw)
-    assert res.metrics[0]["n_partitions"] > 1
+    assert res.metrics[0]["n_partitions"] == 1
     pr = np.array([r[0] for r in res.ranks.select("pr").collect()])
     assert len(pr) == n and np.allclose(pr, 1.0 / n, rtol=0, atol=1e-15)
-    assert _jobs_per_extra_superstep(spark, vertices, ring, "csr-p4", **kw) == 1
+    assert _jobs_per_extra_superstep(spark, vertices, ring, "csr-ring", **kw) == 0
     vertices.unpersist()
     ring.unpersist()
 
@@ -174,8 +173,25 @@ def test_csr_blocks_runs_above_broadcast_row_limit(graph, monkeypatch):
     assert np.allclose([a[k] for k in ks], [b[k] for k in ks], atol=1e-12)
 
 
+def _left_cached(spark, fn) -> tuple[list, list]:
+    """Run ``fn`` with DataFrame.persist spied on → (the frames it
+    persisted, those of them that Spark's cache manager still holds)."""
+    frame_cls = type(spark.range(1))
+    persist, persisted = frame_cls.persist, []
+
+    def spy(self, *args, **kwargs):
+        persisted.append(self)
+        return persist(self, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(frame_cls, "persist", spy)
+        fn()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    return persisted, [df for df in persisted if cache.lookupCachedData(df._jdf).isDefined()]
+
+
 @pytest.mark.parametrize("personalized", [False, True], ids=["plain", "personalized"])
-def test_csr_call_releases_what_it_cached(spark, graph, monkeypatch, personalized):
+def test_csr_call_releases_what_it_cached(spark, graph, personalized):
     """A csr call builds its layout for itself and unpersists it before it
     returns: afterwards Spark's cache manager holds no DataFrame that the
     call persisted. Frames cached outside the call are left alone."""
@@ -184,16 +200,28 @@ def test_csr_call_releases_what_it_cached(spark, graph, monkeypatch, personalize
     # earlier calls on the fixture's frames left behind
     vertices, wedges = vertices.select("*"), wedges.select("*")
     kw = {"reset": _agent_reset(vertices)} if personalized else {}
-    frame_cls = type(vertices)
-    persist, persisted = frame_cls.persist, []
-
-    def spy(self, *args, **kwargs):
-        persisted.append(self)
-        return persist(self, *args, **kwargs)
-
-    monkeypatch.setattr(frame_cls, "persist", spy)
-    pagerank(vertices, wedges, fixed_iters=2, partitions=8, kernel="csr-blocks", **kw)
-    monkeypatch.undo()
-    cache = spark._jsparkSession.sharedState().cacheManager()
+    persisted, cached = _left_cached(
+        spark,
+        lambda: pagerank(vertices, wedges, fixed_iters=2, partitions=8, kernel="csr-blocks", **kw),
+    )
     assert persisted
-    assert [df for df in persisted if cache.lookupCachedData(df._jdf).isDefined()] == []
+    assert cached == []
+
+
+def test_csr_layout_above_row_limit_raises(spark, graph, monkeypatch):
+    """The layout is one Spark row; one that would exceed
+    LAYOUT_BYTES_LIMIT raises before it is built, points at join-agg and
+    leaves nothing cached."""
+    from pagerank_optimization_spark.operators import pagerank_csr
+
+    vertices, wedges, _, _ = graph
+    vertices, wedges = vertices.select("*"), wedges.select("*")
+    monkeypatch.setattr(pagerank_csr, "LAYOUT_BYTES_LIMIT", 1_000)
+
+    def call():
+        with pytest.raises(ValueError, match='use kernel="join-agg"'):
+            pagerank(vertices, wedges, fixed_iters=2, partitions=8, kernel="csr-blocks")
+
+    persisted, cached = _left_cached(spark, call)
+    assert persisted
+    assert cached == []

@@ -1,12 +1,13 @@
-"""Per-partition CSR kernel microbenchmark — compute-parity context vs the
+"""CSR kernel microbenchmark — compute-parity context vs the
 reference's GFLOP/s metric (timer_op.c:281-289: 2 FLOPs/edge/superstep).
 
 The Spark numbers in bench.py include orchestration (shuffle, scheduling,
 checkpointing); the reference's numbers are a bare in-cache kernel loop.
 This tool measures OUR bare kernel — the numpy body that runs inside
-``applyInPandas`` per bucket (pagerank_csr.spmv: fancy-index gather,
-multiply, ``np.add.reduceat`` segment sum) — single-threaded on
-reference-like data, so the two kernels can be compared apples-to-apples.
+the csr kernel's one ``mapInArrow`` task (pagerank_csr.csr_update:
+fancy-index gather, multiply, ``np.add.reduceat`` segment sum) —
+single-threaded on reference-like data, so the two kernels can be
+compared apples-to-apples.
 
 Usage: python tools/kernel_microbench.py [nnz_millions]
 """
