@@ -292,9 +292,9 @@ def build_graph(
     return vertices, weighted
 
 
-def vertex_ids_counted(
+def vertex_ids(
     vertices: DataFrame, *, partitions: int | None = None, eager: bool = True
-) -> tuple[DataFrame, int]:
+) -> DataFrame:
     """Deterministic dense vid per entity: vid = rank of entity in global
     sorted order, 0-based LongType (the reference's int32 ids,
     sparse.h:63-64, are a scale limit we deliberately do not copy).
@@ -316,8 +316,8 @@ def vertex_ids_counted(
     across parallelism levels and runs. zipWithIndex-over-sorted-partitions,
     DataFrame-native.
 
-    ``eager=True`` (default) localCheckpoints the result — the map is
-    reused every superstep; ``eager=False`` returns the lazy plan as a
+    ``eager=True`` (default) localCheckpoints the result — callers join
+    the map more than once; ``eager=False`` returns the lazy plan as a
     PLAN-AUDIT-ONLY hook (tests assert it contains no single-partition
     exchange) — do not execute it: a lazy re-materialization re-runs the
     range sampler, whose boundaries are not stable across recomputations,
@@ -346,7 +346,7 @@ def vertex_ids_counted(
         (F.col("_base") + F.row_number().over(w) - 1).cast("long").alias("vid"),
     )
     if eager:
-        out = out.localCheckpoint(eager=True)  # ids are reused every superstep
+        out = out.localCheckpoint(eager=True)  # callers join it more than once
     # the counts pass is done with the cache either way; in eager mode the
     # checkpoint above also materialized the assignment from the SAME cached
     # layout (required: range-sampler boundaries are NOT stable across
@@ -354,12 +354,4 @@ def vertex_ids_counted(
     # would mis-assign vids). eager=False is therefore a PLAN-AUDIT-ONLY
     # mode: inspect the returned plan, do not execute it.
     ranged.unpersist()
-    return out, acc
-
-
-def vertex_ids(
-    vertices: DataFrame, *, partitions: int | None = None, eager: bool = True
-) -> DataFrame:
-    """See vertex_ids_counted — same assignment, without the (free) total
-    count that the counting pass produces as a by-product."""
-    return vertex_ids_counted(vertices, partitions=partitions, eager=eager)[0]
+    return out

@@ -43,7 +43,8 @@ def label_propagation(
     ``checkpointer``: optional CheckpointManager — labels land durably per
     round under the same commit protocol as PageRank ranks; a killed run
     resumes at the first unfinished round, bitwise-identical (labels are
-    discrete strings)."""
+    discrete strings). With ``until_stable`` a round's metrics row records
+    its changed-label count as ``l1_delta``, as connected_components does."""
     import time
 
     spark = vertices.sparkSession
@@ -112,7 +113,7 @@ def label_propagation(
                        "wall_ms": (time.monotonic() - t0) * 1000.0,
                        "n_partitions": partitions}
                 if changed is not None:
-                    row["labels_changed"] = changed
+                    row["l1_delta"] = float(changed)
                 checkpointer.save(it, labels, row)
             if until_stable and changed == 0:
                 break

@@ -8,19 +8,19 @@ segment (tuned_variant_csr.c:72-84), then vectorize the gather with AVX2
 segment with an 8-lane horizontal sum (tuned_variant_simd.c:244-269).
 
 Like the reference, this kernel (``_Csr``) runs over ONE CSR matrix. Each
-call builds it for itself, in one cogrouped pass (``build_layout``), as
-ONE layout row indexed by the dense vid 0..n-1, and frees it when it
-returns. The one superstep loop (operators.pagerank._drive) runs over it:
+call builds it for itself, in ONE task (``build_layout``), as ONE layout
+row, and frees it when it returns. The one superstep loop
+(operators.pagerank._drive) runs over it:
 
-- vertex ids are dense 0..n-1, so the rank vector, the dangling mask and
-  the reset vector are flat arrays indexed by vid. No vertex list is
-  ever materialized;
-- the edges are compiled into the CSR block: deterministic (dst, src)
-  lexsort (the counting sort of tuned_variant_csr.c:179-229 with a fixed
-  total order, so a rebuilt block is bit-identical regardless of shuffle
-  arrival order), indptr over the dst runs, each edge's global source
-  vid. The same pass writes the dangling mask and reset vector beside the
-  block; it is the DISTRIBUTE_DATA moment
+- a vertex's dense vid 0..n-1 is its position among the sorted distinct
+  ids, which ride in the row, so the id map is a lazy projection of it.
+  The rank, dangling and reset vectors are flat arrays indexed by vid;
+- the edges, mapped to vids by one hash lookup, are compiled into the
+  CSR block: deterministic (dst, src) lexsort (the counting sort of
+  tuned_variant_csr.c:179-229 with a fixed total order, so a rebuilt
+  block is bit-identical regardless of shuffle arrival order), indptr
+  over the dst runs, each edge's global source vid; the dangling vids
+  ride beside it. It is the DISTRIBUTE_DATA moment
   (tuned_variant_baseline.c:247-324);
 - a superstep does the whole update inside the Arrow task
   (``csr_update``): gather the ranks by source (numpy fancy indexing —
@@ -32,21 +32,22 @@ returns. The one superstep loop (operators.pagerank._drive) runs over it:
   out of one pass — no join, no exchange.
 
 Record iterator (the contract of operators.pagerank._drive): the start
-vector crosses once as an ``sc.broadcast`` and ONE ``mapInArrow`` task
-over the cached layout loops ``csr_update`` → ``loop_scalars`` to
-``steps`` or to the shared ``reached`` rule, returning the final vector
-plus one (l1_delta, dangling_mass_next) row per superstep, which become
-the ``Superstep`` records; the job's driver time is split evenly over
-their ``wall_ms``. A checkpointed run needs every superstep's state, so
-it runs the same task with ``steps=1`` once per superstep. A superstep's
-numpy work is ~0.1 ms on the benchmark graph and a job's dispatch
-~300 ms, so the uncheckpointed loop costs about one job. Both forms run
-the same function in the same order, so they agree bitwise.
+vector (with the reset vector beside it) crosses once as an
+``sc.broadcast`` and ONE ``mapInArrow`` task over the cached layout
+loops ``csr_update`` → ``loop_scalars`` to ``steps`` or to the shared
+``reached`` rule, returning the final vector plus one (l1_delta,
+dangling_mass_next) row per superstep, which become the ``Superstep``
+records; the job's driver time is split evenly over their ``wall_ms``. A
+checkpointed run needs every superstep's state, so it runs the same task
+with ``steps=1`` once per superstep. A superstep's numpy work is ~0.1 ms
+on the benchmark graph and a job's dispatch ~300 ms, so the
+uncheckpointed loop costs about one job. Both forms run the same function
+in the same order, so they agree bitwise.
 
-``kernel="auto"`` sends graphs above BROADCAST_ROW_LIMIT vertices to
-join-agg, which keeps the rank vector in the JVM; an explicit
-``kernel="csr-blocks"`` keeps it on the driver at any |V| whose layout
-fits in one Spark row (LAYOUT_BYTES_LIMIT), and raises above that.
+``kernel="auto"`` sends graphs above BROADCAST_ROW_LIMIT vertices or
+LAYOUT_BYTES_LIMIT layout bytes to join-agg, which keeps the rank vector
+in the JVM; an explicit ``kernel="csr-blocks"`` keeps it on the driver
+at any |V| whose layout fits in one Spark row, and raises above that.
 
 No per-row Python anywhere (input_hint requirement): everything crossing
 the JVM↔Python boundary is an Arrow batch, everything inside is numpy.
@@ -67,7 +68,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pagerank_optimization_spark.operators.graph_build import vertex_ids_counted
 from pagerank_optimization_spark.operators.pagerank import Superstep, _teleport, reached
 
 # Above this row count an id-map broadcast risks executor OOM at the
@@ -79,20 +79,6 @@ BROADCAST_ROW_LIMIT = 1_000_000
 # is one JVM byte array); 1 MiB is left for the row's header and padding.
 LAYOUT_BYTES_LIMIT = 2**31 - 2**20
 
-# The one layout row. The CSR columns are null for a graph without edges;
-# reset_arr is null unless the run is personalized.
-LAYOUT_SCHEMA = T.StructType(
-    [
-        T.StructField("dang_mask", T.BinaryType(), False),  # uint8 per vertex
-        T.StructField("n_dang", T.LongType(), False),       # popcount of dang_mask
-        T.StructField("reset_arr", T.BinaryType(), True),   # float64 per vertex
-        T.StructField("src", T.BinaryType(), True),         # int64 source vid per edge
-        T.StructField("indptr", T.BinaryType(), True),      # int64 CSR offsets
-        T.StructField("dst", T.BinaryType(), True),         # int64 vid of each dst run
-        T.StructField("weight", T.BinaryType(), True),      # float64 edge weights
-    ]
-)
-
 LOOP_SCHEMA = T.StructType(
     [
         T.StructField("l1_delta", T.DoubleType(), False),
@@ -100,6 +86,43 @@ LOOP_SCHEMA = T.StructType(
         T.StructField("pr", T.BinaryType(), True),  # float64 ranks, last row only
     ]
 )
+
+
+def layout_schema(id_type: T.DataType) -> T.StructType:
+    """The one layout row, for vertex ids of Spark type ``id_type``. The
+    CSR columns are null for a graph without edges."""
+    return T.StructType(
+        [
+            T.StructField("ids", T.ArrayType(id_type), False),  # sorted: vid = position
+            T.StructField("dangling", T.ArrayType(T.LongType(), False), False),  # sorted vids
+            T.StructField("nnz", T.LongType(), False),  # edges in the CSR block
+            T.StructField("src", T.BinaryType(), True),     # int64 source vid per edge
+            T.StructField("indptr", T.BinaryType(), True),  # int64 CSR offsets
+            T.StructField("dst", T.BinaryType(), True),     # int64 vid of each dst run
+            T.StructField("weight", T.BinaryType(), True),  # float64 edge weights
+        ]
+    )
+
+
+def layout_bytes(n: int, n_edges: int, id_bytes: int) -> int:
+    """Bound on the layout row's payload: src and weight per edge; indptr,
+    dst, a dangling vid and null bits per vertex; the ids' ``id_bytes``."""
+    return 16 * n_edges + 25 * n + id_bytes + 8
+
+
+class LayoutTooLarge(ValueError):
+    """The csr layout would exceed LAYOUT_BYTES_LIMIT (one Spark row)."""
+
+
+def _sizes(ids: DataFrame, edges: DataFrame) -> tuple[int, int, int]:
+    """(vertex rows, edge rows, id bytes) in one job. A string id takes an
+    8-byte slot plus its bytes padded to 8 (≤ 16 + octet_length), others 8."""
+    string_ids = isinstance(ids.schema["entity"].dataType, (T.StringType, T.BinaryType))
+    width = F.octet_length("entity") + 16 if string_ids else F.lit(8)
+    sized = ids.select(F.lit(1).alias("v"), F.lit(0).alias("e"), width.alias("b")).unionByName(
+        edges.select(F.lit(0).alias("v"), F.lit(1).alias("e"), F.lit(0).alias("b"))
+    )
+    return tuple(int(x or 0) for x in sized.agg(*(F.sum(c) for c in "veb")).collect()[0])
 
 
 def csr_update(
@@ -134,37 +157,29 @@ def loop_scalars(abs_delta: np.ndarray, dang_pr: np.ndarray) -> tuple[float, flo
     return float(abs_delta.sum()), float(dang_pr.sum())
 
 
-def _decode_row(tb) -> tuple[dict | None, np.ndarray, np.ndarray | None]:
+def _decode_row(tb, n_: int) -> tuple[dict | None, np.ndarray]:
     """The layout Arrow table's one row → (CSR arrays or None, dangling
-    mask, reset vector or None) as numpy views on the buffers."""
+    mask of ``n_`` vertices) as numpy arrays over the buffers."""
+    dtypes = {"src": np.int64, "indptr": np.int64, "dst": np.int64, "weight": np.float64}
     blk = None
     if tb["src"][0].is_valid:
-        blk = {
-            col: np.frombuffer(tb[col][0].as_py(), dtype=dt)
-            for col, dt in (
-                ("src", np.int64),
-                ("indptr", np.int64),
-                ("dst", np.int64),
-                ("weight", np.float64),
-            )
-        }
-    mask = np.frombuffer(tb["dang_mask"][0].as_py(), dtype=np.uint8).astype(bool)
-    ra = tb["reset_arr"][0].as_py()
-    return blk, mask, None if ra is None else np.frombuffer(ra, dtype=np.float64)
+        blk = {col: np.frombuffer(tb[col][0].as_py(), dtype=dt) for col, dt in dtypes.items()}
+    mask = np.zeros(n_, dtype=bool)
+    mask[tb["dangling"][0].values.to_numpy()] = True
+    return blk, mask
 
 
 def _make_arrow_loop_kernel(n_: int, d_: float, dm0: float, bc, steps: int, tol: float | None):
     """Up to ``steps`` supersteps as one ``mapInArrow`` task over the layout
-    table. The start vector arrives once as ``bc``; each superstep is
-    ``csr_update`` + ``loop_scalars`` until ``steps`` ran or the delta
-    ``reached`` tol. Output: one LOOP_SCHEMA row per superstep, the final
-    rank vector (float64 bytes) on the last one."""
+    table. The start and reset vectors arrive once as ``bc``; each
+    superstep is ``csr_update`` + ``loop_scalars`` until ``steps`` ran or
+    the delta ``reached`` tol. Output: one LOOP_SCHEMA row per superstep,
+    the final rank vector (float64 bytes) on the last one."""
     import pyarrow as pa
 
     def loop_map(batches):
-        tb = pa.Table.from_batches(list(batches))
-        blk, mask, reset_arr = _decode_row(tb)
-        pr, dm = bc.value, dm0
+        blk, mask = _decode_row(pa.Table.from_batches(list(batches)), n_)
+        (pr, reset_arr), dm = bc.value, dm0
         deltas, dms = [], []
         for _ in range(steps):
             pr, abs_delta, dang_pr = csr_update(pr, blk, mask, reset_arr, n_, d_, dm)
@@ -185,50 +200,56 @@ def _make_arrow_loop_kernel(n_: int, d_: float, dm0: float, bc, steps: int, tol:
     return loop_map
 
 
-def build_layout(vid_edges: DataFrame, flagged: DataFrame, n: int) -> DataFrame:
-    """The call's layout in ONE cogrouped pass: the (src, dst, weight)
-    vid-space edges meet the flagged vids (vid, _d[, reset_w]) under one
-    constant key and compile to the one LAYOUT_SCHEMA row — the CSR block,
-    the dangling mask and, when personalized, the reset vector, all
-    indexed by vid. The CSR is a deterministic function of the edge SET
+def build_layout(edges: DataFrame, ids: DataFrame) -> DataFrame:
+    """The call's layout in ONE task: the entity-space edges (src, dst,
+    weight) meet the vertex ids (entity) under one constant key and
+    compile to the one ``layout_schema`` row. vid = position among the
+    distinct ids sorted in their native type (Arrow orders strings by
+    UTF-8 bytes, as Spark does); an edge with an endpoint that is not a
+    vertex drops. The CSR is a deterministic function of the edge SET
     (lexsort by (dst, src)), not of shuffle arrival order — a layout
     rebuilt on resume reduces in the same FP order."""
-    has_reset = "reset_w" in flagged.columns
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def compile_layout(epdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
-        vid = fpdf["vid"].to_numpy(dtype=np.int64)
-        mask = np.zeros(n, dtype=np.uint8)
-        mask[vid[fpdf["_d"].to_numpy(dtype=bool)]] = 1
-        row = dict.fromkeys(LAYOUT_SCHEMA.fieldNames())
-        row.update(dang_mask=mask.tobytes(), n_dang=int(mask.sum()))
-        if has_reset:
-            r = np.zeros(n, dtype=np.float64)
-            r[vid] = fpdf["reset_w"].to_numpy(dtype=np.float64)
-            row["reset_arr"] = r.tobytes()
-        if len(epdf):
-            src = epdf["src"].to_numpy(dtype=np.int64)
-            dst = epdf["dst"].to_numpy(dtype=np.int64)
-            w = epdf["weight"].to_numpy(dtype=np.float64)
+    schema = layout_schema(ids.schema["entity"].dataType)
+    arrow_schema = to_arrow_schema(schema)
+
+    def compile_layout(etb, vtb):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        ids = pc.unique(vtb["entity"])
+        ids = ids.take(pc.sort_indices(ids, null_placement="at_start"))
+        ends = pa.chunked_array(etb["src"].chunks + etb["dst"].chunks, ids.type)
+        vid = pc.fill_null(pc.index_in(ends, value_set=ids, skip_nulls=True), -1)
+        src, dst = np.split(vid.to_numpy().astype(np.int64), [etb.num_rows])
+        keep = (src >= 0) & (dst >= 0)
+        src, dst, w = src[keep], dst[keep], etb["weight"].to_numpy()[keep]
+        has_out = np.zeros(len(ids), dtype=bool)
+        has_out[src] = True
+        dangling = pa.array(np.flatnonzero(~has_out))
+        csr = dict.fromkeys(("src", "indptr", "dst", "weight"))
+        if len(src):
             order = np.lexsort((src, dst))  # deterministic total order
             src, dst, w = src[order], dst[order], w[order]
             dst_unique, counts = np.unique(dst, return_counts=True)
             indptr = np.zeros(len(dst_unique) + 1, dtype=np.int64)
             np.cumsum(counts, out=indptr[1:])
-            row.update(
-                src=src.tobytes(),
-                indptr=indptr.tobytes(),
-                dst=dst_unique.tobytes(),
-                weight=w.tobytes(),
-            )
-        return pd.DataFrame([row])
+            csr.update(src=src, indptr=indptr, dst=dst_unique, weight=w)
+        row = {"ids": pa.ListArray.from_arrays([0, len(ids)], ids),
+               "dangling": pa.ListArray.from_arrays([0, len(dangling)], dangling),
+               "nnz": pa.array([len(src)])}
+        for col, arr in csr.items():
+            row[col] = pa.array([None if arr is None else arr.tobytes()], pa.binary())
+        return pa.table(row).cast(arrow_schema)
 
     # the cogroup shuffles its one key into spark.sql.shuffle.partitions
     # partitions, all but one empty; the one-task loop reads one partition
     key = F.lit(0).alias("layout")  # aliased: a bare integer is a column ordinal
     return (
-        vid_edges.groupBy(key)
-        .cogroup(flagged.groupBy(key))
-        .applyInPandas(compile_layout, schema=LAYOUT_SCHEMA)
+        edges.groupBy(key)
+        .cogroup(ids.groupBy(key))
+        .applyInArrow(compile_layout, schema=schema)
         .coalesce(1)
     )
 
@@ -248,14 +269,14 @@ class _Csr:
     order. Its ranks are column-identical to the join-agg kernel's
     (cross-kernel differential bar: 1e-12, SURVEY.md §5 item 3).
 
-    The constructor builds the call's layout — the DISTRIBUTE_DATA moment
-    (tuned_variant_baseline.c:247-324): the vid assignment, the vid-space
-    edges, and ONE cogrouped pass (build_layout) that compiles the CSR
-    block, the dangling mask and, when ``reset`` is given, the normalized
-    reset distribution. A layout above LAYOUT_BYTES_LIMIT raises before it
-    is built. ``release`` unpersists all of it when the call returns. The
-    id map and the result are localCheckpointed, not persisted; Spark's
-    ContextCleaner frees their blocks once they are unreferenced."""
+    The constructor sizes the inputs in one job, raises LayoutTooLarge (a
+    ValueError) above LAYOUT_BYTES_LIMIT, and else builds the call's
+    layout in ONE task (build_layout) — the DISTRIBUTE_DATA moment
+    (tuned_variant_baseline.c:247-324). ``ids``, ``vertices`` and
+    ``dangling`` are lazy projections; a personalized call's reset
+    distribution is collected into ``reset_arr``, which rides beside the
+    rank vector. ``release`` unpersists all of it when the call returns;
+    the result is localCheckpointed."""
 
     key = "vid"
     partitions = 1  # the layout is one row, read by one task
@@ -267,73 +288,56 @@ class _Csr:
         edges: DataFrame,
         *,
         id_col: str,
-        partitions: int,
         damping: float,
         reset: DataFrame | None,
     ):
         self.id_col, self.damping = id_col, float(damping)
-        # normalize the external id column to 'entity' for the vid mapping
-        # (works for string entities and for already-numeric ids alike);
-        # the assignment's counting pass yields n as a by-product (no extra
-        # job). It is localCheckpointed NOW, while the counted range layout
-        # is still cached: the range sampler's boundaries are not stable
-        # across recomputations, so a lazily re-materialized assignment
-        # could disagree with the counted offsets.
-        self.ids, self.n = vertex_ids_counted(
-            vertices.select(F.col(id_col).alias("entity")), partitions=partitions
-        )
-        if self.n == 0:
-            raise ValueError("pagerank: empty vertex set (no entities derivable from input)")
-        self.spark = self.ids.sparkSession
-        # id-map joins: broadcast only while the map verifiably fits; above
-        # the limit a shuffle join (AQE may still upgrade) — a forced
-        # broadcast of a 10^9-row map is an executor OOM
-        self._hint = F.broadcast if self.n <= BROADCAST_ROW_LIMIT else (lambda df: df)
-        self.vertices = self.ids.select("vid")
-        self.reset, self._cached = None, []
-        if reset is not None:
-            # before anything else is persisted: a reset without mass raises
-            self.reset = _teleport(self, reset).persist()
-            self._cached.append(self.reset)
-        src_ids = self.ids.select(F.col("entity").alias("src"), F.col("vid").alias("src_vid"))
-        dst_ids = self.ids.select(F.col("entity").alias("dst"), F.col("vid").alias("dst_vid"))
-        vid_edges = (
-            edges.join(self._hint(src_ids), "src")
-            .join(self._hint(dst_ids), "dst")
-            .select(F.col("src_vid").alias("src"), F.col("dst_vid").alias("dst"), "weight")
-            .persist()  # read by the count, the layout and the dangling flags
-        )
-        self._cached.append(vid_edges)
-        self.nnz = vid_edges.count()
-        # the layout row's payload, at most: src and weight per edge,
-        # indptr and dst per destination, dangling mask and reset per vertex
-        need = 16 * self.nnz + 25 * self.n + 8
-        if need > LAYOUT_BYTES_LIMIT:
+        self.spark = vertices.sparkSession
+        self.reset, self.reset_arr = None, None
+        ids = vertices.select(F.col(id_col).alias("entity"))
+        id_type = ids.schema["entity"].dataType
+        casts = {"src": id_type, "dst": id_type, "weight": T.DoubleType()}
+        edges = edges.select(*(F.col(c).cast(t).alias(c) for c, t in casts.items()))
+        # read by the sizing job and by the layout task
+        self._cached = inputs = [ids.persist(), edges.persist()]
+        try:
+            n_rows, n_edges, id_bytes = _sizes(ids, edges)
+            if n_rows == 0:
+                raise ValueError("pagerank: empty vertex set (no entities derivable from input)")
+            need = layout_bytes(n_rows, n_edges, id_bytes)
+            if need > LAYOUT_BYTES_LIMIT:
+                raise LayoutTooLarge(
+                    f"pagerank: the csr layout of {n_rows} vertices and {n_edges} edges "
+                    f"needs ~{need / 2**30:.1f} GiB, more than one Spark row holds "
+                    f'({LAYOUT_BYTES_LIMIT} bytes); use kernel="join-agg"'
+                )
+            self.layout = build_layout(edges, ids).persist()
+            self._cached = inputs + [self.layout]
+            # materialize the cached layout NOW: DISTRIBUTE_DATA belongs to
+            # setup, not to the first timed superstep (the reference's timer
+            # starts after distribution, timer_op.c)
+            self.n, self.nnz, self.n_dangling = self.layout.select(
+                F.size("ids"), "nnz", F.size("dangling")
+            ).collect()[0]
+            for df in inputs:  # the layout holds all the call reads of them
+                df.unpersist()
+            self._cached = [self.layout]
+            # id-map joins: broadcast only while the map verifiably fits;
+            # above the limit a shuffle join (AQE may still upgrade) — a
+            # forced broadcast of a 10^9-row map is an executor OOM
+            self._hint = F.broadcast if self.n <= BROADCAST_ROW_LIMIT else (lambda df: df)
+            self.ids = self.layout.select(F.posexplode("ids").alias("vid", "entity")).select(
+                F.col("vid").cast("long").alias("vid"), "entity"
+            )
+            self.vertices = self.spark.range(self.n).select(F.col("id").alias("vid"))
+            self.dangling = self.layout.select(F.explode("dangling").alias("vid"))
+            if reset is not None:
+                self.reset = _teleport(self, reset).persist()
+                self._cached.append(self.reset)
+                self.reset_arr = self.init(self.reset.withColumnRenamed("reset_w", "pr"))
+        except BaseException:
             self.release()
-            raise ValueError(
-                f"pagerank: the csr layout of {self.n} vertices and {self.nnz} edges "
-                f"needs ~{need / 2**30:.1f} GiB, more than one Spark row holds "
-                f'({LAYOUT_BYTES_LIMIT} bytes); use kernel="join-agg"'
-            )
-
-        has_out = vid_edges.select(F.col("src").alias("vid")).distinct()
-        flagged = self.vertices.join(has_out.withColumn("_o", F.lit(True)), "vid", "left").select(
-            "vid", F.col("_o").isNull().alias("_d")
-        )
-        # lazy: only the reset/x0/resume dm0 semi-joins read it
-        self.dangling = flagged.filter("_d").select("vid")
-        if self.reset is not None:
-            flagged = flagged.join(self.reset, "vid", "left").select(
-                "vid", "_d", F.coalesce(F.col("reset_w"), F.lit(0.0)).alias("reset_w")
-            )
-        self.layout = build_layout(vid_edges, flagged, self.n).persist()
-        self._cached.append(self.layout)
-        # the scan that reads the dangling popcount also materializes the
-        # cached layout NOW: DISTRIBUTE_DATA belongs to setup, not to the
-        # first timed superstep (the reference's timer starts after
-        # distribution, timer_op.c; join-agg's setup likewise materializes
-        # its co-partitioned cache via its nnz count)
-        self.n_dangling = int(self.layout.select("n_dang").collect()[0][0])
+            raise
 
     def keyed(self, frame: DataFrame, col: str) -> DataFrame:
         """Entity space → vid space; rows on unknown ids drop."""
@@ -365,14 +369,15 @@ class _Csr:
         when ``every_state`` (a checkpointer saves each state), one such
         task per superstep. A job's driver wall time is split evenly over
         its records, so Σ wall_ms is the loop's time either way."""
+        csr = self.layout.drop("ids")  # the loop reads no entity
         done = 0
         while done < steps:
             t0 = time.monotonic()
-            self._bc = bc = self.spark.sparkContext.broadcast(pr)
+            self._bc = bc = self.spark.sparkContext.broadcast((pr, self.reset_arr))
             loop_map = _make_arrow_loop_kernel(
                 int(self.n), self.damping, dm, bc, 1 if every_state else steps - done, tol
             )
-            rows = self.layout.mapInArrow(loop_map, schema=LOOP_SCHEMA).collect()
+            rows = csr.mapInArrow(loop_map, schema=LOOP_SCHEMA).collect()
             bc.destroy()
             self._bc = None
             pr = np.frombuffer(rows[-1]["pr"], dtype=np.float64).copy()

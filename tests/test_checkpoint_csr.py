@@ -1,6 +1,6 @@
 """CSR-kernel checkpoint/resume: vid-space checkpoints resume correctly
 because the entity→vid mapping is a deterministic function of the vertex
-set (row_number over sorted entities)."""
+set (a vertex's vid is its position among the sorted distinct ids)."""
 
 import shutil
 import tempfile

@@ -167,6 +167,12 @@ def test_lpa_until_stable_stops_early_identical_labels(spark, tmp_path):
     assert got == want
     stopped_at = cm.last_complete_superstep()
     assert stopped_at is not None and stopped_at < 9  # early stop happened
+    # every round's changed-label count survives the metrics write, and
+    # the round that changed nothing is the last one
+    changed = [r.l1_delta for r in cm.metrics().orderBy("superstep").collect()]
+    assert len(changed) == stopped_at + 1
+    assert all(c is not None for c in changed)
+    assert changed[0] > 0 and changed[-1] == 0
 
 
 # --- strongly_connected_components ------------------------------------------

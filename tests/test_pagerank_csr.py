@@ -134,9 +134,8 @@ def test_one_bucket_loop_starts_no_job_per_superstep(spark, graph):
 
 
 def test_large_ring_loop_runs_one_block_and_no_job_per_superstep(spark):
-    """Above ROWS_PER_PARTITION rows at ``partitions=4`` the vid assignment
-    runs several partitions, yet the layout is still one CSR block and the
-    loop still runs in one task."""
+    """A graph above ROWS_PER_PARTITION rows at ``partitions=4`` still
+    compiles to one CSR block, and the loop still runs in one task."""
     n = 70_000  # > ROWS_PER_PARTITION (65,536)
     ids = spark.range(n)
     vertices = ids.select(F.col("id").cast("string").alias("entity")).cache()
@@ -225,3 +224,33 @@ def test_csr_layout_above_row_limit_raises(spark, graph, monkeypatch):
     persisted, cached = _left_cached(spark, call)
     assert persisted
     assert cached == []
+
+
+def test_auto_runs_join_agg_when_csr_layout_exceeds_row_limit(spark, graph, monkeypatch):
+    """``kernel="auto"`` picks csr below BROADCAST_ROW_LIMIT vertices only
+    while the layout fits in one Spark row; a denser graph runs join-agg
+    (the same ranks, bit for bit) instead of raising, and the abandoned
+    csr setup leaves nothing cached."""
+    from pagerank_optimization_spark.operators import pagerank_csr
+
+    vertices, wedges, _, _ = graph
+    vertices, wedges = vertices.select("*"), wedges.select("*")
+    monkeypatch.setattr(pagerank_csr, "LAYOUT_BYTES_LIMIT", 1_000)
+    kw = {"fixed_iters": 4, "partitions": 8}
+    auto = []
+    _, cached = _left_cached(
+        spark, lambda: auto.append(pagerank(vertices, wedges, kernel="auto", **kw))
+    )
+    assert cached == []
+    assert _d(auto[0].ranks) == _d(pagerank(vertices, wedges, kernel="join-agg", **kw).ranks)
+
+
+def test_csr_call_job_count(spark, graph):
+    """One whole uncheckpointed csr call — sizing, layout task, loop and
+    result — starts at most 14 Spark jobs on this fixture. The vid
+    assignment by range partitioning, the id-map joins, the vid-space edge
+    count and the dangling-flag joins it replaced took 21."""
+    vertices, wedges, _, _ = graph
+    kw = {"fixed_iters": 5, "partitions": 8, "kernel": "csr-blocks"}
+    pagerank(vertices, wedges, **kw)  # the session's first Arrow task starts the workers
+    assert _job_count(spark, "csr-call", lambda: pagerank(vertices, wedges, **kw)) <= 14

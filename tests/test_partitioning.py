@@ -133,26 +133,27 @@ def test_degree_normalization_plan(spark, graph):
 
 
 def test_vid_map_broadcast_gated_by_row_limit(spark, graph, monkeypatch):
-    """pagerank_csr broadcasts the entity→vid map only below
-    BROADCAST_ROW_LIMIT; above it the join must not be hint-forced."""
+    """A csr call's entity→vid joins (``_Csr.keyed``) broadcast the id map
+    only while |V| ≤ BROADCAST_ROW_LIMIT; above it the join must not be
+    hint-forced."""
     from pagerank_optimization_spark.operators import pagerank_csr as pcsr
 
-    vertices, wedges = graph
-    # truncate lineage: the cached wedges plan embeds its own (legitimate)
+    # truncate lineage: the cached graph plans embed their own (legitimate)
     # degree broadcast join, which would false-positive the audit below
-    edges_flat = wedges.localCheckpoint(eager=True)
-    ids = vertex_ids(vertices, partitions=4)
-    n = ids.count()
+    vertices, wedges = (df.localCheckpoint(eager=True) for df in graph)
+    weights = vertices.withColumn("w", F.lit(1.0))
+    n = vertices.count()
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         for limit, check in [(n + 1, assert_broadcast_join), (0, assert_no_broadcast_join)]:
-            hint = F.broadcast if n <= limit else (lambda df: df)
-            joined = edges_flat.join(
-                hint(ids.select(F.col("entity").alias("src"), F.col("vid").alias("src_vid"))),
-                "src",
-            )
-            check(joined)
+            monkeypatch.setattr(pcsr, "BROADCAST_ROW_LIMIT", limit)
+            kern = pcsr._Csr(vertices, wedges, id_col="entity", damping=0.85, reset=None)
+            try:
+                assert kern.n == n
+                check(kern.keyed(weights, "w"))
+            finally:
+                kern.release()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
