@@ -24,7 +24,8 @@ Two modes:
 
 ``checkpointer``: optional CheckpointManager — labels land durably per
 round under the same commit protocol as PageRank ranks (labels are
-discrete strings, so a resumed run is bitwise-identical for free).
+discrete strings, so a resumed run is bitwise-identical for free); a
+converged run resumed at its fixpoint runs no round (``start_labels``).
 """
 
 from __future__ import annotations
@@ -92,6 +93,38 @@ def prepare_gather(sym: DataFrame, partitions: int, hub_split):
         return sym.join(attr_b, "b", "inner")
 
     return gather, [sym]
+
+
+def round_setup(edges: DataFrame, partitions: int, hub_split):
+    """The CC/LPA prologue: symmetrize, bucket by ``b`` and, when the
+    data-sized count is smaller, re-bucket the cached edge list once
+    (scale-adaptive loop width, r6: the caller's value caps, |E| decides)
+    → (|sym|, partitions, *prepare_gather's (gather, pinned))."""
+    from pagerank_optimization_spark.plans.partitioning import effective_partitions
+
+    sym = symmetrize(edges).repartition(partitions, "b").persist()
+    n_sym = sym.count()
+    p_eff = effective_partitions(partitions, n_sym)
+    if p_eff != partitions:
+        wide = sym
+        sym = wide.repartition(p_eff, "b").persist()
+        sym.count()
+        wide.unpersist()
+    return n_sym, p_eff, *prepare_gather(sym, p_eff, hub_split)
+
+
+def start_labels(vertices: DataFrame, col: str, checkpointer, rounds: int, stop_on_zero: bool):
+    """(first round, labels): every vertex labelled by itself, or a
+    ``checkpointer``'s resumed labels. When ``stop_on_zero`` (the run stops
+    once a round changes no label) and the last saved round changed none,
+    the fixpoint is reached: the first round is ``rounds``, so none runs."""
+    resumed = checkpointer.resume() if checkpointer is not None else None
+    if resumed is None:
+        return 0, vertices.select("entity", F.col("entity").alias(col)).localCheckpoint(eager=True)
+    start, labels = resumed
+    if stop_on_zero and (checkpointer.last_metrics() or {}).get("l1_delta") == 0:
+        start = rounds
+    return start, labels.localCheckpoint(eager=True)
 
 
 def _step(labels: DataFrame, gather) -> DataFrame:
@@ -170,46 +203,25 @@ def connected_components(
     per-round hot-label salt bound for the pointer-doubling lookup (see
     _shortcut). Both defenses change plans only, never values."""
     spark = vertices.sparkSession
-    partitions = partitions or spark.sparkContext.defaultParallelism
-    sym = symmetrize(edges).repartition(partitions, "b").persist()
-    n_sym = sym.count()
-    # scale-adaptive loop width (r6): caller's value caps, |E| decides —
-    # re-bucket the cached edge list once when the data-sized count is
-    # smaller (a |E|-row reshuffle of cached rows)
-    from pagerank_optimization_spark.plans.partitioning import effective_partitions
-
-    p_eff = effective_partitions(partitions, n_sym)
-    if p_eff != partitions:
-        wide = sym
-        sym = wide.repartition(p_eff, "b").persist()
-        sym.count()
-        wide.unpersist()
-        partitions = p_eff
-    gather, pinned = prepare_gather(sym, partitions, hub_split)
+    n_sym, partitions, gather, pinned = round_setup(
+        edges, partitions or spark.sparkContext.defaultParallelism, hub_split
+    )
     # pigeonhole gate: with |V| ≤ the salt bound no label CAN exceed it, so
     # the per-round hot-label detection would be pure overhead — skip it.
-    # Bounded CollectLimit probe, not a full |V| count (r4 ADVICE — same
-    # probe shape as pagerank.resolve_auto_kernel): scanning bound+1 rows
-    # answers "are there more than bound vertices" without a full-table job
+    # Bounded CollectLimit probe, not a full |V| count (r4 ADVICE): scanning
+    # bound+1 rows answers "are there more than bound vertices" without a
+    # full-table job
     if (
         shortcut_salt_members is not None
         and vertices.limit(shortcut_salt_members + 1).count() <= shortcut_salt_members
     ):
         shortcut_salt_members = None
 
-    start_round = 0
-    labels = None
-    if checkpointer is not None:
-        resumed = checkpointer.resume()
-        if resumed is not None:
-            start_round, labels = resumed
-            labels = labels.localCheckpoint(eager=True)
-    if labels is None:
-        labels = vertices.select("entity", F.col("entity").alias("lbl")).localCheckpoint(eager=True)
+    rounds = fixed_rounds if fixed_rounds is not None else max_rounds
+    start_round, labels = start_labels(vertices, "lbl", checkpointer, rounds, fixed_rounds is None)
 
     from pagerank_optimization_spark.session import iterative_conf
 
-    rounds = fixed_rounds if fixed_rounds is not None else max_rounds
     with iterative_conf(spark, shuffle_partitions=partitions):
         for it in range(start_round, rounds):
             t0 = time.monotonic()

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from pagerank_optimization_spark.operators.components import prepare_gather, symmetrize
+from pagerank_optimization_spark.operators.components import round_setup, start_labels
 
 
 def label_propagation(
@@ -44,34 +44,16 @@ def label_propagation(
     round under the same commit protocol as PageRank ranks; a killed run
     resumes at the first unfinished round, bitwise-identical (labels are
     discrete strings). With ``until_stable`` a round's metrics row records
-    its changed-label count as ``l1_delta``, as connected_components does."""
+    its changed-label count as ``l1_delta``, as connected_components does,
+    and a resumed run whose last saved round changed no label runs no
+    round: it returns the saved labels."""
     import time
 
     spark = vertices.sparkSession
-    partitions = partitions or spark.sparkContext.defaultParallelism
-    sym = symmetrize(edges).repartition(partitions, "b").persist()
-    n_sym = sym.count()
-    # scale-adaptive loop width (r6): caller's value caps, |E| decides
-    from pagerank_optimization_spark.plans.partitioning import effective_partitions
-
-    p_eff = effective_partitions(partitions, n_sym)
-    if p_eff != partitions:
-        wide = sym
-        sym = wide.repartition(p_eff, "b").persist()
-        sym.count()
-        wide.unpersist()
-        partitions = p_eff
-    gather, pinned = prepare_gather(sym, partitions, hub_split)
-
-    start_round = 0
-    labels = None
-    if checkpointer is not None:
-        resumed = checkpointer.resume()
-        if resumed is not None:
-            start_round, labels = resumed
-            labels = labels.localCheckpoint(eager=True)
-    if labels is None:
-        labels = vertices.select("entity", F.col("entity").alias("label")).localCheckpoint(eager=True)
+    n_sym, partitions, gather, pinned = round_setup(
+        edges, partitions or spark.sparkContext.defaultParallelism, hub_split
+    )
+    start_round, labels = start_labels(vertices, "label", checkpointer, rounds, until_stable)
 
     from pagerank_optimization_spark.session import iterative_conf
 

@@ -62,19 +62,6 @@ def _init_registers(entity: Column, p: int) -> Column:
     )
 
 
-def _merge_expr(col: str) -> Column:
-    """Fold a collect_list of register arrays with element-wise max.
-    Correct but collect_list REDUCES NOTHING map-side — every contributing
-    array crosses the shuffle. Kept for reference/tests; the operators use
-    ``_merge_groupby`` (per-register max aggregates) instead."""
-    lst = F.collect_list(col)
-    return F.aggregate(
-        lst,
-        F.element_at(lst, 1),
-        lambda acc, x: F.zip_with(acc, x, lambda a, b: F.greatest(a, b)),
-    )
-
-
 def _merge_groupby(df: DataFrame, group_cols: list[str], p: int) -> DataFrame:
     """groupBy(*group_cols) element-wise register max as m = 2^p plain
     ``max`` aggregates, reassembled into the array afterwards. Unlike the

@@ -7,59 +7,48 @@ segment (tuned_variant_csr.c:72-84), then vectorize the gather with AVX2
 `_mm256_i32gather_ps` (tuned_variant_simd.c:297-300) and reduce each
 segment with an 8-lane horizontal sum (tuned_variant_simd.c:244-269).
 
-Like the reference, this kernel (``_Csr``) runs over ONE CSR matrix. Each
-call builds it for itself, in ONE task (``build_layout``), as ONE layout
-row, and frees it when it returns. The one superstep loop
-(operators.pagerank._drive) runs over it:
+Like the reference, this kernel (``_Csr``) builds ONE CSR matrix per call
+and runs every superstep over it in place. An uncheckpointed call is one
+sizing job (``_sizes``: |V| for ``kernel="auto"`` and the LayoutTooLarge
+guard) plus ONE cogrouped Arrow task, so it crosses the JVM↔Python
+boundary once. The task meets the entity-space edges with the side rows
+(the vertex ids, the x0 and reset weights tagged beside them):
 
-- a vertex's dense vid 0..n-1 is its position among the sorted distinct
-  ids, which ride in the row, so the id map is a lazy projection of it.
-  The rank, dangling and reset vectors are flat arrays indexed by vid;
-- the edges, mapped to vids by one hash lookup, are compiled into the
-  CSR block: deterministic (dst, src) lexsort (the counting sort of
-  tuned_variant_csr.c:179-229 with a fixed total order, so a rebuilt
-  block is bit-identical regardless of shuffle arrival order), indptr
-  over the dst runs, each edge's global source vid; the dangling vids
-  ride beside it. It is the DISTRIBUTE_DATA moment
+- ``compile_layout`` sorts the distinct ids (a vertex's dense vid is its
+  position), maps the edge endpoints and the x0/reset rows to vids with
+  ``pc.index_in``, sums and normalizes x0 and reset in vid order, and
+  builds the CSR block: a deterministic (dst, src) lexsort (the counting
+  sort of tuned_variant_csr.c:179-229 with a fixed total order, so a
+  rebuilt block is bit-identical), indptr over the dst runs, each edge's
+  source vid, and the dangling mask — the DISTRIBUTE_DATA moment
   (tuned_variant_baseline.c:247-324);
-- a superstep does the whole update inside the Arrow task
-  (``csr_update``): gather the ranks by source (numpy fancy indexing —
-  the i32gather analog for a full batch), CSR segment sum via
-  np.add.reduceat (tuned_variant_csr.c:74-84), scatter to the dense
-  vector, damping + teleport/personalized base, |new−old| per vertex and
-  the dangling rank mass. ``loop_scalars`` reduces the last two in vid
-  order, so new ranks, the L1 delta and the next dangling mass all come
-  out of one pass — no join, no exchange.
+- ``run_supersteps`` loops ``csr_update`` (gather by source, segment sum
+  via np.add.reduceat as in tuned_variant_csr.c:74-84, damping and
+  teleport base) and ``loop_scalars`` (L1 delta and next dangling mass,
+  summed in vid order) to ``steps`` or to the shared ``reached`` rule;
+- the task emits one ``(entity, pr)`` row per vertex plus one side row:
+  sizes, x0/reset masses and per-superstep records. The output is
+  localCheckpointed and collecting the side row materializes it, so the
+  rank vector never reaches the driver, which raises the "no positive
+  weight" ValueErrors from the reported masses.
 
-Record iterator (the contract of operators.pagerank._drive): the start
-vector (with the reset vector beside it) crosses once as an
-``sc.broadcast`` and ONE ``mapInArrow`` task over the cached layout
-loops ``csr_update`` → ``loop_scalars`` to ``steps`` or to the shared
-``reached`` rule, returning the final vector plus one (l1_delta,
-dangling_mass_next) row per superstep, which become the ``Superstep``
-records; the job's driver time is split evenly over their ``wall_ms``. A
-checkpointed run needs every superstep's state, so it runs the same task
-with ``steps=1`` once per superstep. A superstep's numpy work is ~0.1 ms
-on the benchmark graph and a job's dispatch ~300 ms, so the
-uncheckpointed loop costs about one job. Both forms run the same function
-in the same order, so they agree bitwise.
-
-``kernel="auto"`` sends graphs above BROADCAST_ROW_LIMIT vertices or
-LAYOUT_BYTES_LIMIT layout bytes to join-agg, which keeps the rank vector
-in the JVM; an explicit ``kernel="csr-blocks"`` keeps it on the driver
-at any |V| whose layout fits in one Spark row, and raises above that.
+A checkpointed call needs every superstep's state on the driver: the same
+task, run for 0 supersteps, emits the pickled layout as one cached row,
+and each superstep is one ``mapInArrow`` task over it calling the same
+``run_supersteps`` with ``steps=1``; one more task emits the ranks. Both
+forms run ``csr_update`` in the same order from the same start vector,
+so they agree bitwise and a resumed run equals an uninterrupted one.
 
 No per-row Python anywhere (input_hint requirement): everything crossing
 the JVM↔Python boundary is an Arrow batch, everything inside is numpy.
-
-The run-length SIMD segmentation of the reference
-(`split_indices`, tuned_variant_simd.c:186-242) is deliberately absent:
-Arrow batches give full-width vectorization regardless of run lengths
-(SURVEY.md §4).
+The run-length SIMD segmentation of the reference (`split_indices`,
+tuned_variant_simd.c:186-242) is deliberately absent: Arrow batches give
+full-width vectorization regardless of run lengths (SURVEY.md §4).
 """
 
 from __future__ import annotations
 
+import pickle
 import time
 
 import numpy as np
@@ -68,46 +57,45 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pagerank_optimization_spark.operators.pagerank import Superstep, _teleport, reached
+from pagerank_optimization_spark.operators.pagerank import (
+    NO_RESET_MASS,
+    NO_X0_MASS,
+    Superstep,
+    _require_mass,
+    reached,
+)
+from pagerank_optimization_spark.session import iterative_conf
 
-# Above this row count an id-map broadcast risks executor OOM at the
-# 10^9-vertex scale this engine targets — fall back to a shuffle join
-# (AQE still upgrades it to broadcast if the measured size is tiny).
+# kernel="auto" runs join-agg above this many vertex rows: there the rank
+# vector and the layout of one csr task grow with |V|, while join-agg
+# keeps the vector distributed in the JVM.
 BROADCAST_ROW_LIMIT = 1_000_000
 
-# The layout is one Spark row, and a row holds at most ~2 GiB (its buffer
-# is one JVM byte array); 1 MiB is left for the row's header and padding.
+# The checkpointed form caches the layout as one Spark row, and a row holds
+# at most ~2 GiB (its buffer is one JVM byte array); 1 MiB is left for the
+# row's header and padding.
 LAYOUT_BYTES_LIMIT = 2**31 - 2**20
 
-LOOP_SCHEMA = T.StructType(
-    [
-        T.StructField("l1_delta", T.DoubleType(), False),
-        T.StructField("dangling_mass_next", T.DoubleType(), False),
-        T.StructField("pr", T.BinaryType(), True),  # float64 ranks, last row only
-    ]
+# tags of the side rows cogrouped with the edges
+VERTEX, X0, RESET = 0, 1, 2
+
+# one record per superstep, in Superstep's field order
+STEP_FIELDS = ("l1_delta", "dangling_mass", "dangling_mass_next", "wall_ms")
+# a task's side row — vertex and CSR sizes, start masses (null: none
+# given), the records, and on request the final vector (float64 bytes) or
+# the pickled layout. Nullable throughout: rank rows carry a null one.
+SIDE_TYPE = T.StructType(
+    [T.StructField(c, T.LongType()) for c in ("n", "nnz")]
+    + [T.StructField(c, T.DoubleType()) for c in ("x0_mass", "reset_mass")]
+    + [T.StructField(c, T.ArrayType(T.DoubleType())) for c in STEP_FIELDS]
+    + [T.StructField(c, T.BinaryType()) for c in ("pr", "layout")]
 )
 
 
-def layout_schema(id_type: T.DataType) -> T.StructType:
-    """The one layout row, for vertex ids of Spark type ``id_type``. The
-    CSR columns are null for a graph without edges."""
-    return T.StructType(
-        [
-            T.StructField("ids", T.ArrayType(id_type), False),  # sorted: vid = position
-            T.StructField("dangling", T.ArrayType(T.LongType(), False), False),  # sorted vids
-            T.StructField("nnz", T.LongType(), False),  # edges in the CSR block
-            T.StructField("src", T.BinaryType(), True),     # int64 source vid per edge
-            T.StructField("indptr", T.BinaryType(), True),  # int64 CSR offsets
-            T.StructField("dst", T.BinaryType(), True),     # int64 vid of each dst run
-            T.StructField("weight", T.BinaryType(), True),  # float64 edge weights
-        ]
-    )
-
-
 def layout_bytes(n: int, n_edges: int, id_bytes: int) -> int:
-    """Bound on the layout row's payload: src and weight per edge; indptr,
-    dst, a dangling vid and null bits per vertex; the ids' ``id_bytes``."""
-    return 16 * n_edges + 25 * n + id_bytes + 8
+    """Bound on the pickled layout: src and weight per edge; indptr, dst,
+    reset, start and a mask byte per vertex; the ids' ``id_bytes``."""
+    return 16 * n_edges + 33 * n + id_bytes + 8
 
 
 class LayoutTooLarge(ValueError):
@@ -157,101 +145,116 @@ def loop_scalars(abs_delta: np.ndarray, dang_pr: np.ndarray) -> tuple[float, flo
     return float(abs_delta.sum()), float(dang_pr.sum())
 
 
-def _decode_row(tb, n_: int) -> tuple[dict | None, np.ndarray]:
-    """The layout Arrow table's one row → (CSR arrays or None, dangling
-    mask of ``n_`` vertices) as numpy arrays over the buffers."""
-    dtypes = {"src": np.int64, "indptr": np.int64, "dst": np.int64, "weight": np.float64}
-    blk = None
-    if tb["src"][0].is_valid:
-        blk = {col: np.frombuffer(tb[col][0].as_py(), dtype=dt) for col, dt in dtypes.items()}
-    mask = np.zeros(n_, dtype=bool)
-    mask[tb["dangling"][0].values.to_numpy()] = True
-    return blk, mask
+def _densify(vtb, tag: int, ids) -> tuple[float, np.ndarray | None]:
+    """The ``tag`` side rows' weights summed per vid (rows on ids that are
+    not vertices drop; a null weight counts 0) → (mass, the dense vector
+    scaled to sum 1, or None when the mass is not positive). Both sums run
+    in vid order."""
+    import pyarrow.compute as pc
+
+    rows = vtb.filter(pc.equal(vtb["tag"], tag))
+    vid = pc.index_in(rows["entity"], value_set=ids, skip_nulls=True)
+    on = pc.is_valid(vid)
+    dense = np.bincount(
+        pc.filter(vid, on).to_numpy().astype(np.int64),
+        weights=pc.filter(pc.fill_null(rows["w"], 0.0), on).to_numpy(),
+        minlength=len(ids),
+    ).astype(np.float64)
+    mass = float(dense.sum())
+    return mass, (dense / mass if mass > 0 else None)
 
 
-def _make_arrow_loop_kernel(n_: int, d_: float, dm0: float, bc, steps: int, tol: float | None):
-    """Up to ``steps`` supersteps as one ``mapInArrow`` task over the layout
-    table. The start and reset vectors arrive once as ``bc``; each
-    superstep is ``csr_update`` + ``loop_scalars`` until ``steps`` ran or
-    the delta ``reached`` tol. Output: one LOOP_SCHEMA row per superstep,
-    the final rank vector (float64 bytes) on the last one."""
+def compile_layout(etb, vtb, *, x0: bool, reset: bool) -> dict:
+    """The call's layout from the cogrouped Arrow tables: edges ``etb``
+    (src, dst, weight) and side rows ``vtb`` (entity, tag, w). vid =
+    position among the distinct VERTEX ids sorted in their native type
+    (Arrow orders strings by UTF-8 bytes, as Spark does); an edge with an
+    endpoint that is not a vertex drops. The CSR is a deterministic
+    function of the edge SET (lexsort by (dst, src)), not of shuffle
+    arrival order. ``x0``/``reset``: whether the call passed them (an
+    empty one still reports mass 0). The start vector is the normalized
+    x0, else the normalized reset, else None (uniform)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids = pc.unique(vtb.filter(pc.equal(vtb["tag"], VERTEX))["entity"])
+    ids = ids.take(pc.sort_indices(ids, null_placement="at_start"))
+    ends = pa.chunked_array(etb["src"].chunks + etb["dst"].chunks, ids.type)
+    vid = pc.fill_null(pc.index_in(ends, value_set=ids, skip_nulls=True), -1)
+    src, dst = np.split(vid.to_numpy().astype(np.int64), [etb.num_rows])
+    keep = (src >= 0) & (dst >= 0)
+    src, dst, w = src[keep], dst[keep], etb["weight"].to_numpy()[keep]
+    mask = np.ones(len(ids), dtype=bool)  # dangling: no out-edge
+    mask[src] = False
+    csr = None
+    if len(src):
+        order = np.lexsort((src, dst))  # deterministic total order
+        src, dst, w = src[order], dst[order], w[order]
+        dst_unique, counts = np.unique(dst, return_counts=True)
+        indptr = np.zeros(len(dst_unique) + 1, dtype=np.int64)
+        np.cumsum(counts, out=indptr[1:])
+        csr = {"src": src, "indptr": indptr, "dst": dst_unique, "weight": w}
+    x0_mass, x0_vec = _densify(vtb, X0, ids) if x0 else (None, None)
+    reset_mass, reset_vec = _densify(vtb, RESET, ids) if reset else (None, None)
+    return {
+        "ids": ids, "csr": csr, "nnz": len(src), "mask": mask,
+        "x0_mass": x0_mass, "reset_mass": reset_mass,
+        "reset": reset_vec, "start": x0_vec if x0 else reset_vec,
+    }
+
+
+def run_supersteps(
+    lay: dict, pr: np.ndarray | None, dm: float | None, d_: float, steps: int, tol: float | None
+) -> tuple[np.ndarray, list[tuple[float, float, float, float]]]:
+    """Up to ``steps`` supersteps over the layout ``lay``, from the
+    vid-ordered vector ``pr`` (None: the layout's start vector, uniform
+    1/n without one) and the dangling mass ``dm`` (None: summed over
+    ``pr`` in vid order; the uniform start's is exactly |D|/n). Each is
+    ``csr_update`` + ``loop_scalars``, until ``steps`` ran or the delta
+    ``reached`` tol → (final vector, one STEP_FIELDS record per superstep,
+    ``wall_ms`` its time in this task)."""
+    n_, mask = len(lay["mask"]), lay["mask"]
+    if pr is None:
+        pr = lay["start"]
+        if pr is None:
+            pr, dm = np.full(n_, 1.0 / n_), int(mask.sum()) / n_
+    if dm is None:
+        dm = float(np.where(mask, pr, 0.0).sum())
+    recs = []
+    for _ in range(steps):
+        t0 = time.perf_counter()
+        pr, abs_delta, dang_pr = csr_update(pr, lay["csr"], mask, lay["reset"], n_, d_, dm)
+        delta, dm_next = loop_scalars(abs_delta, dang_pr)
+        recs.append((delta, dm, dm_next, (time.perf_counter() - t0) * 1000.0))
+        dm = dm_next
+        if reached(delta, tol):
+            break
+    return pr, recs
+
+
+def _emit(arrow_schema, lay: dict, pr, dm, d_: float, steps: int, tol, *,
+          ranks: bool = False, state: bool = False, layout: bool = False):
+    """Run ``run_supersteps`` (none when a start mass is not positive: the
+    driver raises) and emit the task's output table: the rank rows if
+    ``ranks``, then the side row, carrying the final vector if ``state``
+    and the pickled layout if ``layout``."""
     import pyarrow as pa
 
-    def loop_map(batches):
-        blk, mask = _decode_row(pa.Table.from_batches(list(batches)), n_)
-        (pr, reset_arr), dm = bc.value, dm0
-        deltas, dms = [], []
-        for _ in range(steps):
-            pr, abs_delta, dang_pr = csr_update(pr, blk, mask, reset_arr, n_, d_, dm)
-            delta, dm = loop_scalars(abs_delta, dang_pr)
-            deltas.append(delta)
-            dms.append(dm)
-            if reached(delta, tol):
-                break
-        yield pa.record_batch(
-            [
-                pa.array(deltas, type=pa.float64()),
-                pa.array(dms, type=pa.float64()),
-                pa.array([None] * (len(deltas) - 1) + [pr.tobytes()], type=pa.binary()),
-            ],
-            names=LOOP_SCHEMA.fieldNames(),
-        )
-
-    return loop_map
-
-
-def build_layout(edges: DataFrame, ids: DataFrame) -> DataFrame:
-    """The call's layout in ONE task: the entity-space edges (src, dst,
-    weight) meet the vertex ids (entity) under one constant key and
-    compile to the one ``layout_schema`` row. vid = position among the
-    distinct ids sorted in their native type (Arrow orders strings by
-    UTF-8 bytes, as Spark does); an edge with an endpoint that is not a
-    vertex drops. The CSR is a deterministic function of the edge SET
-    (lexsort by (dst, src)), not of shuffle arrival order — a layout
-    rebuilt on resume reduces in the same FP order."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    schema = layout_schema(ids.schema["entity"].dataType)
-    arrow_schema = to_arrow_schema(schema)
-
-    def compile_layout(etb, vtb):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        ids = pc.unique(vtb["entity"])
-        ids = ids.take(pc.sort_indices(ids, null_placement="at_start"))
-        ends = pa.chunked_array(etb["src"].chunks + etb["dst"].chunks, ids.type)
-        vid = pc.fill_null(pc.index_in(ends, value_set=ids, skip_nulls=True), -1)
-        src, dst = np.split(vid.to_numpy().astype(np.int64), [etb.num_rows])
-        keep = (src >= 0) & (dst >= 0)
-        src, dst, w = src[keep], dst[keep], etb["weight"].to_numpy()[keep]
-        has_out = np.zeros(len(ids), dtype=bool)
-        has_out[src] = True
-        dangling = pa.array(np.flatnonzero(~has_out))
-        csr = dict.fromkeys(("src", "indptr", "dst", "weight"))
-        if len(src):
-            order = np.lexsort((src, dst))  # deterministic total order
-            src, dst, w = src[order], dst[order], w[order]
-            dst_unique, counts = np.unique(dst, return_counts=True)
-            indptr = np.zeros(len(dst_unique) + 1, dtype=np.int64)
-            np.cumsum(counts, out=indptr[1:])
-            csr.update(src=src, indptr=indptr, dst=dst_unique, weight=w)
-        row = {"ids": pa.ListArray.from_arrays([0, len(ids)], ids),
-               "dangling": pa.ListArray.from_arrays([0, len(dangling)], dangling),
-               "nnz": pa.array([len(src)])}
-        for col, arr in csr.items():
-            row[col] = pa.array([None if arr is None else arr.tobytes()], pa.binary())
-        return pa.table(row).cast(arrow_schema)
-
-    # the cogroup shuffles its one key into spark.sql.shuffle.partitions
-    # partitions, all but one empty; the one-task loop reads one partition
-    key = F.lit(0).alias("layout")  # aliased: a bare integer is a column ordinal
-    return (
-        edges.groupBy(key)
-        .cogroup(ids.groupBy(key))
-        .applyInArrow(compile_layout, schema=schema)
-        .coalesce(1)
-    )
+    ok = all(m is None or m > 0 for m in (lay["x0_mass"], lay["reset_mass"]))
+    pr, recs = run_supersteps(lay, pr, dm, d_, steps if ok else 0, tol)
+    side = {
+        "n": len(lay["mask"]), "nnz": lay["nnz"],
+        "x0_mass": lay["x0_mass"], "reset_mass": lay["reset_mass"],
+        **{c: [r[i] for r in recs] for i, c in enumerate(STEP_FIELDS)},
+        "pr": pr.tobytes() if state else None,
+        "layout": pickle.dumps(lay, protocol=5) if layout else None,
+    }
+    side_type, ids = arrow_schema.field("side").type, lay["ids"]
+    tables = [pa.table({"entity": pa.nulls(1, ids.type), "pr": pa.nulls(1, pa.float64()),
+                        "side": pa.array([side], side_type)})]
+    if ranks:
+        tables.insert(0, pa.table({"entity": ids, "pr": pr, "side": pa.nulls(len(ids), side_type)}))
+    return pa.concat_tables([t.cast(arrow_schema) for t in tables])
 
 
 def clear_compile_cache() -> None:
@@ -261,25 +264,17 @@ def clear_compile_cache() -> None:
 
 
 class _Csr:
-    """The csr kernel, in dense-vid key space 0..n-1; ranks map back to
-    entities once, at the end. The state is the dense vid-indexed numpy
-    rank vector, held on the driver; ``supersteps`` ships it as one
-    ``sc.broadcast`` to one ``mapInArrow`` task over the cached layout —
-    no join, no exchange. The loop-carried scalars reduce in FIXED vid
-    order. Its ranks are column-identical to the join-agg kernel's
-    (cross-kernel differential bar: 1e-12, SURVEY.md §5 item 3).
-
-    The constructor sizes the inputs in one job, raises LayoutTooLarge (a
-    ValueError) above LAYOUT_BYTES_LIMIT, and else builds the call's
-    layout in ONE task (build_layout) — the DISTRIBUTE_DATA moment
-    (tuned_variant_baseline.c:247-324). ``ids``, ``vertices`` and
-    ``dangling`` are lazy projections; a personalized call's reset
-    distribution is collected into ``reset_arr``, which rides beside the
-    rank vector. ``release`` unpersists all of it when the call returns;
-    the result is localCheckpointed."""
+    """The csr kernel, in dense-vid key space 0..n-1. The constructor runs
+    the one sizing job over persisted projections of the inputs: it sets
+    ``n_rows`` (vertex rows, for ``kernel="auto"``) and raises
+    LayoutTooLarge (a ValueError) above LAYOUT_BYTES_LIMIT. ``supersteps``
+    runs the one task, or, with ``every_state``, caches the layout row and
+    runs one task per superstep from a driver-held vector shipped as one
+    ``sc.broadcast``. The ranks match join-agg's to 1e-12 (SURVEY.md §5
+    item 3); ``release`` unpersists what the call cached."""
 
     key = "vid"
-    partitions = 1  # the layout is one row, read by one task
+    partitions = 1  # one task reads the one cogroup key
     _bc = None
 
     def __init__(
@@ -291,104 +286,148 @@ class _Csr:
         damping: float,
         reset: DataFrame | None,
     ):
-        self.id_col, self.damping = id_col, float(damping)
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        self.id_col, self.damping, self.reset = id_col, float(damping), reset
         self.spark = vertices.sparkSession
-        self.reset, self.reset_arr = None, None
-        ids = vertices.select(F.col(id_col).alias("entity"))
-        id_type = ids.schema["entity"].dataType
-        casts = {"src": id_type, "dst": id_type, "weight": T.DoubleType()}
-        edges = edges.select(*(F.col(c).cast(t).alias(c) for c, t in casts.items()))
-        # read by the sizing job and by the layout task
-        self._cached = inputs = [ids.persist(), edges.persist()]
+        self.pr, self._ranks = None, None
+        self.ids = vertices.select(F.col(id_col).alias("entity"))
+        self.id_type = self.ids.schema["entity"].dataType
+        # every task's output: an (entity, pr) row per vertex when it emits
+        # ranks (side null), then the side row (entity and pr null; a
+        # vertex id may itself be null)
+        self.schema = T.StructType([T.StructField("entity", self.id_type),
+                                    T.StructField("pr", T.DoubleType()),
+                                    T.StructField("side", SIDE_TYPE)])
+        self.arrow_schema = to_arrow_schema(self.schema)
+        casts = {"src": self.id_type, "dst": self.id_type, "weight": T.DoubleType()}
+        self.edges = edges.select(*(F.col(c).cast(t).alias(c) for c, t in casts.items()))
+        self._cached = []
         try:
-            n_rows, n_edges, id_bytes = _sizes(ids, edges)
-            if n_rows == 0:
+            # AQE off here and for every task: adaptive planning would split
+            # each query into one job per shuffle stage (and run a lazily
+            # checkpointed task's map stages at plan time)
+            with iterative_conf(self.spark):
+                # read by the sizing job and by the task
+                self._cached = [self.ids.persist(), self.edges.persist()]
+                self.n_rows, n_edges, id_bytes = _sizes(self.ids, self.edges)
+            if self.n_rows == 0:
                 raise ValueError("pagerank: empty vertex set (no entities derivable from input)")
-            need = layout_bytes(n_rows, n_edges, id_bytes)
+            need = layout_bytes(self.n_rows, n_edges, id_bytes)
             if need > LAYOUT_BYTES_LIMIT:
                 raise LayoutTooLarge(
-                    f"pagerank: the csr layout of {n_rows} vertices and {n_edges} edges "
+                    f"pagerank: the csr layout of {self.n_rows} vertices and {n_edges} edges "
                     f"needs ~{need / 2**30:.1f} GiB, more than one Spark row holds "
                     f'({LAYOUT_BYTES_LIMIT} bytes); use kernel="join-agg"'
                 )
-            self.layout = build_layout(edges, ids).persist()
-            self._cached = inputs + [self.layout]
-            # materialize the cached layout NOW: DISTRIBUTE_DATA belongs to
-            # setup, not to the first timed superstep (the reference's timer
-            # starts after distribution, timer_op.c)
-            self.n, self.nnz, self.n_dangling = self.layout.select(
-                F.size("ids"), "nnz", F.size("dangling")
-            ).collect()[0]
-            for df in inputs:  # the layout holds all the call reads of them
-                df.unpersist()
-            self._cached = [self.layout]
-            # id-map joins: broadcast only while the map verifiably fits;
-            # above the limit a shuffle join (AQE may still upgrade) — a
-            # forced broadcast of a 10^9-row map is an executor OOM
-            self._hint = F.broadcast if self.n <= BROADCAST_ROW_LIMIT else (lambda df: df)
-            self.ids = self.layout.select(F.posexplode("ids").alias("vid", "entity")).select(
-                F.col("vid").cast("long").alias("vid"), "entity"
-            )
-            self.vertices = self.spark.range(self.n).select(F.col("id").alias("vid"))
-            self.dangling = self.layout.select(F.explode("dangling").alias("vid"))
-            if reset is not None:
-                self.reset = _teleport(self, reset).persist()
-                self._cached.append(self.reset)
-                self.reset_arr = self.init(self.reset.withColumnRenamed("reset_w", "pr"))
         except BaseException:
             self.release()
             raise
 
-    def keyed(self, frame: DataFrame, col: str) -> DataFrame:
-        """Entity space → vid space; rows on unknown ids drop."""
-        return (
-            frame.select(F.col(self.id_col).alias("entity"), col)
-            .join(self._hint(self.ids), "entity")
-            .select("vid", col)
-        )
+    def _cogroup(self, x0: DataFrame | None, steps: int, tol, **emit) -> DataFrame:
+        """The cogrouped task: the edges and the side rows (the vertex ids,
+        tagged VERTEX; the reset and x0 weights, tagged RESET and X0) under
+        one constant key, so one group and one task."""
 
-    def result(self, state) -> DataFrame:
-        return (
-            self.to_frame(state)
-            .join(self.ids, "vid")
-            .select(F.col("entity").alias(self.id_col), "pr")
-            .localCheckpoint(eager=True)
-        )
-
-    def init(self, ranks: DataFrame | None) -> np.ndarray:
-        if ranks is None:
-            # uniform x0 built driver-side — zero Spark jobs
-            return np.full(self.n, 1.0 / self.n)
-        pdf = ranks.toPandas()
-        pr = np.zeros(int(self.n), dtype=np.float64)
-        pr[pdf["vid"].to_numpy(dtype=np.int64)] = pdf["pr"].to_numpy(dtype=np.float64)
-        return pr
-
-    def supersteps(self, pr: np.ndarray, dm: float, *, steps: int, tol, every_state: bool):
-        """The whole loop in ONE mapInArrow task (_make_arrow_loop_kernel);
-        when ``every_state`` (a checkpointer saves each state), one such
-        task per superstep. A job's driver wall time is split evenly over
-        its records, so Σ wall_ms is the loop's time either way."""
-        csr = self.layout.drop("ids")  # the loop reads no entity
-        done = 0
-        while done < steps:
-            t0 = time.monotonic()
-            self._bc = bc = self.spark.sparkContext.broadcast((pr, self.reset_arr))
-            loop_map = _make_arrow_loop_kernel(
-                int(self.n), self.damping, dm, bc, 1 if every_state else steps - done, tol
+        def tagged(frame: DataFrame, tag: int, w) -> DataFrame:
+            return frame.select(
+                F.col("entity").cast(self.id_type).alias("entity"),
+                F.lit(tag).alias("tag"),
+                w.cast("double").alias("w"),
             )
-            rows = csr.mapInArrow(loop_map, schema=LOOP_SCHEMA).collect()
-            bc.destroy()
-            self._bc = None
-            pr = np.frombuffer(rows[-1]["pr"], dtype=np.float64).copy()
-            wall_ms = (time.monotonic() - t0) * 1000.0 / len(rows)
-            for i, r in enumerate(rows, 1):
-                yield Superstep(pr if i == len(rows) else None, r["l1_delta"],
-                                r["dangling_mass_next"], wall_ms)
-            done += len(rows)
-            dm = rows[-1]["dangling_mass_next"]
-            if reached(rows[-1]["l1_delta"], tol):
+
+        side = tagged(self.ids, VERTEX, F.lit(None))
+        for frame, col, tag in ((self.reset, "weight", RESET), (x0, "pr", X0)):
+            if frame is not None:
+                side = side.unionByName(
+                    tagged(frame.withColumnRenamed(self.id_col, "entity"), tag, F.col(col))
+                )
+        arrow_schema, d_, has_x0, has_reset = (
+            self.arrow_schema, self.damping, x0 is not None, self.reset is not None
+        )
+
+        def task(etb, vtb):  # captures no DataFrame: it ships to the task
+            lay = compile_layout(etb, vtb, x0=has_x0, reset=has_reset)
+            return _emit(arrow_schema, lay, None, None, d_, steps, tol, **emit)
+
+        key = F.lit(0).alias("layout")  # aliased: a bare integer is a column ordinal
+        # the cogroup shuffles its one key into spark.sql.shuffle.partitions
+        # partitions, all but one empty; coalesce(1) reads them in one task
+        return (
+            self.edges.groupBy(key)
+            .cogroup(side.groupBy(key))
+            .applyInArrow(task, schema=self.schema)
+            .coalesce(1)
+        )
+
+    def _side(self, out: DataFrame):
+        """``out``'s side row, less the layout; collecting it materializes
+        ``out``. Raises on a start mass that is not positive."""
+        side = out.filter(F.col("side").isNotNull()).select("side.*").drop("layout").collect()[0]
+        if self.reset is not None:
+            _require_mass(side["reset_mass"], NO_RESET_MASS)
+        if side["x0_mass"] is not None:
+            _require_mass(side["x0_mass"], NO_X0_MASS)
+        self.n, self.nnz = side["n"], side["nnz"]
+        return side
+
+    def _over_layout(self, dm, steps: int, **emit):
+        """One task over the cached layout row from ``self.pr`` (None: the
+        layout's start vector) → (its lazily checkpointed output, its side
+        row)."""
+        self._bc = bc = self.spark.sparkContext.broadcast(self.pr)
+        arrow_schema, d_ = self.arrow_schema, self.damping
+
+        def task(batches):
+            import pyarrow as pa
+
+            lay = pickle.loads(pa.Table.from_batches(list(batches))["layout"][0].as_py())
+            yield from _emit(arrow_schema, lay, bc.value, dm, d_, steps, None, **emit).to_batches()
+
+        out = self.layout.select("side.layout").mapInArrow(task, schema=self.schema)
+        out = out.localCheckpoint(eager=False)
+        side = self._side(out)
+        bc.destroy()
+        self._bc = None
+        return out, side
+
+    def _ranks_of(self, out: DataFrame) -> DataFrame:
+        return out.filter(F.col("side").isNull()).select(F.col("entity").alias(self.id_col), "pr")
+
+    def supersteps(self, ranks, dm, *, x0, steps: int, tol, every_state: bool):
+        """The record iterator of operators.pagerank._drive, from the resumed
+        ``(vid, pr)`` frame ``ranks`` or a fresh start. The one task, or the
+        cached layout of the per-superstep form, runs here."""
+        x0 = x0 if ranks is None else None
+        with iterative_conf(self.spark):
+            if not every_state:
+                out = self._cogroup(x0, steps, tol, ranks=True).localCheckpoint(eager=False)
+                side = self._side(out)
+                self._ranks = self._ranks_of(out)
+                return (Superstep(None, *rec) for rec in zip(*(side[c] for c in STEP_FIELDS)))
+            self.layout = self._cogroup(x0, 0, None, layout=True).persist()
+            self._cached.append(self.layout)
+            self._side(self.layout)
+        if ranks is not None:
+            pdf = ranks.toPandas()
+            self.pr = np.zeros(int(self.n), dtype=np.float64)
+            self.pr[pdf["vid"].to_numpy(dtype=np.int64)] = pdf["pr"].to_numpy(dtype=np.float64)
+        return self._per_superstep(dm, steps, tol)
+
+    def _per_superstep(self, dm, steps: int, tol):
+        for _ in range(steps):
+            t0 = time.monotonic()
+            _, side = self._over_layout(dm, 1, state=True)
+            self.pr = np.frombuffer(side["pr"], dtype=np.float64)
+            delta, dm_in, dm = (side[c][0] for c in STEP_FIELDS[:3])
+            yield Superstep(self.pr, delta, dm_in, dm, (time.monotonic() - t0) * 1000.0)
+            if reached(delta, tol):
                 return
+
+    def result(self) -> DataFrame:
+        if self._ranks is None:  # checkpointed: one more task over the layout row
+            self._ranks = self._ranks_of(self._over_layout(None, 0, ranks=True)[0])
+        return self._ranks
 
     def to_frame(self, pr: np.ndarray) -> DataFrame:
         return self.spark.createDataFrame(

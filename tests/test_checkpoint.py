@@ -118,3 +118,52 @@ def test_lpa_kill_resume_exact(spark, graph, ckpt_root):
     assert cm2.last_complete_superstep() == 1
     got = _d(label_propagation(vertices, wedges, rounds=5, partitions=4, checkpointer=cm2))
     assert got == want
+
+
+def _converged_resume(spark, ckpt_root, run, op):
+    """Run ``op(checkpointer)`` to its fixpoint, then again on the same
+    root with a new manager → (labels of both, metrics rows before and
+    after the second call)."""
+    first = _d(op(CheckpointManager(spark, ckpt_root, run)))
+    cm = CheckpointManager(spark, ckpt_root, run)
+    rows = cm.metrics().count()
+    assert cm.last_metrics()["l1_delta"] == 0  # the first run converged
+    again = _d(op(cm))
+    return first, again, rows, cm.metrics().count()
+
+
+def test_cc_converged_resume_runs_no_round(spark, graph, ckpt_root):
+    """A converged CC run resumed on its own checkpoints (the process died
+    after the last save) runs no round: no metrics row is added and the
+    labels equal the finished run's."""
+    from pagerank_optimization_spark.operators.components import connected_components
+
+    vertices, wedges = graph
+    first, again, before, after = _converged_resume(
+        spark, ckpt_root, "cc-done",
+        lambda cm: connected_components(vertices, wedges, partitions=4, checkpointer=cm),
+    )
+    assert after == before
+    assert again == first
+
+
+def test_lpa_converged_resume_runs_no_round(spark, ckpt_root):
+    """The same for ``label_propagation(until_stable=True)``: its last saved
+    round changed no label, so a resume runs none."""
+    from pagerank_optimization_spark.operators.lpa import label_propagation
+
+    # two disjoint triangles: both collapse to their min label and freeze
+    # (synchronous LPA may oscillate on the transcript graph)
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("x", "y"), ("y", "z"), ("z", "x")],
+        "src string, dst string",
+    )
+    vertices = spark.createDataFrame([(v,) for v in "abcxyz"], "entity string")
+    first, again, before, after = _converged_resume(
+        spark, ckpt_root, "lpa-done",
+        lambda cm: label_propagation(
+            vertices, edges, rounds=10, until_stable=True, partitions=4, checkpointer=cm
+        ),
+    )
+    assert after == before
+    assert again == first

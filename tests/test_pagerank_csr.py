@@ -246,11 +246,45 @@ def test_auto_runs_join_agg_when_csr_layout_exceeds_row_limit(spark, graph, monk
 
 
 def test_csr_call_job_count(spark, graph):
-    """One whole uncheckpointed csr call — sizing, layout task, loop and
-    result — starts at most 14 Spark jobs on this fixture. The vid
-    assignment by range partitioning, the id-map joins, the vid-space edge
-    count and the dangling-flag joins it replaced took 21."""
+    """One whole uncheckpointed csr call is two Spark jobs on this fixture:
+    the sizing job, and the one Arrow task that builds the layout, runs
+    the loop and emits the ranks (its output materialized by the collect
+    of its side row). A separate layout task, its size collect and the
+    result map-back took 12."""
     vertices, wedges, _, _ = graph
     kw = {"fixed_iters": 5, "partitions": 8, "kernel": "csr-blocks"}
     pagerank(vertices, wedges, **kw)  # the session's first Arrow task starts the workers
-    assert _job_count(spark, "csr-call", lambda: pagerank(vertices, wedges, **kw)) <= 14
+    assert _job_count(spark, "csr-call", lambda: pagerank(vertices, wedges, **kw)) <= 2
+
+
+def test_auto_call_starts_no_more_jobs_than_csr_call(spark, graph):
+    """``kernel="auto"`` decides on the vertex rows of the csr sizing job,
+    so it starts no job of its own: no more jobs than ``kernel="csr-blocks"``
+    (a separate |V| probe made it 15 against 12)."""
+    vertices, wedges, _, _ = graph
+    kw = {"fixed_iters": 5, "partitions": 8}
+    pagerank(vertices, wedges, kernel="csr-blocks", **kw)  # workers started
+    csr, auto = (
+        _job_count(spark, f"{k}-call", lambda k=k: pagerank(vertices, wedges, kernel=k, **kw))
+        for k in ("csr-blocks", "auto")
+    )
+    assert auto <= csr
+
+
+def test_ranks_read_twice_rerun_no_task(spark, graph):
+    """The one task's output is materialized once: each read of
+    ``res.ranks`` is one single-stage job over the checkpointed rows (no
+    shuffle, so no cogroup and no loop task), and the call plus two reads
+    start at most four jobs."""
+    vertices, wedges, _, _ = graph
+    kw = {"tol": 1e-6, "partitions": 8, "kernel": "csr-blocks"}
+    pagerank(vertices, wedges, **kw)  # workers started
+    res = []
+    jobs = [_job_count(spark, "read-call", lambda: res.append(pagerank(vertices, wedges, **kw)))]
+    sc = spark.sparkContext
+    for i in (1, 2):
+        group = f"read-{i}"
+        jobs.append(_job_count(spark, group, lambda: res[0].ranks.collect()))
+        for job in sc.statusTracker().getJobIdsForGroup(group):
+            assert len(sc.statusTracker().getJobInfo(job).stageIds) == 1
+    assert sum(jobs) <= 4

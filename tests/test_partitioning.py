@@ -132,30 +132,34 @@ def test_degree_normalization_plan(spark, graph):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_vid_map_broadcast_gated_by_row_limit(spark, graph, monkeypatch):
-    """A csr call's entity→vid joins (``_Csr.keyed``) broadcast the id map
-    only while |V| ≤ BROADCAST_ROW_LIMIT; above it the join must not be
-    hint-forced."""
-    from pagerank_optimization_spark.operators import pagerank_csr as pcsr
+def test_csr_call_runs_no_entity_join_before_its_task(spark, graph):
+    """A personalized csr call with a warm start maps the reset and x0 rows
+    to vids inside its one Arrow task, as side rows tagged beside the
+    vertex ids: the one frame the call checkpoints is the cogrouped task,
+    and its plan has no join."""
+    from pagerank_optimization_spark.plans.partitioning import physical_plan
 
     # truncate lineage: the cached graph plans embed their own (legitimate)
     # degree broadcast join, which would false-positive the audit below
     vertices, wedges = (df.localCheckpoint(eager=True) for df in graph)
-    weights = vertices.withColumn("w", F.lit(1.0))
-    n = vertices.count()
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        for limit, check in [(n + 1, assert_broadcast_join), (0, assert_no_broadcast_join)]:
-            monkeypatch.setattr(pcsr, "BROADCAST_ROW_LIMIT", limit)
-            kern = pcsr._Csr(vertices, wedges, id_col="entity", damping=0.85, reset=None)
-            try:
-                assert kern.n == n
-                check(kern.keyed(weights, "w"))
-            finally:
-                kern.release()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    reset = vertices.filter(F.col("entity").startswith("agent:")).withColumn("weight", F.lit(1.0))
+    x0 = vertices.withColumn("pr", F.lit(1.0))
+    frame_cls = type(vertices)
+    checkpoint, plans = frame_cls.localCheckpoint, []
+
+    def spy(self, *args, **kwargs):
+        plans.append(physical_plan(self))
+        return checkpoint(self, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(frame_cls, "localCheckpoint", spy)
+        res = pagerank(
+            vertices, wedges, fixed_iters=3, partitions=4, kernel="csr-blocks", reset=reset, x0=x0
+        )
+    assert res.iterations == 3
+    assert len(plans) == 1
+    assert "FlatMapCoGroupsInArrow" in plans[0]
+    assert "Join" not in plans[0]
 
 
 def test_vertex_ids_plan_has_no_global_funnel(spark, graph):

@@ -1,8 +1,8 @@
 """Per-query micro-bench + plan capture for the optimization rounds.
 
 Runs a named subset of the bench.py queries with the same protocol
-(min-of-trials, cold CSR compile cache, counters dicts where bench passes
-them) so a single query can be iterated on without the full suite, and
+(min-of-trials, counters dicts where bench passes them; each csr call
+builds its own layout, so no cache carries between trials) so a single query can be iterated on without the full suite, and
 optionally captures ``.explain("formatted")`` output to a file.
 
 Usage:
